@@ -126,8 +126,9 @@ def pipeline_pass(spark, sf_dir: str, n_turns: int | None, out_dir: str,
 
     # key_stats + attribute_catalog fold from ONE grouping-sets
     # aggregation over the shared salted partials: one Expand, one shuffle
-    # for both grains; in this single action the subplan below the
-    # grouping-sets exchange is computed once (ReusedExchange)
+    # for both grains. The grouping-sets frame is materialized once
+    # (localCheckpoint), so both union branches read it and the attrs
+    # explode runs once per report
     ks_df, cat_df = agg.key_stats_and_catalog(mat)
     union = (
         tagged("key_stats", ks_df)

@@ -243,9 +243,11 @@ def attr_partials(routed: DataFrame, n_salt: int = 16) -> DataFrame:
     """Shared (sink, key, _salt) partial-aggregate frame.
 
     ONE exploded-attrs scan produces the partials BOTH :func:`key_stats`
-    (grain sink,key) and :func:`attribute_catalog` (grain key) fold from —
-    when both finals are built from the same returned DataFrame inside one
-    action, Catalyst's ReuseExchange computes the scan + salt shuffle once.
+    (grain sink,key) and :func:`attribute_catalog` (grain key) fold from.
+    Two finals built from the returned frame do NOT share it by
+    themselves: each branch prunes its own aggregate list, the plans
+    differ and ReuseExchange never fires, so a consumer that needs both
+    grains must materialize once (see :func:`key_stats_and_catalog`).
     """
     attrs = exploded_attrs(routed)
     marked = value_grain(attrs, ["sink", "key"], n_salt=n_salt)
@@ -271,9 +273,14 @@ def key_stats_and_catalog(
     :func:`attr_partials` frame is a single GROUPING SETS aggregation —
     one Expand, one shuffle carrying both grains — instead of two
     independent aggregations that would each rescan and reshuffle the
-    exploded attrs. The returned frames are filters over the same plan;
-    run in one action, everything below the grouping-sets exchange is
-    computed once (ReusedExchange).
+    exploded attrs. The grouping-sets frame is materialized once
+    (``localCheckpoint``) and both returned frames read that RDD: column
+    pruning would otherwise give the two branches of a report's union
+    different aggregate lists, so ReuseExchange never fires and the
+    explode, both shuffles and the value-rank window run twice. Under AQE
+    the checkpoint's shuffle stages run when this function builds the
+    frame, not at the caller's action; the final fold is tiny (one row
+    per (sink, key) and per key).
 
     HLL mode only: per-sink exact distinct counts cannot merge across
     sinks (shared values double-count) — sketches union exactly under any
@@ -291,7 +298,7 @@ def key_stats_and_catalog(
         F.date_format(F.min("_first"), "yyyy-MM-dd HH:mm:ss").alias("first_seen"),
         F.date_format(F.max("_last"), "yyyy-MM-dd HH:mm:ss").alias("last_seen"),
         F.max("_taint").alias("has_invalid_utf8"),
-    )
+    ).localCheckpoint(eager=False)
     totals = sink_totals(routed)
     key_stats_df = (
         gs.where(F.col("_gid") == 0)
@@ -464,11 +471,15 @@ def watched_values(
     key_filter = (
         F.col("key").isin(*watched_keys) if watched_keys else F.lit(False)
     )
+    # materialized once: `totals` needs no `count`, so pruning gives its
+    # branch a different aggregate than the top-k branch and the explode
+    # plus (key, value) shuffle would otherwise run twice (no reuse)
     freq = (
         exploded_attrs(routed)
         .where(key_filter)
         .groupBy("key", "value")
         .agg(F.count(F.lit(1)).alias("count"))
+        .localCheckpoint(eager=False)
     )
     # Two-stage top-k (salted_top_k): a single window over `key` would sort
     # EVERY distinct value of a watched key on one reducer (one hot
@@ -710,6 +721,9 @@ def key_skew(routed: DataFrame, n_salt: int = 16) -> DataFrame:
         F.col("value").alias("top_value"),
         F.col("vcount").alias("top_count"),
     )
+    # both consumers read `vcount`, so pruning leaves `freq` one plan and
+    # AQE reuses its explode + (key, value) shuffle; a consumer that drops
+    # `vcount` would split it (see watched_values)
     totals = freq.groupBy("key").agg(
         F.sum("vcount").alias("n_rows"),
         F.count(F.lit(1)).alias("n_values"),

@@ -33,11 +33,13 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # local-mode scan parallelism: the fixtures are small zstd files, so
-        # without these the whole regex parse lands on 1-2 tasks. On a real
-        # cluster (128MB-1GB files) submit with maxPartitionBytes=128m.
+        # local-mode scan parallelism: a 16m split cap lets a large input
+        # file split by row group, so the regex parse does not land on 1-2
+        # tasks. Small files keep the default open cost (4m) and are packed
+        # toward one split per core (total bytes / default parallelism), not
+        # one task per file. On a real cluster (128MB-1GB files) submit
+        # with maxPartitionBytes=128m.
         .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.files.openCostInBytes", "16m")
         # local mode: driver == executor; 32 concurrent tasks over millions
         # of parsed rows need real heap or GC/spill serializes the job
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))

@@ -242,10 +242,22 @@ def test_bounded_samples_equals_collect_set_path(tiny_routed):
     assert bounded == naive
 
 
+def _final_plan(df) -> str:
+    """Run ``df`` (AQE on) and return its final executed plan only, not the
+    initial plan AdaptiveSparkPlanExec also prints."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    assert plan.isFinalPlan()
+    return plan.executedPlan().toString()
+
+
 def test_grouping_sets_key_stats_and_catalog(tiny_routed):
     """The one-pass grouping-sets fold must equal the direct operators
-    (HLL mode), and its two outputs must share the plan below the
-    grouping-sets exchange (ReusedExchange) in a single action."""
+    (HLL mode), and in the production shape — a report's to_json union of
+    both frames in one action — the attrs explode must run once, inside
+    the materialized grouping-sets frame, not once per branch (pruning
+    gives the branches different aggregate lists, so ReuseExchange never
+    fires on the unmaterialized plan)."""
     from otlp_cardinality_checker_spark.operators.aggregate import (
         attribute_catalog,
         key_stats,
@@ -260,17 +272,38 @@ def test_grouping_sets_key_stats_and_catalog(tiny_routed):
     assert rows(ks_shared) == rows(key_stats(tiny_routed, exact=False))
     assert rows(cat_shared) == rows(attribute_catalog(tiny_routed, exact=False))
 
-    # AQE defers reuse to runtime (isFinalPlan=false in static explain),
-    # so assert ReusedExchange on the non-adaptive executed plan
-    spark = tiny_routed.sparkSession
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        both = ks_shared.select("key").unionByName(cat_shared.select("key"))
-        plan = both._jdf.queryExecution().executedPlan().toString()
-        assert "ReusedExchange" in plan
-        assert plan.count("Expand") >= 1  # grouping sets lowers to Expand
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    def tagged(name, df):
+        return df.select(
+            F.lit(name).alias("agg"),
+            F.to_json(F.struct(*df.columns)).alias("row"),
+        )
+
+    report = tagged("key_stats", ks_shared).unionByName(
+        tagged("attribute_catalog", cat_shared)
+    )
+    assert "Generate explode" not in _final_plan(report)
+
+
+def test_attr_frequencies_explode_once(tiny_routed, tmp_path):
+    """watched_values' top-k and per-key totals share ONE (key, value)
+    frequency frame: its explode and (key, value) shuffle must not run
+    once per consumer. key_skew keeps identical aggregate lists in both
+    consumers, so over a file-backed routed table AQE reuses the shuffle
+    (over a cached frame the two scans canonicalize differently and reuse
+    does not fire, hence the parquet copy)."""
+    from otlp_cardinality_checker_spark.operators.aggregate import (
+        key_skew,
+        watched_values,
+    )
+
+    assert "Generate explode" not in _final_plan(watched_values(tiny_routed))
+
+    path = str(tmp_path / "routed")
+    tiny_routed.write.parquet(path)
+    routed = tiny_routed.sparkSession.read.parquet(path)
+    plan = _final_plan(key_skew(routed))
+    assert plan.count("Generate explode") == 1
+    assert "ReusedExchange" in plan
 
 
 def test_salted_top_k_equals_global_window(spark):

@@ -126,10 +126,13 @@ def test_prefix_fingerprint_semantics(spark):
 
 
 def test_bloom_driver_budget(spark):
-    """r6 (VERDICT #6): a 4096-partition input must not collect 4096
-    bitmaps — the position frame coalesces so the driver transfer stays
-    under driver_budget_bytes, and the OR-reduced filter is bit-identical
-    under any partitioning."""
+    """r6 (VERDICT #6): a many-partition input must not collect one
+    bitmap per partition — the position frame coalesces so the driver
+    transfer stays under driver_budget_bytes, and the OR-reduced filter is
+    bit-identical under any partitioning. 64 partitions x 128B bitmaps
+    already exceed the 512-byte budget (cap 4), so the coalesce path runs
+    without scheduling thousands of tasks; the cap arithmetic asserts
+    cover the 4096-partition case."""
     import pandas as pd
 
     from otlp_cardinality_checker_spark.operators.bloom import (
@@ -145,7 +148,7 @@ def test_bloom_driver_budget(spark):
 
     vals = spark.createDataFrame(
         pd.DataFrame({"v": [f"val{i}" for i in range(500)]})
-    ).repartition(4096)
+    ).repartition(64)
     tight = build_bloom_bitmap(vals, "v", m, k, driver_budget_bytes=512)
     default = build_bloom_bitmap(vals, "v", m, k)
     assert tight == default

@@ -417,20 +417,25 @@ def test_char_entropy_projection_stack_compiles(spark):
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     plan = plan_of(char_entropy(docs))
-    # four Project nodes: lower, 26 counts, total, entropy
-    assert plan.count("Project") >= 4
+    # four Project nodes: lower, 26 counts, total, entropy. Count the
+    # "(n) Project" detail headers; the tree line and the header would
+    # otherwise count every node twice
+    assert plan.count(") Project") >= 4
     # the entropy projection consumes the total ATTRIBUTE, not an
     # inlined 26-term re-sum of length/replace expressions: log() and
-    # replace() must live in DIFFERENT Project detail sections
+    # replace() must live in DIFFERENT Project detail sections. The
+    # formatted plan renders one-argument log as ln(
     assert "_ce_total" in plan
     for section in plan.split("\n\n"):
-        assert not ("replace(" in section and " LOG(" in section.upper()), (
+        assert not ("replace(" in section and "ln(" in section), (
             "entropy projection re-inlined the replace-based counts"
         )
     # results identical to the Arrow twin (spot value check)
-    rows = {r["doc_id"]: r for r in char_entropy(docs).collect()}
+    sample = docs.orderBy("doc_id").limit(50)
+    rows = {r["doc_id"]: r for r in char_entropy(sample).collect()}
     twin = {
-        r["doc_id"]: r for r in char_entropy(docs, engine="pandas").collect()
+        r["doc_id"]: r
+        for r in char_entropy(sample, engine="pandas").collect()
     }
     assert rows.keys() == twin.keys()
     for k in rows:
