@@ -1048,47 +1048,6 @@ def q_conv_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(str(tmp / "out" / "sessions"))
 
 
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-shaped anchor: scan-heavy agg with full pushdown."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-shaped anchor: broadcast dim join + top-k."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.join(F.broadcast(orders), li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-        .select(
-            "l_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-            "revenue",
-        )
-    )
-
-
 # --- sketch/ANN ops: non-SQL-expressible, driver records rows-only checks ---
 
 
@@ -1249,111 +1208,6 @@ def q_key_stats_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from otlp_cardinality_checker_spark.operators.aggregate import key_stats
 
     return key_stats(_routed(spark, sf_dir), exact=False)
-
-
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        extract_features,
-        modality_stats,
-        synthetic_media,
-    )
-
-    return modality_stats(extract_features(synthetic_media(spark, 64)))
-
-
-def q_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG decode, oracle-checked: Spark decodes actual PNG bytes
-    (stdlib codec: zlib inflate + per-row unfilter) and aggregates exact
-    integer pixel stats; the DuckDB oracle recomputes every pixel from the
-    fixtures' closed-form gradient WITHOUT any decoder. Bit-exact match
-    proves the codec end-to-end. sf_dir unused (deterministic fixtures,
-    like media_features)."""
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        png_pixel_stats,
-        synthetic_png_media,
-    )
-
-    return png_pixel_stats(synthetic_png_media(spark, 48))
-
-
-def q_png_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full codec ROUNDTRIP, oracle-checked: decode real PNG bytes →
-    nearest-neighbor resize to 16x12 → re-encode PNG → decode again →
-    exact integer pixel stats. The DuckDB oracle recomputes the resized
-    pixels from the closed-form gradient + the nearest-neighbor index map
-    (src_y = (Y*h)//12, src_x = (X*w)//16) with no codec at all — a
-    bit-exact match proves decode, resample, AND re-encode together."""
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        png_pixel_stats,
-        resize_images,
-        synthetic_png_media,
-    )
-
-    return png_pixel_stats(
-        resize_images(
-            synthetic_png_media(spark, 48), width=16, height=12,
-            decode_stub=False,
-        )
-    )
-
-
-
-def q_wav_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL WAV decode, oracle-checked (the PNG pattern, second modality):
-    Spark parses actual RIFF/PCM bytes (stdlib struct codec) and
-    aggregates exact integer sample stats; the DuckDB oracle recomputes
-    every sample from the fixtures' closed-form waveform with no decoder.
-    sf_dir unused (deterministic fixtures)."""
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        synthetic_wav_media,
-        wav_sample_stats,
-    )
-
-    return wav_sample_stats(synthetic_wav_media(spark, 40))
-
-
-def q_avi_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video decode, oracle-checked (third modality): Spark walks an
-    actual RIFF/AVI container (stdlib struct codec, bottom-up BGR24 DIB
-    frames with stride padding) and aggregates exact integer pixel stats;
-    the DuckDB oracle recomputes every byte from the fixtures' closed-form
-    gradient with no parser.  sf_dir unused (deterministic fixtures)."""
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        avi_frame_stats,
-        synthetic_avi_media,
-    )
-
-    return avi_frame_stats(synthetic_avi_media(spark, 24))
-
-
-def q_avi_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL frame sampling, oracle-checked: Spark decodes the AVI
-    container and keeps every 2nd frame (row-multiplying mapInPandas, the
-    `sample_frames` contract over actually-decoded video); the DuckDB
-    oracle recomputes each sampled frame's exact pixel stats from the
-    closed-form gradient.  sf_dir unused (deterministic fixtures)."""
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        avi_sampled_frame_stats,
-        synthetic_avi_media,
-    )
-
-    return avi_sampled_frame_stats(synthetic_avi_media(spark, 24), every_n=2)
-
-
-def q_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed decode, oracle-checked: Spark inflates actual GIF
-    LZW bitstreams (variable-width codes, dictionary resets — stdlib
-    codec, functions/gif.py) and maps frames through the palette; the
-    DuckDB oracle recomputes every RGB byte from the fixtures'
-    closed-form composition of index and palette formulas with no
-    decoder.  First genuinely *compressed* format decoded for real.
-    sf_dir unused (deterministic fixtures)."""
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        gif_frame_stats,
-        synthetic_gif_media,
-    )
-
-    return gif_frame_stats(synthetic_gif_media(spark, 24))
 
 
 def q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1787,23 +1641,6 @@ def q_routed_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def q_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling plumbing (rows-only: synthetic media, stub
-    decode; the row-multiplying mapInPandas contract is the tested part).
-    Aggregated per media so the output is compact and deterministic."""
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        sample_frames,
-        synthetic_media,
-    )
-
-    frames = sample_frames(synthetic_media(spark, 64), every_ms=500)
-    return frames.groupBy("media_id").agg(
-        F.count(F.lit(1)).alias("n_frames"),
-        F.sum(F.length("frame_payload")).alias("total_frame_bytes"),
-    )
-
-
-
 def q_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch point estimates vs exact counts for every user_id
     value — a fully hash-checkable SKETCH: the md5-based hash family is
@@ -1953,18 +1790,6 @@ def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_transcripts(spark, sf_dir)
 
 
-def q_jpeg420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4:2:0 subsampled JPEG decode (2x2-luma MCUs, chroma box downsample
-    + replicate upsample, MCU-level restart markers), oracle-checked via
-    the same per-channel closed form on 16x16 solid tiles."""
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        jpeg_color_tile_stats,
-        synthetic_jpeg420_media,
-    )
-
-    return jpeg_color_tile_stats(synthetic_jpeg420_media(spark, 24))
-
-
 def q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer trained on the corpus (40 merges learned from the
     distributed word histogram), then applied distributed: per-doc token
@@ -2049,20 +1874,6 @@ def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantile_sketch(docs, "n_chars", (0.5, 0.9, 0.99), "lang")
 
 
-def q_jpeg_prog_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Progressive (SOF2) JPEG decode — multi-scan parse, spectral
-    selection, successive approximation on DC and AC, EOB runs,
-    correction bits, restart markers — oracle-checked by the 4:4:4
-    closed form (progressive re-orders the same quantized
-    coefficients, so the baseline oracle applies verbatim)."""
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        jpeg_color_tile_stats,
-        synthetic_jpeg_progressive_media,
-    )
-
-    return jpeg_color_tile_stats(synthetic_jpeg_progressive_media(spark, 24))
-
-
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style intra-document repetition signals (top-bigram char
     mass, duplicated-bigram char mass, distinct-word ratio) — zero-shuffle
@@ -2100,33 +1911,6 @@ def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "duration_s",
     )
-
-
-def q_jpeg_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline-JPEG decode (Huffman + dequant + IDCT), oracle-checked:
-    solid-tile fixtures survive the lossy pipeline as a closed form the
-    DuckDB oracle evaluates with no codec (functions/jpeg.py docstring).
-    Quality 50 rows put every odd (v-128) exactly on a quantizer tie and
-    every third image uses restart markers — both oracle-covered.
-    sf_dir unused (deterministic fixtures, like the other media queries)."""
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        jpeg_tile_stats,
-        synthetic_jpeg_media,
-    )
-
-    return jpeg_tile_stats(synthetic_jpeg_media(spark, 40))
-
-
-def q_jpeg_color_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Color JPEG decode (RGB 4:4:4 -> YCbCr -> per-channel DC pipeline ->
-    RGB), oracle-checked bit-for-bit: the DuckDB oracle repeats the color
-    transform + quant roundtrip in exact SQL arithmetic, no codec."""
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        jpeg_color_tile_stats,
-        synthetic_jpeg_color_media,
-    )
-
-    return jpeg_color_tile_stats(synthetic_jpeg_color_media(spark, 24))
 
 
 def q_volume_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2331,34 +2115,6 @@ def q_fd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return fd_audit(ev, ["user_id"], "event_type")
-
-
-def q_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit perceptual average-hash from a REAL PNG decode, packed as
-    two 32-bit halves — oracle-checked bit-for-bit: the nearest-neighbor
-    8x8 sample grid and the integer mean comparison are recomputed by
-    the decoder-less DuckDB oracle from the gradient closed form.
-    sf_dir unused (deterministic fixtures, like the other media queries)."""
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        image_ahash,
-        synthetic_png_ahash_media,
-    )
-
-    return image_ahash(synthetic_png_ahash_media(spark, 48))
-
-
-def q_image_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image near-duplicates (aHash Hamming <= 3) via the
-    complete-by-pigeonhole 4x16-bit block join; the oracle recomputes
-    both signatures closed-form and verifies every pair O(n^2) — the
-    scalable block join must find EXACTLY the brute-force pair set."""
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        image_near_dups,
-        synthetic_png_ahash_media,
-    )
-
-    return image_near_dups(synthetic_png_ahash_media(spark, 48), 3)
-
 
 
 def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2602,44 +2358,6 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape over the fixture tables: revenue from LOCAL
-    supply chains (customer and supplier in the same nation) per nation
-    of one region and one order-date year. Catalyst plans the 6-table
-    join with the four dims broadcast and lineitem<->orders as the only
-    shuffle pair — the classic join-ordering showcase (Q1/Q3 siblings:
-    pricing_summary / top_orders)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    su = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            F.broadcast(su),
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .where(
-            (F.col("r_name") == "ASIA")
-            & (F.col("o_orderdate") >= F.lit("1996-01-01"))
-            & (F.col("o_orderdate") < F.lit("1997-01-01"))
-        )
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.round(F.sum(rev), 4).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lineitems"),
-        )
-    )
-
-
-
 def q_numeric_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass numeric column profile of lineitem (nulls, exact
     distincts, range, mean per column — the pre-join table health scan)."""
@@ -2651,57 +2369,6 @@ def q_numeric_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax",
             "l_partkey", "l_suppkey"]
     return numeric_profile(li, cols)
-
-
-
-def q_late_shipment_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: per order-priority count of orders with at least
-    one line item shipped after the order date + 60 days — the EXISTS
-    semi-join pattern (left_semi: orders never duplicate per matching
-    line item)."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    late = (
-        li.join(
-            o.select("o_orderkey", "o_orderdate"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .where(
-            F.col("l_shipdate")
-            > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-        )
-        .select(F.col("l_orderkey").alias("k"))
-    )
-    return (
-        o.join(late, F.col("o_orderkey") == F.col("k"), "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_late_orders"))
-    )
-
-
-def q_big_basket_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: customers whose single orders exceed a total
-    quantity threshold — aggregate-then-filter-then-join (the HAVING
-    pushup pattern: the heavy groupBy runs BEFORE any join, so only
-    qualifying order keys reach the join)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("total_qty"))
-        .where(F.col("total_qty") >= 150)
-    )
-    return (
-        big.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .select(
-            F.col("c_name").alias("customer"),
-            F.col("o_orderkey").alias("orderkey"),
-            F.col("o_totalprice").alias("totalprice"),
-            F.col("total_qty").cast("long").alias("total_qty"),
-        )
-    )
 
 
 
@@ -2733,69 +2400,6 @@ def q_cost_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return cost_report(_transcripts(spark, sf_dir), by="role")
-
-
-def q_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: bilateral supplier->customer nation revenue for
-    one ordered nation pair, by order year — the multi-condition
-    dim-pair join (both nation dims broadcast)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    su = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    n1 = n.select(
-        F.col("n_nationkey").alias("sk"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = n.select(
-        F.col("n_nationkey").alias("ck"), F.col("n_name").alias("cust_nation")
-    )
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    # the fixture's nations are synthetic NATION_N names; 9<->10 is a
-    # high-volume bilateral pair at every sf
-    pair = (
-        (F.col("supp_nation") == "NATION_9")
-        & (F.col("cust_nation") == "NATION_10")
-    ) | (
-        (F.col("supp_nation") == "NATION_10")
-        & (F.col("cust_nation") == "NATION_9")
-    )
-    return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(su), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .where(pair)
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("o_orderdate").alias("order_year"),
-        )
-        .agg(
-            F.round(F.sum(rev), 4).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lineitems"),
-        )
-    )
-
-
-
-def q_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape over the fixture association (lineitem links
-    parts to suppliers): distinct supplier count per (brand, type,
-    size), EXCLUDING one brand via an anti-join on the part dim — the
-    NOT-IN + multi-key count-distinct pattern."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
-    keep = p.where(F.col("p_brand") != "Brand#1").select(
-        "p_partkey", "p_brand", "p_type", "p_size"
-    )
-    return (
-        li.select("l_partkey", "l_suppkey")
-        .join(F.broadcast(keep), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
 
 
 def q_type_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3021,31 +2625,6 @@ def q_decayed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: revenue locked in small orders — lineitems whose
-    quantity is under 20% of their part's average quantity (the
-    correlated-scalar-subquery pattern as an agg+join)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
-    avg_q = li.groupBy("l_partkey").agg(
-        F.avg("l_quantity").alias("avg_qty")
-    )
-    return (
-        li.join(F.broadcast(avg_q), "l_partkey")
-        .join(F.broadcast(p.select("p_partkey", "p_brand")),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .where(F.col("l_quantity") < F.lit(0.2) * F.col("avg_qty"))
-        .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).alias("n_small_lines"),
-            F.round(F.sum("l_extendedprice") / F.lit(7.0), 4).alias(
-                "avg_yearly"
-            ),
-        )
-    )
-
-
-
 def q_trending_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming trending terms: two ts-range micro-batches write
     (bucket, token) count partials; sums merge + the batch rank tail —
@@ -3247,47 +2826,6 @@ def q_tool_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-
-def q_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: top-20 customers by revenue lost to returned
-    items (returnflag R), with nation enrichment — the
-    agg-then-rank-then-enrich reporting pattern (rank BEFORE the dim
-    joins so only 20 rows reach them)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    per_cust = (
-        li.where(F.col("l_returnflag") == "R")
-        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_custkey")
-        .agg(F.sum(rev).alias("rev_raw"),
-             F.count(F.lit(1)).alias("n_returned_lines"))
-    )
-    from otlp_cardinality_checker_spark.operators.aggregate import (
-        global_top_k,
-    )
-
-    # two-stage global top-20 (customer grain grows with the corpus):
-    # salted local rank prunes to <= 16*20 survivors before the final
-    # rank; identical rows/ranks — (rev_raw, o_custkey) is a total order
-    top = global_top_k(
-        per_cust, (F.col("rev_raw").desc(), F.col("o_custkey").asc()),
-        k=20, salt_col="o_custkey",
-    )
-    return (
-        top.join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select(
-            F.col("c_name").alias("customer"),
-            F.col("n_name").alias("nation"),
-            F.round(F.col("rev_raw"), 4).alias("returned_revenue"),
-            "n_returned_lines",
-            "rank",
-        )
-    )
 
 
 def q_label_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3660,20 +3198,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering note: the driver's correctness gate records the FIRST 50
-    # entries only; each round rotates never-yet-recorded entries to the
-    # front (r1-r3: pipeline/session/endpoint; r4: dedup/ANN/text/PII/
-    # streaming; r5: the r4+r5 waves; r6: the 70 entries added after the
-    # r5 window was fixed - 50 now, 20 staged for r7).
+    # Entry order carries no meaning: every entry is run and checked.
     return {
-        # --- Round-6 rotation (VERDICT r5 #1): positions 1-50 are the
-        # 50 oldest never-driver-graded entries (sft_pairs .. ks_drift
-        # + the oldest of the TPC-H/profiling wave), so the driver's
-        # 50-entry CORRECTNESS_r06 window finally records them.  The
-        # 20 remaining never-graded entries sit at positions 51-70,
-        # staged FIRST for the r7 window.  Registry growth is frozen
-        # this round.  Every entry stays runnable via
-        # scripts/check_oracle.py (r6 ran full sweeps at both scales).
         "sft_pairs": q_sft_pairs,
         "loss_spans": q_loss_spans,
         "curriculum_stages": q_curriculum_stages,
@@ -3691,8 +3217,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chi2_drift": q_chi2_drift,
         "epoch_plan": q_epoch_plan,
         "fd_audit": q_fd_audit,
-        "image_ahash": q_image_ahash,
-        "image_near_dups": q_image_near_dups,
         "zipf_fit": q_zipf_fit,
         "code_detect": q_code_detect,
         "shard_plan": q_shard_plan,
@@ -3712,19 +3236,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "trending_terms": q_trending_terms,
         "ks_drift": q_ks_drift,
         "tokenizer_fertility": q_tokenizer_fertility,
-        "local_supplier_volume": q_local_supplier_volume,
         "numeric_profile": q_numeric_profile,
-        "late_shipment_orders": q_late_shipment_orders,
-        "big_basket_customers": q_big_basket_customers,
         "spike_attribution": q_spike_attribution,
         "tool_latency": q_tool_latency,
         "cost_report": q_cost_report,
-        "nation_trade_volume": q_nation_trade_volume,
-        "supplier_diversity": q_supplier_diversity,
         "type_correlation": q_type_correlation,
         "seasonality_profile": q_seasonality_profile,
         "neyman_allocation": q_neyman_allocation,
-        # --- positions 51-70: staged first for the r7 window ------------
         "purge_audit": q_purge_audit,
         "class_separability": q_class_separability,
         "hopping_distinct_users": q_hopping_distinct_users,
@@ -3733,7 +3251,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "winnow_fingerprints": q_winnow_fingerprints,
         "lang_confusion": q_lang_confusion,
         "decayed_counts": q_decayed_counts,
-        "small_quantity_revenue": q_small_quantity_revenue,
         "trending_stream": q_trending_stream,
         "burstiness": q_burstiness,
         "ri_scorecard": q_ri_scorecard,
@@ -3741,11 +3258,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_savings": q_dedup_savings,
         "verbosity_drift": q_verbosity_drift,
         "tool_lift": q_tool_lift,
-        "returned_revenue": q_returned_revenue,
         "label_balance": q_label_balance,
         "corpus_gini": q_corpus_gini,
         "daily_value_percentiles": q_daily_value_percentiles,
-        # --- previously driver-graded entries (rounds 1-5) --------------
         "constraint_audit": q_constraint_audit,
         "heavy_hitters": q_heavy_hitters,
         "tool_bigrams": q_tool_bigrams,
@@ -3754,12 +3269,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "turn_gaps": q_turn_gaps,
         "bloom_contamination": q_bloom_contamination,
         "volume_spikes": q_volume_spikes,
-        "jpeg_tile_stats": q_jpeg_tile_stats,
-        "jpeg_color_stats": q_jpeg_color_stats,
-        "jpeg420_stats": q_jpeg420_stats,
         "user_sessions": q_user_sessions,
         "repetition_stats": q_repetition_stats,
-        "jpeg_prog_stats": q_jpeg_prog_stats,
         "quantile_sketch": q_quantile_sketch,
         "attribution_join_stream": q_attribution_join_stream,
         "bpe_tokens": q_bpe_tokens,
@@ -3834,8 +3345,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_stream": q_dedup_stream,
         "conv_sessions": q_conv_sessions,
         "events_json_props": q_events_json_props,
-        "pricing_summary": q_pricing_summary,
-        "top_orders": q_top_orders,
         "language_id": q_language_id,
         "ngram_jaccard": q_ngram_jaccard,
         "ngram_jaccard_capped": q_ngram_jaccard_capped,
@@ -3854,14 +3363,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "label_outliers": q_label_outliers,
         "embedding_clusters": q_embedding_clusters,
         "key_stats_hll": q_key_stats_hll,
-        "media_features": q_media_features,
-        "frame_samples": q_frame_samples,
-        "png_pixel_stats": q_png_pixel_stats,
-        "png_resize_stats": q_png_resize_stats,
-        "wav_sample_stats": q_wav_sample_stats,
-        "avi_frame_stats": q_avi_frame_stats,
-        "avi_frame_samples": q_avi_frame_samples,
-        "gif_frame_stats": q_gif_frame_stats,
         "pii_stats": q_pii_stats,
         "stratified_sample": q_stratified_sample,
         "tfidf_terms": q_tfidf_terms,
@@ -4349,172 +3850,6 @@ SELECT sink, count(*) AS n_rows, bit_xor(v) AS xor_digest,
        CAST(sum(CAST(v AS HUGEINT)) AS VARCHAR) AS sum_digest
 FROM canon GROUP BY sink
 """,
-        # real-PNG-decode parity: Spark decodes the bytes, the oracle
-        # recomputes every pixel from the fixtures' closed-form gradient
-        # (synthetic_png_media: lum(y,x) = (a*x + b*y + c) % 256) with no
-        # decoder — exact-integer agreement proves the codec
-        "png_pixel_stats": """
-WITH imgs AS (
-  SELECT i,
-         printf('png_%05d', i) AS media_id,
-         8 + (i*3)%17 AS width,
-         6 + (i*5)%13 AS height,
-         1 + i%7 AS a,
-         2 + i%5 AS b,
-         (i*11)%256 AS c
-  FROM range(48) t(i)
-), px AS (
-  SELECT media_id, width, height,
-         CAST(y AS BIGINT) AS y, CAST(x AS BIGINT) AS x,
-         (a*x + b*y + c) % 256 AS lum
-  FROM imgs, unnest(range(height)) AS ty(y), unnest(range(width)) AS tx(x)
-)
-SELECT media_id, CAST(width AS INT) AS width, CAST(height AS INT) AS height,
-       CAST(count(*) AS BIGINT) AS n_px,
-       CAST(sum(lum) AS BIGINT) AS sum_lum,
-       CAST(min(lum) AS INT) AS min_lum,
-       CAST(max(lum) AS INT) AS max_lum,
-       CAST(sum(lum * (y*width + x)) % 1000000007 AS BIGINT) AS pos_checksum
-FROM px GROUP BY media_id, width, height
-""",
-        # codec ROUNDTRIP parity (decode -> nearest-neighbor resize ->
-        # re-encode -> decode): the oracle composes the closed-form
-        # gradient with the nearest-neighbor index map, no codec involved
-        "png_resize_stats": """
-WITH imgs AS (
-  SELECT i,
-         printf('png_%05d', i) AS media_id,
-         8 + (i*3)%17 AS w,
-         6 + (i*5)%13 AS h,
-         1 + i%7 AS a,
-         2 + i%5 AS b,
-         (i*11)%256 AS c
-  FROM range(48) t(i)
-), px AS (
-  SELECT media_id,
-         CAST(y AS BIGINT) AS y, CAST(x AS BIGINT) AS x,
-         (a*((x*w)//16) + b*((y*h)//12) + c) % 256 AS lum
-  FROM imgs, unnest(range(12)) AS ty(y), unnest(range(16)) AS tx(x)
-)
-SELECT media_id, CAST(16 AS INT) AS width, CAST(12 AS INT) AS height,
-       CAST(count(*) AS BIGINT) AS n_px,
-       CAST(sum(lum) AS BIGINT) AS sum_lum,
-       CAST(min(lum) AS INT) AS min_lum,
-       CAST(max(lum) AS INT) AS max_lum,
-       CAST(sum(lum * (y*16 + x)) % 1000000007 AS BIGINT) AS pos_checksum
-FROM px GROUP BY media_id
-""",
-        # real-WAV-decode parity: Spark parses the RIFF/PCM bytes, the
-        # oracle recomputes every sample from the closed-form waveform
-        # (synthetic_wav_media: s(t) = (a*t + b) % 65536 - 32768)
-        "wav_sample_stats": """
-WITH clips AS (
-  SELECT i, printf('wav_%05d', i) AS media_id,
-         256 + (i*37)%512 AS n_samples,
-         3 + i%11 AS a,
-         (i*97)%65536 AS b,
-         8000 + 1000*(i%5) AS rate
-  FROM range(40) t(i)
-), smp AS (
-  SELECT media_id, rate, CAST(t AS BIGINT) AS t,
-         (a*t + b) % 65536 - 32768 AS s,
-         CASE WHEN t >= 1 THEN (a*(t-1) + b) % 65536 - 32768 END AS s_prev
-  FROM clips, unnest(range(n_samples)) AS tt(t)
-)
-SELECT media_id, CAST(rate AS INT) AS sample_rate,
-       CAST(count(*) AS BIGINT) AS n_samples,
-       CAST(sum(s) AS BIGINT) AS sum_s,
-       CAST(min(s) AS INT) AS min_s,
-       CAST(max(s) AS INT) AS max_s,
-       CAST(coalesce(sum(CASE WHEN s_prev*s < 0 THEN 1 END), 0) AS BIGINT)
-         AS zero_crossings,
-       CAST(sum((s + 32768)*(t + 1)) AS BIGINT) AS pos_checksum
-FROM smp GROUP BY media_id, rate
-""",
-        # real-AVI-decode parity: Spark walks the RIFF container and
-        # reassembles bottom-up stride-padded DIB frames; the oracle
-        # recomputes every channel byte from the closed-form gradient
-        # (synthetic_avi_media: v = (a*x + b*y + 7*f + 11*c + d) % 256)
-        "avi_frame_stats": """
-WITH vids AS (
-  SELECT i, printf('avi_%05d', i) AS media_id,
-         8 + (i%3)*3 AS w, 6 + (i%4)*2 AS h, 3 + i%4 AS nf,
-         1 + i%5 AS a, 2 + i%3 AS b, (i*13)%256 AS d,
-         33333 + i*100 AS us
-  FROM range(24) t(i)
-), px AS (
-  SELECT media_id, nf, w, h, us,
-         (a*x + b*y + 7*f + 11*c + d) % 256 AS v,
-         ((CAST(f AS BIGINT)*h + y)*w + x)*3 + c AS pos
-  FROM vids,
-       unnest(range(nf)) tf(f),
-       unnest(range(h)) ty(y),
-       unnest(range(w)) tx(x),
-       unnest(range(3)) tc(c)
-)
-SELECT media_id, CAST(nf AS INT) AS n_frames, CAST(w AS INT) AS width,
-       CAST(h AS INT) AS height, CAST(us AS INT) AS us_per_frame,
-       CAST(sum(v) AS BIGINT) AS sum_v,
-       CAST(min(v) AS INT) AS min_v, CAST(max(v) AS INT) AS max_v,
-       CAST(sum(v * (pos + 1)) AS BIGINT) AS pos_checksum
-FROM px GROUP BY media_id, nf, w, h, us
-""",
-        # real frame-sampling parity: every 2nd decoded frame's exact
-        # stats; within-frame pos = (y*w + x)*3 + c
-        "avi_frame_samples": """
-WITH vids AS (
-  SELECT i, printf('avi_%05d', i) AS media_id,
-         8 + (i%3)*3 AS w, 6 + (i%4)*2 AS h, 3 + i%4 AS nf,
-         1 + i%5 AS a, 2 + i%3 AS b, (i*13)%256 AS d,
-         33333 + i*100 AS us
-  FROM range(24) t(i)
-), px AS (
-  SELECT media_id, CAST(f AS INT) AS frame_idx,
-         CAST(f * us // 1000 AS INT) AS ts_ms,
-         (a*x + b*y + 7*f + 11*c + d) % 256 AS v,
-         (CAST(y AS BIGINT)*w + x)*3 + c AS pos
-  FROM vids,
-       unnest(range(nf)) tf(f),
-       unnest(range(h)) ty(y),
-       unnest(range(w)) tx(x),
-       unnest(range(3)) tc(c)
-  WHERE f % 2 = 0
-)
-SELECT media_id, frame_idx, ts_ms,
-       CAST(sum(v) AS BIGINT) AS sum_v,
-       CAST(min(v) AS INT) AS min_v, CAST(max(v) AS INT) AS max_v,
-       CAST(sum(v * (pos + 1)) AS BIGINT) AS pos_checksum
-FROM px GROUP BY media_id, frame_idx, ts_ms
-""",
-        # real-GIF-decode parity: Spark inflates the LZW bitstream and
-        # maps indices through the palette; the oracle composes the two
-        # closed forms (synthetic_gif_media: index = (a*x+b*y+5*f+d)%256,
-        # palette[j][c] = (p*j+11*c+r)%256, so v = (p*(a*x+b*y+5*f+d)
-        # + 11*c + r) % 256)
-        "gif_frame_stats": """
-WITH gifs AS (
-  SELECT i, printf('gif_%05d', i) AS media_id,
-         10 + (i%3)*5 AS w, 8 + (i%4)*3 AS h, 2 + i%3 AS nf,
-         1 + i%5 AS a, 2 + i%3 AS b, (i*19)%256 AS d,
-         3 + i%4 AS p, (i*17)%256 AS r, 4 + i%6 AS delay_cs
-  FROM range(24) t(i)
-), px AS (
-  SELECT media_id, nf, w, h, delay_cs,
-         (p*(a*x + b*y + 5*f + d) + 11*c + r) % 256 AS v,
-         ((CAST(f AS BIGINT)*h + y)*w + x)*3 + c AS pos
-  FROM gifs,
-       unnest(range(nf)) tf(f),
-       unnest(range(h)) ty(y),
-       unnest(range(w)) tx(x),
-       unnest(range(3)) tc(c)
-)
-SELECT media_id, CAST(nf AS INT) AS n_frames, CAST(w AS INT) AS width,
-       CAST(h AS INT) AS height, CAST(delay_cs AS INT) AS delay_cs,
-       CAST(sum(v) AS BIGINT) AS sum_v,
-       CAST(min(v) AS INT) AS min_v, CAST(max(v) AS INT) AS max_v,
-       CAST(sum(v * (pos + 1)) AS BIGINT) AS pos_checksum
-FROM px GROUP BY media_id, nf, w, h, delay_cs
-""",
         "cms_user_counts": pre
         + """
 , vals AS (
@@ -4918,24 +4253,6 @@ SELECT event_type, count(*) AS n_events,
          AS sum_k,
        count(DISTINCT CAST(json_extract_string(props, '$.k') AS BIGINT)) AS n_distinct_k
 FROM events GROUP BY event_type
-""",
-        "pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       count(*) AS count_order
-FROM lineitem WHERE l_shipdate <= '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-""",
-        "top_orders": """
-SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-GROUP BY l_orderkey, o_orderdate
-ORDER BY revenue DESC, l_orderkey ASC LIMIT 10
 """,
         "language_id": _language_id_sql(),
         "ngram_jaccard": """
@@ -5789,81 +5106,6 @@ SELECT CAST(k AS BIGINT) AS k, CAST(n_classes AS BIGINT) AS n_classes,
        round(k * n_classes * 1.0 / n_total, 6) AS row_share
 FROM hist CROSS JOIN tot
 """,
-        "image_ahash": """
-WITH imgs AS (
-  SELECT i,
-         printf('pah_%05d', i) AS media_id,
-         CASE WHEN i % 4 = 3 THEN i - 1 ELSE i END AS bi,
-         CASE WHEN i % 4 = 3 THEN 1 ELSE 0 END AS bump
-  FROM range(48) t(i)
-), par AS (
-  SELECT media_id,
-         8 + (bi*3)%17 AS w,
-         6 + (bi*5)%13 AS h,
-         1 + bi%7 AS a,
-         2 + bi%5 AS b,
-         ((bi*29)%256 + bump) % 256 AS c
-  FROM imgs
-), grid AS (
-  SELECT media_id, w, h,
-         CAST(gy*8 + gx AS BIGINT) AS bit,
-         (a * ((gx*w)//8) + b * ((gy*h)//8) + c) % 256 AS s
-  FROM par, unnest(range(8)) tg(gy), unnest(range(8)) tx(gx)
-), tot AS (
-  SELECT media_id, sum(s) AS total FROM grid GROUP BY 1
-), bits AS (
-  SELECT g.media_id, g.w, g.h, g.bit,
-         CASE WHEN 64*g.s > t.total THEN 1 ELSE 0 END AS br
-  FROM grid g JOIN tot t USING (media_id)
-)
-SELECT media_id, CAST(max(w) AS INT) AS width, CAST(max(h) AS INT) AS height,
-       CAST(sum(CASE WHEN bit >= 32
-                     THEN br * (1::BIGINT << greatest(bit - 32, 0))
-                     ELSE 0 END) AS BIGINT) AS ahash_hi,
-       CAST(sum(CASE WHEN bit < 32
-                     THEN br * (1::BIGINT << least(bit, 31))
-                     ELSE 0 END) AS BIGINT) AS ahash_lo,
-       CAST(sum(br) AS INT) AS n_bright
-FROM bits GROUP BY media_id
-""",
-        "image_near_dups": """
-WITH imgs AS (
-  SELECT i,
-         printf('pah_%05d', i) AS media_id,
-         CASE WHEN i % 4 = 3 THEN i - 1 ELSE i END AS bi,
-         CASE WHEN i % 4 = 3 THEN 1 ELSE 0 END AS bump
-  FROM range(48) t(i)
-), par AS (
-  SELECT media_id,
-         8 + (bi*3)%17 AS w,
-         6 + (bi*5)%13 AS h,
-         1 + bi%7 AS a,
-         2 + bi%5 AS b,
-         ((bi*29)%256 + bump) % 256 AS c
-  FROM imgs
-), grid AS (
-  SELECT media_id,
-         CAST(gy*8 + gx AS BIGINT) AS bit,
-         (a * ((gx*w)//8) + b * ((gy*h)//8) + c) % 256 AS s
-  FROM par, unnest(range(8)) tg(gy), unnest(range(8)) tx(gx)
-), tot AS (
-  SELECT media_id, sum(s) AS total FROM grid GROUP BY 1
-), sig AS (
-  SELECT g.media_id,
-         CAST(sum(CASE WHEN g.bit >= 32 AND 64*g.s > t.total
-                       THEN 1::BIGINT << greatest(g.bit - 32, 0)
-                       ELSE 0 END) AS BIGINT) AS hi,
-         CAST(sum(CASE WHEN g.bit < 32 AND 64*g.s > t.total
-                       THEN 1::BIGINT << least(g.bit, 31)
-                       ELSE 0 END) AS BIGINT) AS lo
-  FROM grid g JOIN tot t USING (media_id) GROUP BY 1
-)
-SELECT a.media_id AS media_a, b.media_id AS media_b,
-       CAST(bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) AS INT)
-         AS hamming
-FROM sig a JOIN sig b ON a.media_id < b.media_id
-WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 3
-""",
         "zipf_fit": """
 WITH tok AS (
   SELECT source,
@@ -6405,20 +5647,6 @@ SELECT mx.grp AS source, mx.n_docs, round(mx.mdev, 6) AS ks_stat,
        CAST(at.ks_at AS BIGINT) AS ks_at
 FROM mx LEFT JOIN at ON mx.grp = at.grp
 """,
-        "local_supplier_volume": """
-SELECT n_name AS nation,
-       round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue,
-       count(*) AS n_lineitems
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= '1996-01-01' AND o_orderdate < '1997-01-01'
-GROUP BY 1
-""",
         "numeric_profile": """
 SELECT 'l_quantity' AS column, count(*) AS n_rows,
        CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -6473,27 +5701,6 @@ SELECT 'l_suppkey' AS column, count(*) AS n_rows,
        round(max(CAST(l_suppkey AS DOUBLE)), 6) AS max_value,
        round(avg(CAST(l_suppkey AS DOUBLE)), 4) AS mean_value
 FROM lineitem
-""",
-        "late_shipment_orders": """
-SELECT o_orderpriority, count(*) AS n_late_orders
-FROM orders
-WHERE EXISTS (
-  SELECT 1 FROM lineitem
-  WHERE l_orderkey = o_orderkey
-    AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-)
-GROUP BY 1
-""",
-        "big_basket_customers": """
-WITH big AS (
-  SELECT l_orderkey, CAST(sum(l_quantity) AS BIGINT) AS total_qty
-  FROM lineitem GROUP BY 1 HAVING sum(l_quantity) >= 150
-)
-SELECT c_name AS customer, o_orderkey AS orderkey,
-       o_totalprice AS totalprice, total_qty
-FROM big
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
 """,
         "spike_attribution": """
 WITH c AS (
@@ -6591,29 +5798,6 @@ SELECT role, n_turns, n_tokens,
        round(cost_raw, 4) AS cost,
        round(cost_raw / total, 6) AS cost_share
 FROM a CROSS JOIN tt
-""",
-        "nation_trade_volume": """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       CAST(year(o_orderdate) AS INT) AS order_year,
-       round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue,
-       count(*) AS n_lineitems
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation n1 ON s_nationkey = n1.n_nationkey
-JOIN nation n2 ON c_nationkey = n2.n_nationkey
-WHERE (n1.n_name = 'NATION_9' AND n2.n_name = 'NATION_10')
-   OR (n1.n_name = 'NATION_10' AND n2.n_name = 'NATION_9')
-GROUP BY 1, 2, 3
-""",
-        "supplier_diversity": """
-SELECT p_brand, p_type, p_size,
-       count(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-WHERE p_brand <> 'Brand#1'
-GROUP BY 1, 2, 3
 """,
         "type_correlation": """
 WITH gb AS (
@@ -6848,20 +6032,6 @@ SELECT event_type, n_events,
        round(decayed_raw, 4) AS decayed_volume,
        round(decayed_raw / tot, 6) AS decayed_share
 FROM g CROSS JOIN tt
-""",
-        "small_quantity_revenue": """
-WITH avg_q AS (
-  SELECT l_partkey, avg(l_quantity) AS avg_qty
-  FROM lineitem GROUP BY 1
-)
-SELECT p_brand,
-       count(*) AS n_small_lines,
-       round(sum(l_extendedprice) / 7.0, 4) AS avg_yearly
-FROM lineitem
-JOIN avg_q USING (l_partkey)
-JOIN part ON l_partkey = p_partkey
-WHERE l_quantity < 0.2 * avg_qty
-GROUP BY 1
 """,
         "burstiness": """
 WITH gb AS (
@@ -7098,27 +6268,6 @@ JOIN single sa ON tool_a = sa.tool
 JOIN single sb ON tool_b = sb.tool
 CROSS JOIN nc
 WHERE n_both >= 50
-""",
-        "returned_revenue": """
-WITH pc AS (
-  SELECT o_custkey,
-         sum(l_extendedprice * (1.0 - l_discount)) AS rev_raw,
-         count(*) AS n_returned_lines
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE l_returnflag = 'R'
-  GROUP BY 1
-), rk AS (
-  SELECT *, row_number() OVER (ORDER BY rev_raw DESC, o_custkey ASC)
-           AS rank
-  FROM pc
-)
-SELECT c_name AS customer, n_name AS nation,
-       round(rev_raw, 4) AS returned_revenue,
-       n_returned_lines, CAST(rank AS INT) AS rank
-FROM rk
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE rank <= 20
 """,
         "label_balance": """
 WITH g AS (
@@ -7717,210 +6866,6 @@ SELECT "group", strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start,
        END AS is_spike
 FROM b
 """,
-        # REAL lossy-codec parity: solid 8x8 tiles survive JPEG's
-        # quantize/dequantize/IDCT as a closed form (functions/jpeg.py),
-        # so the oracle needs only the quality->q00 formula and the
-        # tie-guarded half-away rounding rnd(x)=sign(x)*floor(|x|+.5+1e-9)
-        "jpeg_tile_stats": """
-WITH imgs AS (
-  SELECT i, printf('jpg_%05d', i) AS media_id,
-         2 + (i*3)%5 AS bw, 2 + (i*5)%4 AS bh,
-         CASE i%4 WHEN 0 THEN 35 WHEN 1 THEN 50 WHEN 2 THEN 75
-                  ELSE 90 END AS q
-  FROM range(40) t(i)
-), qq AS (
-  SELECT *, bw*8 AS width, bh*8 AS height,
-         GREATEST(1, LEAST(255,
-           (16 * (CASE WHEN q < 50 THEN 5000//q ELSE 200 - 2*q END) + 50)
-             // 100)) AS q00
-  FROM imgs
-), tiles AS (
-  SELECT media_id, width, height, q00,
-         CAST(by AS BIGINT) AS by, CAST(bx AS BIGINT) AS bx,
-         (17*i + 31*bx + 57*by) % 256 AS v
-  FROM qq, unnest(range(bh)) tb(by), unnest(range(bw)) tx(bx)
-), dec AS (
-  SELECT *, CAST(sign(8.0*(v-128)/q00)
-                 * floor(abs(8.0*(v-128)/q00) + 0.5 + 1e-9) AS BIGINT) AS dc
-  FROM tiles
-), pix AS (
-  SELECT media_id, width, height, by, bx,
-         CAST(LEAST(255, GREATEST(0,
-           sign(dc*q00/8.0 + 128) * floor(abs(dc*q00/8.0 + 128) + 0.5 + 1e-9)
-         )) AS BIGINT) AS pv
-  FROM dec
-)
-SELECT media_id, CAST(width AS INT) AS width, CAST(height AS INT) AS height,
-       CAST(64*count(*) AS BIGINT) AS n_px,
-       CAST(64*sum(pv) AS BIGINT) AS sum_lum,
-       CAST(min(pv) AS INT) AS min_lum,
-       CAST(max(pv) AS INT) AS max_lum,
-       CAST(sum(pv * (512*(by*width + bx) + 224*(width+1))) % 1000000007
-            AS BIGINT) AS pos_checksum
-FROM pix GROUP BY media_id, width, height
-""",
-        "jpeg_color_stats": """
-WITH imgs AS (
-  SELECT i, printf('jpc_%05d', i) AS media_id,
-         2 + (i*3)%4 AS bw, 2 + i%3 AS bh,
-         CASE i%4 WHEN 0 THEN 35 WHEN 1 THEN 50 WHEN 2 THEN 75
-                  ELSE 90 END AS q
-  FROM range(24) t(i)
-), qq AS (
-  SELECT *, bw*8 AS width, bh*8 AS height,
-         GREATEST(1, LEAST(255,
-           (16 * (CASE WHEN q < 50 THEN 5000//q ELSE 200 - 2*q END) + 50)
-             // 100)) AS q00l,
-         GREATEST(1, LEAST(255,
-           (17 * (CASE WHEN q < 50 THEN 5000//q ELSE 200 - 2*q END) + 50)
-             // 100)) AS q00c
-  FROM imgs
-), tiles AS (
-  SELECT media_id, width, height, q00l, q00c,
-         CAST(by AS BIGINT) AS by, CAST(bx AS BIGINT) AS bx,
-         (29*i + 31*bx + 57*by) % 256 AS r,
-         (7*i + 11*bx + 43*by) % 256 AS g,
-         (3*i + 53*bx + 19*by) % 256 AS b
-  FROM qq, unnest(range(bh)) tb(by), unnest(range(bw)) tx(bx)
-), ycc AS (
-  SELECT media_id, width, height, q00l, q00c, by, bx,
-    CAST(LEAST(255, GREATEST(0, sign(0.299*r + 0.587*g + 0.114*b)
-      * floor(abs(0.299*r + 0.587*g + 0.114*b) + 0.5 + 1e-9))) AS BIGINT)
-      AS yv,
-    CAST(LEAST(255, GREATEST(0,
-      sign(-0.168736*r - 0.331264*g + 0.5*b + 128.0)
-      * floor(abs(-0.168736*r - 0.331264*g + 0.5*b + 128.0) + 0.5 + 1e-9)))
-      AS BIGINT) AS cb,
-    CAST(LEAST(255, GREATEST(0,
-      sign(0.5*r - 0.418688*g - 0.081312*b + 128.0)
-      * floor(abs(0.5*r - 0.418688*g - 0.081312*b + 128.0) + 0.5 + 1e-9)))
-      AS BIGINT) AS cr
-  FROM tiles
-), dcs AS (
-  SELECT *,
-    CAST(sign(8.0*(yv-128)/q00l)
-         * floor(abs(8.0*(yv-128)/q00l) + 0.5 + 1e-9) AS BIGINT) AS dcy,
-    CAST(sign(8.0*(cb-128)/q00c)
-         * floor(abs(8.0*(cb-128)/q00c) + 0.5 + 1e-9) AS BIGINT) AS dcb,
-    CAST(sign(8.0*(cr-128)/q00c)
-         * floor(abs(8.0*(cr-128)/q00c) + 0.5 + 1e-9) AS BIGINT) AS dcr
-  FROM ycc
-), chan AS (
-  SELECT media_id, width, height, by, bx,
-    CAST(LEAST(255, GREATEST(0, sign(dcy*q00l/8.0 + 128)
-      * floor(abs(dcy*q00l/8.0 + 128) + 0.5 + 1e-9))) AS BIGINT) AS yd,
-    CAST(LEAST(255, GREATEST(0, sign(dcb*q00c/8.0 + 128)
-      * floor(abs(dcb*q00c/8.0 + 128) + 0.5 + 1e-9))) AS BIGINT) AS cbd,
-    CAST(LEAST(255, GREATEST(0, sign(dcr*q00c/8.0 + 128)
-      * floor(abs(dcr*q00c/8.0 + 128) + 0.5 + 1e-9))) AS BIGINT) AS crd
-  FROM dcs
-), rgb AS (
-  SELECT media_id, width, height, by, bx,
-    CAST(LEAST(255, GREATEST(0, sign(yd + 1.402*(crd - 128.0))
-      * floor(abs(yd + 1.402*(crd - 128.0)) + 0.5 + 1e-9))) AS BIGINT)
-      AS rr,
-    CAST(LEAST(255, GREATEST(0,
-      sign(yd - 0.344136*(cbd - 128.0) - 0.714136*(crd - 128.0))
-      * floor(abs(yd - 0.344136*(cbd - 128.0) - 0.714136*(crd - 128.0))
-              + 0.5 + 1e-9))) AS BIGINT) AS gg,
-    CAST(LEAST(255, GREATEST(0, sign(yd + 1.772*(cbd - 128.0))
-      * floor(abs(yd + 1.772*(cbd - 128.0)) + 0.5 + 1e-9))) AS BIGINT)
-      AS bb
-  FROM chan
-)
-SELECT media_id, CAST(width AS INT) AS width, CAST(height AS INT) AS height,
-       CAST(64*count(*) AS BIGINT) AS n_px,
-       CAST(64*sum(rr) AS BIGINT) AS sum_r,
-       CAST(64*sum(gg) AS BIGINT) AS sum_g,
-       CAST(64*sum(bb) AS BIGINT) AS sum_b,
-       CAST(sum((rr + 2*gg + 3*bb)
-                * (512*(by*width + bx) + 224*(width+1))) % 1000000007
-            AS BIGINT) AS pos_checksum
-FROM rgb GROUP BY media_id, width, height
-""",
-        # 4:2:0: same per-channel closed form — a uniform 16x16 tile stays
-        # uniform through the 2x2 box downsample and replicate upsample,
-        # so only the tile geometry terms change (256 px/tile; position
-        # sum 4096*(by*width+bx) + 1920*(width+1))
-        "jpeg420_stats": """
-WITH imgs AS (
-  SELECT i, printf('j20_%05d', i) AS media_id,
-         2 + (i*3)%4 AS bw, 2 + i%3 AS bh,
-         CASE i%4 WHEN 0 THEN 35 WHEN 1 THEN 50 WHEN 2 THEN 75
-                  ELSE 90 END AS q
-  FROM range(24) t(i)
-), qq AS (
-  SELECT *, bw*16 AS width, bh*16 AS height,
-         GREATEST(1, LEAST(255,
-           (16 * (CASE WHEN q < 50 THEN 5000//q ELSE 200 - 2*q END) + 50)
-             // 100)) AS q00l,
-         GREATEST(1, LEAST(255,
-           (17 * (CASE WHEN q < 50 THEN 5000//q ELSE 200 - 2*q END) + 50)
-             // 100)) AS q00c
-  FROM imgs
-), tiles AS (
-  SELECT media_id, width, height, q00l, q00c,
-         CAST(by AS BIGINT) AS by, CAST(bx AS BIGINT) AS bx,
-         (29*i + 31*bx + 57*by) % 256 AS r,
-         (7*i + 11*bx + 43*by) % 256 AS g,
-         (3*i + 53*bx + 19*by) % 256 AS b
-  FROM qq, unnest(range(bh)) tb(by), unnest(range(bw)) tx(bx)
-), ycc AS (
-  SELECT media_id, width, height, q00l, q00c, by, bx,
-    CAST(LEAST(255, GREATEST(0, sign(0.299*r + 0.587*g + 0.114*b)
-      * floor(abs(0.299*r + 0.587*g + 0.114*b) + 0.5 + 1e-9))) AS BIGINT)
-      AS yv,
-    CAST(LEAST(255, GREATEST(0,
-      sign(-0.168736*r - 0.331264*g + 0.5*b + 128.0)
-      * floor(abs(-0.168736*r - 0.331264*g + 0.5*b + 128.0) + 0.5 + 1e-9)))
-      AS BIGINT) AS cb,
-    CAST(LEAST(255, GREATEST(0,
-      sign(0.5*r - 0.418688*g - 0.081312*b + 128.0)
-      * floor(abs(0.5*r - 0.418688*g - 0.081312*b + 128.0) + 0.5 + 1e-9)))
-      AS BIGINT) AS cr
-  FROM tiles
-), dcs AS (
-  SELECT *,
-    CAST(sign(8.0*(yv-128)/q00l)
-         * floor(abs(8.0*(yv-128)/q00l) + 0.5 + 1e-9) AS BIGINT) AS dcy,
-    CAST(sign(8.0*(cb-128)/q00c)
-         * floor(abs(8.0*(cb-128)/q00c) + 0.5 + 1e-9) AS BIGINT) AS dcb,
-    CAST(sign(8.0*(cr-128)/q00c)
-         * floor(abs(8.0*(cr-128)/q00c) + 0.5 + 1e-9) AS BIGINT) AS dcr
-  FROM ycc
-), chan AS (
-  SELECT media_id, width, height, by, bx,
-    CAST(LEAST(255, GREATEST(0, sign(dcy*q00l/8.0 + 128)
-      * floor(abs(dcy*q00l/8.0 + 128) + 0.5 + 1e-9))) AS BIGINT) AS yd,
-    CAST(LEAST(255, GREATEST(0, sign(dcb*q00c/8.0 + 128)
-      * floor(abs(dcb*q00c/8.0 + 128) + 0.5 + 1e-9))) AS BIGINT) AS cbd,
-    CAST(LEAST(255, GREATEST(0, sign(dcr*q00c/8.0 + 128)
-      * floor(abs(dcr*q00c/8.0 + 128) + 0.5 + 1e-9))) AS BIGINT) AS crd
-  FROM dcs
-), rgb AS (
-  SELECT media_id, width, height, by, bx,
-    CAST(LEAST(255, GREATEST(0, sign(yd + 1.402*(crd - 128.0))
-      * floor(abs(yd + 1.402*(crd - 128.0)) + 0.5 + 1e-9))) AS BIGINT)
-      AS rr,
-    CAST(LEAST(255, GREATEST(0,
-      sign(yd - 0.344136*(cbd - 128.0) - 0.714136*(crd - 128.0))
-      * floor(abs(yd - 0.344136*(cbd - 128.0) - 0.714136*(crd - 128.0))
-              + 0.5 + 1e-9))) AS BIGINT) AS gg,
-    CAST(LEAST(255, GREATEST(0, sign(yd + 1.772*(cbd - 128.0))
-      * floor(abs(yd + 1.772*(cbd - 128.0)) + 0.5 + 1e-9))) AS BIGINT)
-      AS bb
-  FROM chan
-)
-SELECT media_id, CAST(width AS INT) AS width, CAST(height AS INT) AS height,
-       CAST(256*count(*) AS BIGINT) AS n_px,
-       CAST(256*sum(rr) AS BIGINT) AS sum_r,
-       CAST(256*sum(gg) AS BIGINT) AS sum_g,
-       CAST(256*sum(bb) AS BIGINT) AS sum_b,
-       CAST(sum((rr + 2*gg + 3*bb)
-                * (4096*(by*width + bx) + 1920*(width+1))) % 1000000007
-            AS BIGINT) AS pos_checksum
-FROM rgb GROUP BY media_id, width, height
-""",
         "user_sessions": """
 WITH marked AS (
   SELECT user_id, event_id, ts,
@@ -7982,12 +6927,6 @@ SELECT s.doc_id, CAST(n_words AS BIGINT) AS n_words,
 FROM stats s LEFT JOIN top USING (doc_id) LEFT JOIN dup USING (doc_id)
 """,
     }
-    # progressive JPEG carries the SAME quantized coefficients as baseline,
-    # so its oracle is the 4:4:4 closed form verbatim, only the fixture
-    # ids differ
-    oracles["jpeg_prog_stats"] = oracles["jpeg_color_stats"].replace(
-        "jpc_", "jpp_"
-    )
     # same integer bucketing as operators/quantiles.py: bit_length via
     # printf('%b') (Spark twin: length(conv(v, 10, 2)))
     oracles["quantile_sketch"] = """

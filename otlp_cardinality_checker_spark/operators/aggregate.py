@@ -598,12 +598,13 @@ _ATTR_SORT_FIELDS = {
 
 def list_attributes(
     catalog_df: DataFrame,
+    *,
+    limit: int,
     signal_type: str | None = None,
     min_cardinality: int = 0,
     max_cardinality: int = 0,
     sort_by: str = "cardinality",
     sort_order: str = "desc",
-    limit: int = 0,
     offset: int = 0,
 ) -> DataFrame:
     """P4: AttributeFilter over the catalog — band, 5-field sort (asc or
@@ -616,9 +617,11 @@ def list_attributes(
     tie-break is added so pagination is stable across runs (the
     reference's sort.Slice is unstable — a non-goal to reproduce).
 
-    The global row_number window is fine HERE because its input is the
-    already-aggregated catalog (O(#keys) rows), not a data-volume frame.
+    ``limit`` must be positive: every page is a bounded rank
+    (``global_top_k``), never a full global sort on one reducer.
     """
+    if limit <= 0:
+        raise ValueError(f"list_attributes: limit must be > 0, got {limit}")
     df = catalog_df
     if signal_type:
         df = df.where(
@@ -631,18 +634,12 @@ def list_attributes(
     field = _ATTR_SORT_FIELDS.get(sort_by, "est_cardinality")
     col = F.lower(F.col(field)) if field == "key" else F.col(field)
     lead = col.desc() if sort_order == "desc" else col.asc()
-    if limit > 0:
-        # bounded page: two-stage global rank — the final window sees
-        # <= n_salt * (offset + limit) salted survivors, not every key
-        df = global_top_k(
-            df, (lead, F.asc("key")), k=offset + limit, salt_col="key",
-            rank_name="rn",
-        )
-    else:
-        # unbounded listing: every row needs its rank, so a full global
-        # sort is inherent; input is the aggregated catalog (O(#keys))
-        w = Window.orderBy(lead, F.asc("key"))
-        df = df.withColumn("rn", F.row_number().over(w))
+    # bounded page: WindowGroupLimit keeps offset + limit rows per map
+    # partition, so the one final rank never sees every key
+    df = global_top_k(
+        df, (lead, F.asc("key")), k=offset + limit, salt_col="key",
+        rank_name="rn",
+    )
     if offset > 0:
         df = df.where(F.col("rn") > offset)
     return df

@@ -690,8 +690,7 @@ def compression_stats(docs: DataFrame) -> DataFrame:
     Scale shape: ONE Arrow-batched ``mapInArrow`` projection of
     (doc_id, text) into four fixed-width columns — zero exchanges,
     embarrassingly parallel; ``zlib.compress`` is C under the loop, and
-    per-batch Arrow transfer amortizes the Python boundary (the same
-    escape-hatch pattern as the media kernels in multimodal.py).
+    per-batch Arrow transfer amortizes the Python boundary.
     """
     import pyarrow as pa
 

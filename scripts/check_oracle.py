@@ -66,7 +66,7 @@ def main() -> int:
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
 
-    spark = get_spark(cores=16)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

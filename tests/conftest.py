@@ -11,7 +11,7 @@ sys.path.insert(0, "/root/repo")
 def spark():
     from otlp_cardinality_checker_spark.session import get_spark
 
-    s = get_spark(app_name="pytest", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="pytest", shuffle_partitions=8)
     yield s
     s.stop()
 

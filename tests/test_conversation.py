@@ -259,6 +259,76 @@ def test_transcript_card_component_consistency(spark):
     assert card[("loop", "flagged_conv_share")] == round(tl["f"] / tl["c"], 6)
 
 
+def test_transcript_card_uses_pipeline_templates(tmp_path, spark, tiny_frames):
+    """A routed frame parsed with a custom patterns_yaml carries its own
+    `template` column; the card's loop section must read it, not re-mask
+    `text` with the builtin pattern table."""
+    import pyspark.sql.functions as FF
+
+    from otlp_cardinality_checker_spark.datagen import role_dim, tool_dim
+    from otlp_cardinality_checker_spark.functions.masking import (
+        template_expr,
+    )
+    from otlp_cardinality_checker_spark.operators.card import (
+        transcript_card,
+    )
+    from otlp_cardinality_checker_spark.operators.conversation import (
+        template_loops,
+    )
+    from otlp_cardinality_checker_spark.operators.enrich import enrich_turns
+    from otlp_cardinality_checker_spark.operators.parse import parse_turns
+    from otlp_cardinality_checker_spark.operators.route import route_turns
+
+    yml = tmp_path / "user_patterns.yaml"
+    yml.write_text(
+        """
+patterns:
+  - name: everything_is_x
+    regex: '[A-Za-z]+'
+    placeholder: 'X'
+"""
+    )
+    transcripts, _, _ = tiny_frames
+    routed = route_turns(
+        enrich_turns(
+            parse_turns(
+                spark.createDataFrame(transcripts), patterns_yaml=str(yml)
+            ),
+            spark.createDataFrame(role_dim(include_system=False)),
+            spark.createDataFrame(tool_dim()),
+        )
+    ).cache()
+
+    def loop_section(templated):
+        tl = template_loops(templated).agg(
+            FF.sum("n_repeat_pairs").alias("p"),
+            FF.sum("n_turns").alias("t"),
+            FF.sum(FF.col("flagged").cast("long")).alias("f"),
+            FF.count(FF.lit(1)).alias("c"),
+        ).collect()[0]
+        return (
+            round(tl["p"] / tl["t"], 6),
+            round(tl["f"] / tl["c"], 6),
+        )
+
+    card = {
+        (r["section"], r["metric"]): r["value"]
+        for r in transcript_card(routed).collect()
+    }
+    got = (card[("loop", "repeat_pair_rate")],
+           card[("loop", "flagged_conv_share")])
+    own = loop_section(routed.select("conv_id", "turn_idx", "template"))
+    builtin = loop_section(
+        routed.select(
+            "conv_id", "turn_idx",
+            template_expr(FF.col("text")).alias("template"),
+        )
+    )
+    assert got == own
+    assert own != builtin  # the custom patterns change the loop figures
+    routed.unpersist()
+
+
 def test_boilerplate_turns_crafted(spark):
     """Threshold on DISTINCT convs, whitespace-insensitive fingerprint."""
     from otlp_cardinality_checker_spark.operators.conversation import (

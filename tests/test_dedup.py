@@ -306,23 +306,6 @@ def test_lsh_topk_recall_planted_clusters(spark):
     assert sum(recalls) / len(recalls) >= 0.9
 
 
-def test_multimodal_plumbing(spark):
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        extract_features,
-        modality_stats,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, 30)
-    feats = extract_features(media, n_features=4)
-    got = feats.toPandas()
-    assert len(got) == 30
-    assert all(len(f) == 4 for f in got["features"])
-    stats = modality_stats(feats).toPandas()
-    assert set(stats["modality"]) == {"image", "audio", "video"}
-    assert (stats["total_bytes"] > 0).all()
-
-
 def test_ivf_topk_recall_planted_clusters(spark):
     """IVF recall on the same planted angular clusters as the LSH test:
     nprobe covering half the lists must recover the cluster members."""

@@ -404,6 +404,24 @@ def test_global_rank_windows_are_two_stage(spark, tiny_routed):
     assert_no_empty_partition_window(plan)
 
 
+def test_list_attributes_rejects_unbounded_limit(spark):
+    """An unbounded listing would rank the whole catalog in one
+    partitionless window; list_attributes refuses it instead."""
+    import pytest
+
+    from otlp_cardinality_checker_spark.operators.aggregate import (
+        list_attributes,
+    )
+
+    cat = spark.createDataFrame(
+        [("a", 1, 1, "chat")], "key string, count long, "
+        "est_cardinality long, signal_types string",
+    )
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="limit must be > 0"):
+            list_attributes(cat, limit=bad)
+
+
 def test_char_entropy_projection_stack_compiles(spark):
     """char_entropy's sql engine must stay a STACKED projection chain:
     the single-expression form inlined each length/replace count 3x into

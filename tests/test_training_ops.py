@@ -723,38 +723,6 @@ def test_new_ops_handle_empty_input(spark):
     assert len(fp) == 1 and fp[0]["n_rows"] == 0
 
 
-def test_multimodal_resize_and_frame_sampling(spark):
-    from otlp_cardinality_checker_spark.operators.multimodal import (
-        resize_images,
-        sample_frames,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, 30)
-    by_id = {m["media_id"]: m for m in media.collect()}  # collect ONCE
-    resized = resize_images(media, width=64, height=64).collect()
-    for r in resized:
-        if r["modality"] == "image":
-            assert (r["width"], r["height"]) == (64, 64)
-            assert len(r["payload"]) == 64 * 64 // 64
-        else:  # non-image rows pass through untouched
-            assert r["payload"] == by_id[r["media_id"]]["payload"]
-
-    frames = sample_frames(media, every_ms=500)
-    got = frames.collect()
-    assert got and all(r["ts_ms"] == r["frame_idx"] * 500 for r in got)
-    # one video's frame count matches duration // step + 1
-    vids = {m["media_id"]: m for m in media.collect() if m["modality"] == "video"}
-    from collections import Counter
-
-    per = Counter(r["media_id"] for r in got)
-    assert set(per) == set(vids)
-    for mid, n in per.items():
-        assert n == vids[mid]["duration_ms"] // 500 + 1
-    # deterministic across runs
-    assert sorted(map(tuple, got)) == sorted(map(tuple, frames.collect()))
-
-
 def test_cms_properties(spark):
     """Count-min invariants: est >= exact for every value; merge of two
     partial sketches equals the sketch of the union; small width forces
