@@ -1,8 +1,7 @@
-"""Pure-stdlib baseline JPEG codec (struct + numpy): the first LOSSY format.
+"""Pure-stdlib JPEG codec (struct + numpy).
 
-The media family decodes PNG/GIF/WAV/AVI for real; JPEG is the dominant
-image format in any web-scale corpus and was the last stub.  This module
-implements baseline sequential DCT JPEG (JFIF) end-to-end with no
+A standalone library module: no query in the registry decodes media.
+It implements baseline sequential DCT JPEG (JFIF) end-to-end with no
 libraries beyond numpy:
 
 * **encode_jpeg** — grayscale or RGB 4:4:4, quality-scaled Annex-K-style
@@ -29,7 +28,7 @@ equal decode(baseline encode) bit-for-bit, which is how the tests pin
 the whole Annex-G path without any external codec; the solid-tile
 closed form below therefore verifies progressive streams unchanged.
 
-Numeric contract (what makes a lossy codec *oracle-checkable*): every
+Numeric contract (what makes a lossy codec checkable in closed form): every
 rounding step is ``sign(x) * floor(|x| + 0.5 + 1e-9)`` — half-away with a
 tie-guard epsilon (see ROUND_EPS), engine-portable, never numpy's
 banker's rounding.  For a uniform 8x8 block of value v the FDCT is
@@ -37,14 +36,10 @@ DC-only with DC = 8*(v-128), so the decoded block is the closed form
 
     decoded(v) = clamp(rnd(rnd(8*(v-128)/q00) * q00 / 8 + 128))
 
-with rnd as above — computable in plain SQL with no codec, which is how
-the DuckDB oracle verifies the decoder bit-for-bit on solid-tile
-fixtures (operators/multimodal.py).
+with rnd as above — computable with no codec, which is how the tests
+verify the decoder bit-for-bit on solid tiles (solid_tile_decoded_value).
 RGB adds the standard BT.601 transform on both sides with the same
 half-up rounding.
-
-Reference parity note: the reference repo has no media path at all; this
-belongs to the training-data additions the build brief mandates.
 """
 
 from __future__ import annotations
@@ -166,7 +161,7 @@ _C = _dct_basis()
 # Ties round away from zero. The epsilon absorbs float-DCT noise (~1e-13)
 # at EXACT ties — e.g. q00=16 puts every odd (v-128) DC precisely on a .5
 # boundary, where cos-sum error would otherwise pick a side at random.
-# The oracle's exact arithmetic reproduces the same rule: sign*floor(
+# solid_tile_decoded_value's closed form uses the same rule: sign*floor(
 # abs(x) + 0.5 + 1e-9).
 ROUND_EPS = 1e-9
 
@@ -1026,10 +1021,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
 
 def solid_tile_decoded_value(v: int, q00: int) -> int:
     """Closed form for a uniform 8x8 block of value ``v`` through the
-    quantize/dequantize/IDCT pipeline with DC quant step ``q00`` — the
-    decoder-less oracle formula (also expressed in SQL by the driver
-    oracle).  Kept here so tests pin the python and SQL forms against the
-    real codec from both sides."""
+    quantize/dequantize/IDCT pipeline with DC quant step ``q00`` — a
+    decoder-less formula the tests pin against the real codec."""
     x = 8.0 * (v - 128) / q00
     dc = int(np.sign(x) * np.floor(abs(x) + 0.5 + ROUND_EPS))
     val = dc * q00 / 8.0 + 128.0

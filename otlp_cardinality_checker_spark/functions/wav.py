@@ -1,4 +1,4 @@
-"""Pure-stdlib WAV/PCM codec (struct + numpy) — a second REAL decode path.
+"""Pure-stdlib WAV/PCM codec (struct + numpy).
 
 RIFF/WAVE PCM needs no audio library: a fixed header (RIFF chunk, fmt
 sub-chunk, data sub-chunk) followed by raw little-endian PCM samples.
@@ -9,9 +9,7 @@ This module implements
   only — the format ML audio corpora normalize to before featurization.
 * :func:`encode_wav` — the matching writer, used by fixtures.
 
-Together with ``functions/png.py`` this makes two of the three media
-modalities decode for REAL in `operators/multimodal.py`; only video
-remains stubbed (no container/codec parser is feasible stdlib-only).
+A standalone library module: no query in the registry decodes media.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
-"""Property-based codec tests (hypothesis): every encoder/decoder pair
-must roundtrip arbitrary valid inputs bit-exactly — the LZW dictionary
-machinery, bit packing, stride padding, and filter arithmetic have no
-"almost right" failure modes a fixed fixture set is guaranteed to hit."""
+"""Property-based codec tests (hypothesis): an encoder/decoder pair must
+roundtrip arbitrary valid inputs bit-exactly — channel interleaving and
+sample packing have no "almost right" failure modes a fixed fixture set
+is guaranteed to hit."""
 
 from __future__ import annotations
 
@@ -9,72 +9,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from otlp_cardinality_checker_spark.functions.avi import decode_avi, encode_avi
-from otlp_cardinality_checker_spark.functions.gif import (
-    _lzw_decode,
-    _lzw_encode,
-    decode_gif,
-    encode_gif,
-)
-from otlp_cardinality_checker_spark.functions.png import decode_png, encode_png
 from otlp_cardinality_checker_spark.functions.wav import decode_wav, encode_wav
-
-
-@settings(max_examples=80, deadline=None)
-@given(
-    st.binary(min_size=0, max_size=3000),
-    st.integers(min_value=2, max_value=8),
-)
-def test_lzw_roundtrips_arbitrary_bytes(data, min_code_size):
-    """LZW over any byte string whose symbols fit the code size."""
-    cap = 1 << min_code_size
-    clipped = bytes(b % cap for b in data)
-    enc = _lzw_encode(clipped, min_code_size)
-    out = _lzw_decode(enc, min_code_size, len(clipped))
-    assert out.tobytes() == clipped
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=3),   # frames
-    st.integers(min_value=1, max_value=24),  # h
-    st.integers(min_value=1, max_value=24),  # w
-    st.integers(min_value=1, max_value=8),   # palette depth bits
-    st.integers(min_value=0, max_value=2**31),
-)
-def test_gif_roundtrips_arbitrary_frames(nf, h, w, depth, seed):
-    rng = np.random.default_rng(seed)
-    k = 1 << depth
-    frames = rng.integers(0, k, size=(nf, h, w), dtype=np.uint8)
-    pal = rng.integers(0, 256, size=(k, 3), dtype=np.uint8)
-    f2, p2, _ = decode_gif(encode_gif(frames, pal))
-    assert (f2 == frames).all() and (p2 == pal).all()
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=4),   # frames
-    st.integers(min_value=1, max_value=16),  # h
-    st.integers(min_value=1, max_value=16),  # w — odd widths force stride pad
-    st.integers(min_value=0, max_value=2**31),
-)
-def test_avi_roundtrips_arbitrary_frames(nf, h, w, seed):
-    rng = np.random.default_rng(seed)
-    frames = rng.integers(0, 256, size=(nf, h, w, 3), dtype=np.uint8)
-    f2, us = decode_avi(encode_avi(frames, 40000))
-    assert us == 40000 and (f2 == frames).all()
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=40),  # h
-    st.integers(min_value=1, max_value=40),  # w
-    st.integers(min_value=0, max_value=2**31),
-)
-def test_png_roundtrips_arbitrary_images(h, w, seed):
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-    assert (decode_png(encode_png(img))[:, :, 0] == img).all()
 
 
 @settings(max_examples=40, deadline=None)

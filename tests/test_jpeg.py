@@ -1,8 +1,6 @@
 """Baseline JPEG codec: closed-form DC parity, roundtrip bounds, rejects.
 
-No Spark here — pure codec tests (the Spark-side plumbing is covered by
-tests/test_multimodal-style oracle queries: jpeg_tile_stats in
-__spark_entry__).
+No Spark here — pure codec tests.
 """
 
 from __future__ import annotations
@@ -64,8 +62,7 @@ def test_solid_gray_matches_closed_form(quality):
 
 def test_solid_color_matches_closed_form():
     """Color path: RGB -> YCbCr -> per-channel DC pipeline -> RGB, every
-    stage via the module's own public functions (the SQL oracle repeats
-    the same arithmetic with no codec)."""
+    stage via the module's own public functions."""
     quality = 75
     q_l = int(quality_scale(BASE_Q_LUMA, quality)[0])
     q_c = int(quality_scale(BASE_Q_CHROMA, quality)[0])
