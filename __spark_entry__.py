@@ -738,7 +738,7 @@ _MICROBATCH_ROW_CAP = 1_000_000
 def _write_microbatch_sources(src, frames, ts_cols=("ts",)) -> None:
     """HARNESS ONLY — bounded driver-side micro-batch source writer.
 
-    The three streaming-query wrappers below need deterministic file
+    The streaming-query wrappers below need deterministic file
     splits to hand Structured Streaming a fixed micro-batch order at gate
     scale (sf0.01).  The ``toPandas()`` materialization here is NOT an
     operator pattern — it is confined to this helper, guarded by a hard
@@ -771,6 +771,19 @@ def _write_microbatch_sources(src, frames, ts_cols=("ts",)) -> None:
         _os.utime(path, (mt, mt))
 
 
+def _write_median_split(src, frame) -> None:
+    """Two micro-batch files: ``frame``'s rows before, then from, the
+    approximate median ``ts`` (``percentile_approx(ts, 0.5)``)."""
+    cutoff = frame.agg(
+        F.expr("percentile_approx(ts, 0.5)").alias("c")
+    ).collect()[0]["c"]
+    _write_microbatch_sources(
+        src,
+        [frame.where(F.col("ts") < F.lit(cutoff)),
+         frame.where(F.col("ts") >= F.lit(cutoff))],
+    )
+
+
 def q_events_windowed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.10 driver-verified STREAMING query: the watermarked event-time
     window run as a real Structured Streaming job (two file micro-batches,
@@ -784,9 +797,6 @@ def q_events_windowed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     30min, with FULL counts: no input row is ever late here (every B row
     has ts >= max(ts)-2h, above the batch-B watermark max(ts in A)-30min,
     and its window is still open at that point since max(A) < cutoff)."""
-    import tempfile
-    from pathlib import Path
-
     from otlp_cardinality_checker_spark.streaming.stream import (
         run_windowed_stream,
     )
@@ -840,9 +850,6 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     every doc with doc_id < 50 re-enters as doc_id + 10000 (landing in the
     LAST batch), exercising the cross-batch duplicate path non-trivially;
     the oracle applies the same UNION ALL."""
-    import tempfile
-    from pathlib import Path
-
     import pandas as pd
 
     from otlp_cardinality_checker_spark.streaming.stream import dedup_stream
@@ -880,9 +887,6 @@ def q_cms_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     point estimates vs exact counts hash-match a batch DuckDB oracle —
     the second hash-exact streaming/batch sketch equivalence (with
     quantile_stream)."""
-    import tempfile
-    from pathlib import Path
-
     from otlp_cardinality_checker_spark.operators.checksum import (
         NULL_SENTINEL,
     )
@@ -895,16 +899,9 @@ def q_cms_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    cutoff = ev.agg(
-        F.expr("percentile_approx(ts, 0.5)").alias("c")
-    ).collect()[0]["c"]
     tmp = _stream_scratch("cmsstream_")
     src = tmp / "src"
-    _write_microbatch_sources(
-        src,
-        [ev.where(F.col("ts") < F.lit(cutoff)),
-         ev.where(F.col("ts") >= F.lit(cutoff))],
-    )
+    _write_median_split(src, ev)
     cms_stream(spark, str(src), str(tmp / "out"), str(tmp / "ckpt"),
                value_col="user_id")
     sketch = current_cms(spark, str(tmp / "out"))
@@ -927,9 +924,6 @@ def q_card_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle. The streamed HLL estimate (== batch estimate, register-max
     union) is pinned by pytest; only the oracle-checkable exact columns
     are returned here."""
-    import tempfile
-    from pathlib import Path
-
     from otlp_cardinality_checker_spark.streaming.stream import (
         card_stream,
         current_cardinality,
@@ -938,16 +932,9 @@ def q_card_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    cutoff = ev.agg(
-        F.expr("percentile_approx(ts, 0.5)").alias("c")
-    ).collect()[0]["c"]
     tmp = _stream_scratch("cardstream_")
     src = tmp / "src"
-    _write_microbatch_sources(
-        src,
-        [ev.where(F.col("ts") < F.lit(cutoff)),
-         ev.where(F.col("ts") >= F.lit(cutoff))],
-    )
+    _write_median_split(src, ev)
     card_stream(spark, str(src), str(tmp / "out"), str(tmp / "ckpt"))
     return current_cardinality(spark, str(tmp / "out")).select(
         "event_type", "n_rows", "exact_cardinality"
@@ -961,9 +948,6 @@ def q_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the full table (union+sum merge, deterministic integer
     bucketing), so the oracle is the SAME batch SQL as quantile_sketch —
     a hash-exact streaming/batch equivalence, not an approximation."""
-    import tempfile
-    from pathlib import Path
-
     from otlp_cardinality_checker_spark.streaming.stream import (
         current_quantiles,
         quantile_stream,
@@ -1004,8 +988,6 @@ def q_conv_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus final sessions with session_end + gap < max(ts') - 45min (closed
     by event-time timeout in the availableNow no-data batch)."""
     import datetime as _dt
-    import tempfile
-    from pathlib import Path
 
     from otlp_cardinality_checker_spark.datagen import ensure_dataset
     from otlp_cardinality_checker_spark.streaming.stream import (
@@ -1496,9 +1478,6 @@ def q_loop_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged state is BIT-IDENTICAL to batch template_loops, so the oracle
     is the SAME truth-template SQL. A run-length state machine, not a
     union+sum sketch: the third hash-exact streaming/batch equivalence."""
-    import tempfile
-    from pathlib import Path
-
     from otlp_cardinality_checker_spark.functions.masking import (
         with_template,
     )
@@ -1815,9 +1794,6 @@ def q_attribution_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-split batches, no match can be evicted before its partner
     arrives, so the emitted pairs equal the batch join EXACTLY — the
     DuckDB oracle is the plain relational join."""
-    import tempfile
-    from pathlib import Path
-
     from otlp_cardinality_checker_spark.streaming.stream import (
         run_stream_stream_join,
     )
@@ -2285,9 +2261,6 @@ def q_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (type, hour-bucket) count partial; sums merge bit-identically to the
     batch stage-1 frame, and the batch tail runs on the merged state —
     hashes against the SAME DuckDB oracle as the batch cusum_drift."""
-    import tempfile
-    from pathlib import Path
-
     from otlp_cardinality_checker_spark.streaming.stream import (
         cusum_stream,
         current_cusum,
@@ -2296,16 +2269,9 @@ def q_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "event_type", "user_id", "value", "ts"
     )
-    cutoff = ev.agg(
-        F.expr("percentile_approx(ts, 0.5)").alias("c")
-    ).collect()[0]["c"]
     tmp = _stream_scratch("cusumstream_")
     src = tmp / "src"
-    _write_microbatch_sources(
-        src,
-        [ev.where(F.col("ts") < F.lit(cutoff)),
-         ev.where(F.col("ts") >= F.lit(cutoff))],
-    )
+    _write_median_split(src, ev)
     cusum_stream(spark, str(src), str(tmp / "out"), str(tmp / "ckpt"))
     return current_cusum(spark, str(tmp / "out"))
 
@@ -2629,25 +2595,15 @@ def q_trending_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming trending terms: two ts-range micro-batches write
     (bucket, token) count partials; sums merge + the batch rank tail —
     hashes against the SAME oracle as the batch trending_terms."""
-    import tempfile
-    from pathlib import Path
-
     from otlp_cardinality_checker_spark.streaming.stream import (
         current_trending,
         trending_stream,
     )
 
     turns = _transcripts(spark, sf_dir)
-    cutoff = turns.agg(
-        F.expr("percentile_approx(ts, 0.5)").alias("c")
-    ).collect()[0]["c"]
     tmp = _stream_scratch("trendstream_")
     src = tmp / "src"
-    _write_microbatch_sources(
-        src,
-        [turns.where(F.col("ts") < F.lit(cutoff)),
-         turns.where(F.col("ts") >= F.lit(cutoff))],
-    )
+    _write_median_split(src, turns)
     trending_stream(spark, str(src), str(tmp / "out"), str(tmp / "ckpt"))
     return current_trending(spark, str(tmp / "out"), k=5)
 
@@ -3023,25 +2979,15 @@ def q_markers_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (role, marker) counter partial; both counters are plain sums so the
     merged state is bit-identical to the batch audit — hashes against
     the SAME DuckDB oracle as the batch response_markers."""
-    import tempfile
-    from pathlib import Path
-
     from otlp_cardinality_checker_spark.streaming.stream import (
         current_markers,
         markers_stream,
     )
 
     turns = _transcripts(spark, sf_dir)
-    cutoff = turns.agg(
-        F.expr("percentile_approx(ts, 0.5)").alias("c")
-    ).collect()[0]["c"]
     tmp = _stream_scratch("markstream_")
     src = tmp / "src"
-    _write_microbatch_sources(
-        src,
-        [turns.where(F.col("ts") < F.lit(cutoff)),
-         turns.where(F.col("ts") >= F.lit(cutoff))],
-    )
+    _write_median_split(src, turns)
     markers_stream(spark, str(src), str(tmp / "out"), str(tmp / "ckpt"))
     return current_markers(spark, str(tmp / "out"))
 

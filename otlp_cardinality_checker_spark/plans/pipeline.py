@@ -1,30 +1,22 @@
-"""End-to-end batch plan: parse -> enrich -> route -> aggregate.
+"""The batch plan's shared prefix: parse -> enrich -> route.
 
 This is the Spark-native equivalent of the reference's ingest lifecycle
-(`/root/reference/internal/analyzer/logs.go:103-313` +
-`internal/storage/memory/store.go:252-317`): one declarative DataFrame plan
-per aggregate output, sharing the single parsed/enriched/routed scan.
-Catalyst handles partial aggregation (the reference's analyzer-side partial
-merge) and AQE handles runtime shuffle sizing.
+(`/root/reference/internal/analyzer/logs.go:103-313`): ``routed_turns``
+loads the transcripts and dimensions and returns one declarative routed
+frame, the input of the aggregates (`operators/aggregate.py`) and of the
+sink fan-out (`operators/route.write_sinks`). Catalyst handles partial
+aggregation (the reference's analyzer-side partial merge) and AQE
+handles runtime shuffle sizing.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import aggregate as agg
 from ..operators.enrich import enrich_turns
 from ..operators.parse import parse_turns
 from ..operators.route import route_turns
 from ..sources.transcripts import load_dims, load_transcripts
-
-
-@dataclass
-class PipelineResult:
-    routed: DataFrame
-    aggregates: dict[str, DataFrame] = field(default_factory=dict)
 
 
 def routed_turns(
@@ -40,25 +32,3 @@ def routed_turns(
     parsed = parse_turns(turns, engine=engine, patterns_yaml=patterns_yaml)
     enriched = enrich_turns(parsed, role_dim, tool_dim)
     return route_turns(enriched)
-
-
-def run_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    engine: str = "sql",
-    exact: bool = False,
-) -> PipelineResult:
-    routed = routed_turns(spark, sf_dir, engine=engine)
-    key_stats = agg.key_stats(routed, exact=exact)
-    result = PipelineResult(routed=routed)
-    result.aggregates = {
-        "key_stats": key_stats,
-        "service_stats": agg.service_stats(routed),
-        "template_stats": agg.template_stats(routed),
-        "attribute_catalog": agg.attribute_catalog(routed, exact=exact),
-        "watched_values": agg.watched_values(routed),
-        "active_series": agg.active_series(routed, exact=exact),
-        "high_cardinality": agg.high_cardinality_keys(key_stats),
-        "complexity": agg.metadata_complexity(key_stats),
-    }
-    return result

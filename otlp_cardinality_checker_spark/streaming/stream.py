@@ -3,16 +3,21 @@
 The reference is a continuously-ingesting accumulator with monotone state and
 snapshot/restore (`SURVEY.md §2.10`); the Spark-native equivalent is:
 
-* ``readStream`` over the transcripts table (file source here; Iceberg
-  streaming source on a real cluster),
+* ``readStream`` over the transcripts table, one file per micro-batch
+  (:func:`_source`; file source here, Iceberg streaming source on a real
+  cluster),
 * the SAME stage functions as the batch plan (parse/enrich/route are pure
   DataFrame transforms, so batch and streaming share one implementation),
-* ``foreachBatch`` doing idempotent partitioned writes to the three sinks
-  plus mergeable aggregate upserts, keyed by batch_id so a replayed batch
-  overwrites itself (exactly-once effect on top of checkpoint replay),
+* ``foreachBatch`` writing the three sinks plus a mergeable aggregate
+  partial through :func:`_write_batch`, which states the replay contract
+  every stream in this module relies on,
 * a **lineage table**: one row per (batch_id, sink) with routed-row counts
   and wall time — the per-partition/micro-stage metrics the north rule asks
   for.
+
+Every query is started by :func:`_start` as ``availableNow`` and waited for
+by :func:`_drain`, which stops it and raises ``TimeoutError`` once
+``DRAIN_TIMEOUT_S`` has passed.
 
 Kill/resume equivalence is tested in tests/test_streaming.py: running the
 stream to completion in one go, or killing it between micro-batches and
@@ -23,20 +28,111 @@ from __future__ import annotations
 
 import json
 import time
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..operators.enrich import enrich_turns
 from ..operators.parse import parse_turns
-from ..operators.route import SINK_COLUMNS, SINKS, route_turns
+from ..operators.route import SINKS, route_turns, split_sinks
 from ..sources.transcripts import load_dims, truth_paths
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp"
 )
+
+# longest a stream may run before _drain stops it and raises
+DRAIN_TIMEOUT_S = 300.0
+_POLL_S = 0.2
+
+
+def _source(spark: SparkSession, schema: str, src_dir: str) -> DataFrame:
+    """File stream over ``src_dir``, one file per micro-batch in mtime
+    order. Callers rely on that order: the registry wrappers' fixed batch
+    splits, and ``loop_stream``'s contiguous turn slices."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
+
+
+def _write_batch(df: DataFrame, batch_id: int, path: Path) -> None:
+    """Write ``df`` as the ``_batch_id=<batch_id>`` partition of ``path``,
+    replacing that partition and no other.
+
+    This is the module's replay contract: a checkpoint replay re-runs a
+    micro-batch under the same batch_id, so it overwrites its own earlier
+    output instead of double-inserting it (exactly-once effect on top of
+    checkpoint replay). Readers merge the partitions — the Spark analogue
+    of the reference store's merge-on-insert
+    (internal/storage/memory/store.go:252-317); on a real cluster this is
+    a MERGE INTO an Iceberg table keyed by batch_id.
+    """
+    (
+        df.withColumn("_batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .partitionBy("_batch_id")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(str(path))
+    )
+
+
+def _start(writer: DataStreamWriter, checkpoint_dir: str) -> StreamingQuery:
+    """Start ``writer`` as an availableNow query: it processes what the
+    source holds now, then terminates."""
+    return (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _drain(
+    query: StreamingQuery, stop_when: Callable[[], bool] | None = None
+) -> None:
+    """Wait until ``query`` terminates or ``stop_when()`` holds.
+
+    A failed query re-raises its error. The query is stopped on every way
+    out; past ``DRAIN_TIMEOUT_S`` this raises ``TimeoutError`` instead of
+    handing the caller partial state with the query still running.
+    """
+    deadline = time.monotonic() + DRAIN_TIMEOUT_S
+    try:
+        while not query.awaitTermination(_POLL_S):
+            if stop_when is not None and stop_when():
+                return
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"stream still running after {DRAIN_TIMEOUT_S:g} s"
+                )
+    finally:
+        if query.isActive:
+            query.stop()
+
+
+def _foreach_batch(
+    spark: SparkSession,
+    schema: str,
+    src_dir: str,
+    checkpoint_dir: str,
+    on_batch: Callable[[DataFrame, int], None],
+) -> int:
+    """Run ``on_batch(df, batch_id)`` on every micro-batch of ``src_dir``;
+    returns the number of micro-batches run."""
+    done: list[int] = []
+
+    def counted(df: DataFrame, batch_id: int) -> None:
+        on_batch(df, batch_id)
+        done.append(batch_id)
+
+    writer = _source(spark, schema, src_dir).writeStream.foreachBatch(counted)
+    _drain(_start(writer, checkpoint_dir))
+    return len(done)
 
 
 def _process_batch(
@@ -59,6 +155,7 @@ def _process_batch(
     routed.count()
     try:
         n_write_parts = 4
+        sinks = split_sinks(routed)
 
         def _one_sink(sink: str) -> dict:
             # ONE Spark job per sink: just the write. Per-partition lineage
@@ -70,18 +167,10 @@ def _process_batch(
             # cost was measured with. Spark writes no file for an empty
             # partition, so starvation is visible as missing files:
             # fewer footers than n_write_parts -> min_partition_rows = 0.
-            part = (
-                routed.where(F.col("sink") == sink)
-                .select(*SINK_COLUMNS[sink])
-                .repartition(n_write_parts, "conv_id")
-            )
-            # idempotent: partitioned by batch_id, replay overwrites itself
-            (
-                part.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("_batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(str(Path(out_dir) / f"sink_{sink}"))
+            _write_batch(
+                sinks[sink].repartition(n_write_parts, "conv_id"),
+                batch_id,
+                Path(out_dir) / f"sink_{sink}",
             )
             import pyarrow.parquet as pq
 
@@ -107,23 +196,14 @@ def _process_batch(
 
         def _state_snapshot() -> None:
             # mergeable aggregate state: one PARTIAL snapshot (counts + HLL
-            # sketch binaries + sample arrays) per micro-batch, keyed by
-            # batch_id so a checkpoint replay overwrites itself — the Spark
-            # analogue of the reference's store merge-on-insert
-            # (internal/storage/memory/store.go:252-317). On a real cluster
-            # this is a MERGE INTO an Iceberg state table.
-            (
-                snapshot_key_stats(routed)
-                .withColumn("_batch_id", F.lit(batch_id))
-                # deliberate single-file state write: the snapshot is
-                # O(#keys) rows (tiny), and one file per batch keeps the
-                # resume path's latest-batch read trivial; NOT a
-                # data-volume path
-                .coalesce(1)
-                .write.mode("overwrite")
-                .partitionBy("_batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(str(Path(out_dir) / "agg_state"))
+            # sketch binaries + sample arrays) per micro-batch. Deliberate
+            # single-file write: the snapshot is O(#keys) rows (tiny), and
+            # one file per batch keeps the resume path's latest-batch read
+            # trivial; NOT a data-volume path
+            _write_batch(
+                snapshot_key_stats(routed).coalesce(1),
+                batch_id,
+                Path(out_dir) / "agg_state",
             )
 
         # the three per-sink writes AND the state snapshot all depend only
@@ -152,7 +232,6 @@ def run_stream(
     sf_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
     stop_after_batches: int | None = None,
 ) -> int:
     """Run the streaming pipeline until the source is drained (or until
@@ -164,33 +243,25 @@ def run_stream(
     role_dim = role_dim.cache()
     tool_dim = tool_dim.cache()
 
-    executed = {"n": 0}
+    done: list[int] = []
 
     def on_batch(df: DataFrame, batch_id: int) -> None:
         _process_batch(df, batch_id, role_dim, tool_dim, out_dir)
-        executed["n"] += 1
+        done.append(batch_id)
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    query = _start(
+        _source(spark, TRANSCRIPT_SCHEMA, src_dir).writeStream.foreachBatch(
+            on_batch
+        ),
+        checkpoint_dir,
     )
     try:
-        while query.isActive:
-            if (
-                stop_after_batches is not None
-                and executed["n"] >= stop_after_batches
-            ):
-                query.stop()
-                break
-            time.sleep(0.2)
-        query.awaitTermination(300)
+        _drain(
+            query,
+            None
+            if stop_after_batches is None
+            else lambda: len(done) >= stop_after_batches,
+        )
     finally:
         # engine-reported per-micro-batch metrics (input rows, rows/sec,
         # per-stage durations) persisted next to the lineage table — the
@@ -218,9 +289,7 @@ def run_stream(
                 p for p in progress if p["batch_id"] not in seen
             )
             pfile.write_text(json.dumps(existing))
-        if query.isActive:
-            query.stop()
-    return executed["n"]
+    return len(done)
 
 
 def _ensure_stream_source(spark: SparkSession, sf_dir: str, src_dir: str) -> None:
@@ -250,6 +319,24 @@ def _compaction_watermark(out_dir: str) -> int:
     return -1
 
 
+def _merged_state(
+    spark: SparkSession, out_dir: str, watermark: int
+) -> DataFrame:
+    """Merge the per-batch partials above ``watermark`` with the current
+    compacted snapshot, if there is one."""
+    from ..operators.sessions import merge_snapshots
+
+    parts = [
+        spark.read.parquet(str(Path(out_dir) / "agg_state"))
+        .where(F.col("_batch_id") > watermark)
+        .drop("_batch_id")
+    ]
+    vdir = _current_snapshot_dir(out_dir)
+    if vdir is not None:
+        parts.append(spark.read.parquet(str(vdir / "data")))
+    return merge_snapshots(*parts)
+
+
 def compact_state(spark: SparkSession, out_dir: str) -> int:
     """Fold all per-batch partial snapshots into ONE compacted snapshot.
 
@@ -273,26 +360,17 @@ def compact_state(spark: SparkSession, out_dir: str) -> int:
     import os
     import shutil
 
-    from ..operators.sessions import merge_snapshots
-
-    state_dir = Path(out_dir) / "agg_state"
     comp_dir = Path(out_dir) / "agg_state_compacted"
     watermark = _compaction_watermark(out_dir)
     batch_ids = sorted(
         int(p.name.split("=")[1])
-        for p in state_dir.glob("_batch_id=*")
+        for p in (Path(out_dir) / "agg_state").glob("_batch_id=*")
         if int(p.name.split("=")[1]) > watermark
     )
     if not batch_ids:
         return watermark
-    fresh = spark.read.parquet(str(state_dir)).where(
-        F.col("_batch_id") > watermark
-    ).drop("_batch_id")
-    parts = [fresh]
     prev = _current_snapshot_dir(out_dir)
-    if prev is not None:
-        parts.append(spark.read.parquet(str(prev / "data")))
-    merged = merge_snapshots(*parts)
+    merged = _merged_state(spark, out_dir, watermark)
     new_watermark = max(batch_ids)
     vdir = comp_dir / f"v{new_watermark}"
     if vdir.exists():  # leftover from a crashed attempt — never published
@@ -325,19 +403,11 @@ def current_key_stats(spark: SparkSession, out_dir: str) -> DataFrame:
     often :func:`compact_state` ran in between. Batch partitions at or
     below the compaction watermark are excluded (replay safety).
     """
-    from ..operators.sessions import estimate, merge_snapshots
+    from ..operators.sessions import estimate
 
-    watermark = _compaction_watermark(out_dir)
-    partials = (
-        spark.read.parquet(str(Path(out_dir) / "agg_state"))
-        .where(F.col("_batch_id") > watermark)
-        .drop("_batch_id")
+    return estimate(
+        _merged_state(spark, out_dir, _compaction_watermark(out_dir))
     )
-    parts = [partials]
-    vdir = _current_snapshot_dir(out_dir)
-    if vdir is not None:
-        parts.append(spark.read.parquet(str(vdir / "data")))
-    return estimate(merge_snapshots(*parts))
 
 
 def read_lineage(out_dir: str):
@@ -361,7 +431,6 @@ def sessionize_stream(
     checkpoint_dir: str,
     gap: str = "30 minutes",
     watermark: str = "45 minutes",
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Custom stateful operator: event-time session-gap splitting per
     conversation via ``applyInPandasWithState`` (SURVEY §2.10 — the
@@ -449,9 +518,7 @@ def sessionize_stream(
             yield pd.DataFrame(closed)
 
     turns = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
+        _source(spark, TRANSCRIPT_SCHEMA, src_dir)
         .select("conv_id", "turn_idx", "tool", "ts")
         .withWatermark("ts", watermark)
     )
@@ -462,15 +529,12 @@ def sessionize_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    q = (
+    writer = (
         sessions.writeStream.outputMode("append")
         .format("parquet")
         .option("path", str(Path(out_dir) / "sessions"))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
+    _drain(_start(writer, checkpoint_dir))
 
 
 DOC_SCHEMA = (
@@ -483,7 +547,6 @@ def dedup_stream(
     src_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Dedup-at-ingest: incremental exact dedup with cross-batch digest
     state (first-seen wins).
@@ -491,25 +554,18 @@ def dedup_stream(
     Each micro-batch of documents is hashed (md5 of text), deduped within
     the batch (min doc_id per digest), then anti-joined against the
     accumulated digest-state table: digests already seen in an EARLIER
-    batch are duplicates. Decisions and new digests are written partitioned
-    by batch_id with dynamic partition overwrite, so a checkpoint replay of
-    a batch overwrites its own output instead of double-inserting — and the
-    state read excludes partitions >= the current batch_id, so a replayed
-    batch never sees its own earlier write as "prior state".
+    batch are duplicates. Decisions and new digests are written with
+    :func:`_write_batch`, and the state read excludes partitions >= the
+    current batch_id, so a replayed batch never sees its own earlier write
+    as "prior state".
 
     Scale shape: state is (digest, first_doc_id) — 16 bytes + id per unique
     document, shuffled only on the digest equi-join; the document text
-    never enters the state or the join. On a real cluster the state is an
-    Iceberg table maintained with MERGE INTO; here it is a partitioned
-    parquet directory with the identical replay-safety contract.
+    never enters the state or the join.
 
     Returns the number of micro-batches executed.
     """
-    from pathlib import Path as _P
-
-    state_dir = _P(out_dir) / "digest_state"
-    decisions_dir = _P(out_dir) / "decisions"
-    executed = {"n": 0}
+    state_dir = Path(out_dir) / "digest_state"
 
     def on_batch(df: DataFrame, batch_id: int) -> None:
         hashed = df.withColumn("text_hash", F.md5(F.col("text")))
@@ -541,40 +597,16 @@ def dedup_stream(
             (
                 F.col("_unseen") & (F.col("doc_id") == F.col("_batch_first"))
             ).cast("int").alias("is_first"),
-        ).withColumn("_batch_id", F.lit(batch_id))
-        (
-            decisions.write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(str(decisions_dir))
         )
+        _write_batch(decisions, batch_id, Path(out_dir) / "decisions")
         new_digests = (
             d.where(F.col("_unseen"))
             .select("text_hash", F.col("_batch_first").alias("first_doc_id"))
             .distinct()
-            .withColumn("_batch_id", F.lit(batch_id))
         )
-        (
-            new_digests.write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(str(state_dir))
-        )
-        executed["n"] += 1
+        _write_batch(new_digests, batch_id, state_dir)
 
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return executed["n"]
+    return _foreach_batch(spark, DOC_SCHEMA, src_dir, checkpoint_dir, on_batch)
 
 
 _DURATION_UNITS = {
@@ -615,7 +647,6 @@ def run_windowed_stream(
     checkpoint_dir: str,
     window_duration: str = "1 hour",
     watermark: str = "30 minutes",
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Event-time tumbling-window aggregate with a watermark (SURVEY §2.10
     / build-brief streaming semantics): append-mode output — a window row
@@ -624,13 +655,9 @@ def run_windowed_stream(
     growing it forever. At 10^12 events this bound on state is what keeps
     the stream runnable; the trade (documented Spark semantics) is that
     too-late data is lost rather than restated."""
-    events = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
     agg = (
-        events.withWatermark("ts", watermark)
+        _source(spark, EVENT_SCHEMA, src_dir)
+        .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window_duration), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -644,15 +671,12 @@ def run_windowed_stream(
             "total_value",
         )
     )
-    q = (
+    writer = (
         agg.writeStream.outputMode("append")
         .format("parquet")
         .option("path", str(Path(out_dir) / "windowed"))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
+    _drain(_start(writer, checkpoint_dir))
 
 
 def run_stream_stream_join(
@@ -663,7 +687,6 @@ def run_stream_stream_join(
     checkpoint_dir: str,
     horizon: str = "30 minutes",
     watermark: str = "2 hours",
-    max_files_per_trigger: int = 1,
     shuffle_partitions: int | None = None,
 ) -> None:
     """Watermarked STREAM-STREAM inner join (the last Structured
@@ -692,9 +715,7 @@ def run_stream_stream_join(
     if shuffle_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     left = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(left_src)
+        _source(spark, EVENT_SCHEMA, left_src)
         .select(
             F.col("event_id").alias("l_id"),
             F.col("user_id").alias("l_user"),
@@ -704,9 +725,7 @@ def run_stream_stream_join(
         .withWatermark("l_ts", watermark)
     )
     right = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(right_src)
+        _source(spark, EVENT_SCHEMA, right_src)
         .select(
             F.col("event_id").alias("r_id"),
             F.col("user_id").alias("r_user"),
@@ -727,15 +746,12 @@ def run_stream_stream_join(
         "inner",
     )
     try:
-        q = (
+        writer = (
             joined.writeStream.outputMode("append")
             .format("parquet")
             .option("path", str(Path(out_dir) / "joined"))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
+        _drain(_start(writer, checkpoint_dir))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
@@ -747,16 +763,11 @@ def quantile_stream(
     checkpoint_dir: str,
     value_col: str = "n_chars",
     group_col: str = "lang",
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Streaming quantiles via the mergeable octave-quarter sketch
     (operators/quantiles.py): each micro-batch contributes ONE partial —
-    its (group, bucket_hi, cnt) histogram rows — written partitioned by
-    batch_id with dynamic overwrite, so a checkpoint replay of a batch
-    overwrites its own partial instead of double-counting (the same
-    replay-safety contract as dedup_stream's digest state and the
-    key-stats snapshots; on a real cluster: MERGE INTO an Iceberg state
-    table keyed by batch_id).
+    its (group, bucket_hi, cnt) histogram rows — written with
+    :func:`_write_batch`.
 
     Because the sketch merge is union + sum and the bucketing is
     deterministic integer arithmetic, the merged streaming state is
@@ -774,33 +785,14 @@ def quantile_stream(
     """
     from ..operators.quantiles import quantile_partials
 
-    partials_dir = Path(out_dir) / "quantile_partials"
-    executed = {"n": 0}
-
     def on_batch(df: DataFrame, batch_id: int) -> None:
-        (
-            quantile_partials(df, value_col, group_col)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(str(partials_dir))
+        _write_batch(
+            quantile_partials(df, value_col, group_col),
+            batch_id,
+            Path(out_dir) / "quantile_partials",
         )
-        executed["n"] += 1
 
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return executed["n"]
+    return _foreach_batch(spark, DOC_SCHEMA, src_dir, checkpoint_dir, on_batch)
 
 
 def current_quantiles(
@@ -825,14 +817,12 @@ def cms_stream(
     out_dir: str,
     checkpoint_dir: str,
     value_col: str = "user_id",
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Streaming count-min sketch: each micro-batch contributes its
-    (depth, bucket, count) counter table (operators/cms.py), written
-    partitioned by batch_id with dynamic overwrite — the identical
-    replay-safety + hash-exactness story as quantile_stream: CMS merge is
-    cell-wise addition, so the merged streaming state is BIT-IDENTICAL to
-    the batch sketch, and estimates hash-match a batch SQL oracle.
+    (depth, bucket, count) counter table (operators/cms.py), written with
+    :func:`_write_batch`. CMS merge is cell-wise addition, so the merged
+    streaming state is BIT-IDENTICAL to the batch sketch, and estimates
+    hash-match a batch SQL oracle.
 
     Scale shape: state grows by <= depth*width (4x256) rows per batch and
     compacts by re-aggregation on read; raw values never enter state.
@@ -840,33 +830,14 @@ def cms_stream(
     """
     from ..operators.cms import cms_build
 
-    partials_dir = Path(out_dir) / "cms_partials"
-    executed = {"n": 0}
-
     def on_batch(df: DataFrame, batch_id: int) -> None:
-        (
-            cms_build(df, value_col)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(str(partials_dir))
+        _write_batch(
+            cms_build(df, value_col), batch_id, Path(out_dir) / "cms_partials"
         )
-        executed["n"] += 1
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
+    return _foreach_batch(
+        spark, EVENT_SCHEMA, src_dir, checkpoint_dir, on_batch
     )
-    q = (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return executed["n"]
 
 
 def current_cms(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -889,13 +860,11 @@ def loop_stream(
     src_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Streaming stuck-agent loop detection: each micro-batch of
     (conv_id, turn_idx, template) turns contributes one per-conversation
     run-summary partial (operators/conversation.loop_partials), written
-    partitioned by batch_id with dynamic overwrite — the same
-    replay-safety contract as the sketch streams.
+    with :func:`_write_batch`.
 
     Unlike the quantile/CMS partials, run-length state is NOT union+sum:
     a template run can span a micro-batch boundary. The partial therefore
@@ -909,35 +878,16 @@ def loop_stream(
     a global turn_idx slice), which availableNow + ordered source files
     provides. Returns the number of micro-batches executed.
     """
-    partials_dir = Path(out_dir) / "loop_partials"
-    executed = {"n": 0}
-
     from ..operators.conversation import loop_partials
 
     def on_batch(df: DataFrame, batch_id: int) -> None:
-        (
-            loop_partials(df)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(str(partials_dir))
+        _write_batch(
+            loop_partials(df), batch_id, Path(out_dir) / "loop_partials"
         )
-        executed["n"] += 1
 
-    stream = (
-        spark.readStream.schema(TURN_TEMPLATE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
+    return _foreach_batch(
+        spark, TURN_TEMPLATE_SCHEMA, src_dir, checkpoint_dir, on_batch
     )
-    q = (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return executed["n"]
 
 
 def current_loops(
@@ -1026,13 +976,10 @@ def card_stream(
     checkpoint_dir: str,
     key_col: str = "event_type",
     value_col: str = "user_id",
-    lg_k: int = 12,
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Streaming per-key cardinality — the package's namesake signal as a
     stream.  Each micro-batch contributes TWO mergeable partials per key,
-    both written partitioned by batch_id with dynamic overwrite (the
-    standard replay-safety contract of this module):
+    both written with :func:`_write_batch`:
 
     * EXACT state: the distinct (key, value-digest) rows the batch saw.
       The merge monoid is distinct-union (idempotent under checkpoint
@@ -1042,11 +989,12 @@ def card_stream(
       stringified value (NULL_SENTINEL for null), so raw values never
       enter state and null is counted as one value, matching the batch
       key_stats convention.
-    * SKETCH state: a per-key HLL partial (``hll_sketch_agg``, lgK=12).
-      HLL union is register-wise max, so the streamed union is exactly
-      the batch sketch over the same rows (two-stage == single-stage is
-      pinned by test_salted_hll_equals_unsalted); the streamed ESTIMATE
-      therefore equals the batch estimate, not approximately.
+    * SKETCH state: a per-key HLL partial (``hll_sketch_agg`` at the
+      batch path's ``aggregate.HLL_LG_K``). HLL union is register-wise
+      max, so the streamed union is exactly the batch sketch over the
+      same rows (two-stage == single-stage is pinned by
+      test_salted_hll_equals_unsalted); the streamed ESTIMATE therefore
+      equals the batch estimate, not approximately.
 
     Scale shape: the exact path's state grows with TRUE per-key
     cardinality (16-byte digests); the sketch path grows by <= #keys x
@@ -1058,60 +1006,31 @@ def card_stream(
 
     Returns the number of micro-batches executed.
     """
+    from ..operators.aggregate import HLL_LG_K
     from ..operators.checksum import NULL_SENTINEL
 
-    digests_dir = Path(out_dir) / "card_digests"
-    sketches_dir = Path(out_dir) / "card_sketches"
-    executed = {"n": 0}
-
     def on_batch(df: DataFrame, batch_id: int) -> None:
-        vdigest = F.md5(
-            F.coalesce(
-                F.col(value_col).cast("string"), F.lit(NULL_SENTINEL)
-            )
+        value = F.coalesce(
+            F.col(value_col).cast("string"), F.lit(NULL_SENTINEL)
         )
-        (
-            df.select(F.col(key_col), vdigest.alias("vdigest"))
-            .distinct()
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(str(digests_dir))
+        _write_batch(
+            df.select(F.col(key_col), F.md5(value).alias("vdigest"))
+            .distinct(),
+            batch_id,
+            Path(out_dir) / "card_digests",
         )
-        (
-            df.groupBy(key_col)
-            .agg(
-                F.hll_sketch_agg(
-                    F.coalesce(
-                        F.col(value_col).cast("string"),
-                        F.lit(NULL_SENTINEL),
-                    ),
-                    lg_k,
-                ).alias("sketch"),
+        _write_batch(
+            df.groupBy(key_col).agg(
+                F.hll_sketch_agg(value, HLL_LG_K).alias("sketch"),
                 F.count(F.lit(1)).alias("n_rows"),
-            )
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(str(sketches_dir))
+            ),
+            batch_id,
+            Path(out_dir) / "card_sketches",
         )
-        executed["n"] += 1
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
+    return _foreach_batch(
+        spark, EVENT_SCHEMA, src_dir, checkpoint_dir, on_batch
     )
-    q = (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return executed["n"]
 
 
 def current_cardinality(
@@ -1150,16 +1069,14 @@ def markers_stream(
     out_dir: str,
     checkpoint_dir: str,
     markers: tuple[str, ...] | None = None,
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Streaming refusal/failure marker audit: each micro-batch writes
     its (role, marker, n_matched, role_turns) partial table
     (operators/conversation.response_markers without the share column —
-    counts only), partitioned by batch_id with dynamic overwrite for
-    replay safety. Both counters are plain sums, so the merged streaming
-    state is BIT-IDENTICAL to the batch audit and the final shares
-    hash-match the batch DuckDB oracle — the same partial→merge contract
-    as quantile_stream / cms_stream.
+    counts only) with :func:`_write_batch`. Both counters are plain sums,
+    so the merged streaming state is BIT-IDENTICAL to the batch audit and
+    the final shares hash-match the batch DuckDB oracle — the same
+    partial→merge contract as quantile_stream / cms_stream.
 
     Scale shape: state grows by <= #roles x #markers rows per batch
     (dozens); raw turn text never enters state. Returns the number of
@@ -1168,34 +1085,19 @@ def markers_stream(
     from ..operators.conversation import DEFAULT_MARKERS, response_markers
 
     ms = markers if markers is not None else DEFAULT_MARKERS
-    partials_dir = Path(out_dir) / "marker_partials"
-    executed = {"n": 0}
 
     def on_batch(df: DataFrame, batch_id: int) -> None:
-        (
-            response_markers(df, markers=ms)
-            .select("role", "marker", "n_matched", "role_turns")
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(str(partials_dir))
+        _write_batch(
+            response_markers(df, markers=ms).select(
+                "role", "marker", "n_matched", "role_turns"
+            ),
+            batch_id,
+            Path(out_dir) / "marker_partials",
         )
-        executed["n"] += 1
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
+    return _foreach_batch(
+        spark, TRANSCRIPT_SCHEMA, src_dir, checkpoint_dir, on_batch
     )
-    q = (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return executed["n"]
 
 
 def current_markers(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1227,14 +1129,11 @@ def cusum_stream(
     checkpoint_dir: str,
     group_col: str = "event_type",
     window: str = "1 hour",
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Streaming CUSUM state: each micro-batch contributes its
     (group, hour-bucket, n_events) COUNT partial — plain sums, so the
     merged state is bit-identical to the batch monitor's stage-1 frame —
-    written partitioned by batch_id with dynamic overwrite (the
-    replay-safety contract shared by quantile_stream / cms_stream /
-    markers_stream; on a real cluster: MERGE INTO keyed by batch_id).
+    written with :func:`_write_batch`.
 
     `current_cusum` then runs the EXACT batch tail
     (operators/anomaly.cusum_from_buckets) over the merged buckets, so
@@ -1245,38 +1144,22 @@ def cusum_stream(
     Scale shape: state grows by <= (#groups x #buckets-touched) rows per
     batch; raw events never enter state. Returns micro-batches executed.
     """
-    partials_dir = Path(out_dir) / "cusum_partials"
-    executed = {"n": 0}
 
     def on_batch(df: DataFrame, batch_id: int) -> None:
-        (
+        _write_batch(
             df.select(
                 F.col(group_col).alias("grp"),
                 F.window(F.col("ts"), window).start.alias("bucket"),
             )
             .groupBy("grp", "bucket")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(str(partials_dir))
+            .agg(F.count(F.lit(1)).alias("n_events")),
+            batch_id,
+            Path(out_dir) / "cusum_partials",
         )
-        executed["n"] += 1
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
+    return _foreach_batch(
+        spark, EVENT_SCHEMA, src_dir, checkpoint_dir, on_batch
     )
-    q = (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return executed["n"]
 
 
 def current_cusum(
@@ -1300,12 +1183,11 @@ def trending_stream(
     src_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Streaming trending-terms state: each micro-batch writes its
     (bucket, token) COUNT partial (the tokenization + hash-agg of
-    text_analysis.trending_terms' stage 1) — plain sums, batch_id
-    dynamic overwrite, the module's standard partial->merge contract.
+    text_analysis.trending_terms' stage 1) with :func:`_write_batch` —
+    plain sums, the module's standard partial->merge contract.
     `current_trending` merges and runs the batch rank tail, so the
     streamed leaderboard is bit-identical to the batch operator over
     the union of batches.
@@ -1313,8 +1195,6 @@ def trending_stream(
     Scale shape: state grows by <= (buckets x per-bucket vocabulary)
     rows per batch; raw text never enters state.
     """
-    partials_dir = Path(out_dir) / "trending_partials"
-    executed = {"n": 0}
 
     def on_batch(df: DataFrame, batch_id: int) -> None:
         toks = F.filter(
@@ -1322,35 +1202,21 @@ def trending_stream(
                     "[^a-z]+"),
             lambda t: F.length(t) >= 3,
         )
-        (
+        _write_batch(
             df.select(
                 F.date_trunc("hour", F.col("ts")).alias("bucket"),
                 F.explode_outer(toks).alias("tok"),
             )
             .where(F.col("tok").isNotNull())
             .groupBy("bucket", "tok")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(str(partials_dir))
+            .agg(F.count(F.lit(1)).alias("n")),
+            batch_id,
+            Path(out_dir) / "trending_partials",
         )
-        executed["n"] += 1
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
+    return _foreach_batch(
+        spark, TRANSCRIPT_SCHEMA, src_dir, checkpoint_dir, on_batch
     )
-    q = (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return executed["n"]
 
 
 def current_trending(

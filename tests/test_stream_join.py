@@ -13,14 +13,18 @@ SF = "/root/testdata/sf0.01"
 
 
 def _write_batches(src: Path, frames: list[pd.DataFrame]) -> None:
+    import os
     import time
 
     src.mkdir(parents=True, exist_ok=True)
+    now = time.time()
     for i, pdf in enumerate(frames):
-        if i:
-            time.sleep(1.2)  # mtime order == micro-batch order
         pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        pdf.to_parquet(src / f"part{i}.parquet", index=False)
+        path = src / f"part{i}.parquet"
+        pdf.to_parquet(path, index=False)
+        # mtime order == micro-batch order: 2 s apart, in the past
+        mt = now - 2.0 * (len(frames) - i)
+        os.utime(path, (mt, mt))
 
 
 def _rows(user, *specs):

@@ -6,10 +6,22 @@ from checkpoint: all sinks must be byte-identical.
 
 from __future__ import annotations
 
+import os
+import time
+
 import pandas as pd
 import pytest
 
 SF = "/root/testdata/sf0.001"
+
+
+def _stamp_mtimes(*paths) -> None:
+    """Give ``paths`` increasing mtimes, 2 s apart and in the past: the
+    file source takes one file per micro-batch in mtime order."""
+    now = time.time()
+    for i, p in enumerate(paths):
+        mt = now - 2.0 * (len(paths) - i)
+        os.utime(p, (mt, mt))
 
 
 def _read_all_sinks(spark, out_dir):
@@ -85,8 +97,6 @@ def test_watermark_drops_late_events(spark, tmp_path):
     """Watermarked event-time window (append mode): a window row finalizes
     once the watermark passes its end, and an event arriving LATER than
     the watermark is dropped — bounded state, documented loss semantics."""
-    import time as _time
-
     import pandas as pd
 
     from otlp_cardinality_checker_spark.streaming.stream import (
@@ -116,13 +126,13 @@ def test_watermark_drops_late_events(spark, tmp_path):
             (4, "click", 4, 1.0, "2026-01-01 13:00:00"),
         ],
     )
-    _time.sleep(1.1)  # file mtime order == processing order
     # batch 1: the advanced watermark takes effect; the 10:00 window
     # finalizes during THIS batch (watermark application lags one batch)
     write_batch("b.parquet", [(6, "click", 6, 1.0, "2026-01-01 13:30:00")])
-    _time.sleep(1.1)
     # batch 2: a LATE event for the already-finalized 10:00 window
     write_batch("c.parquet", [(5, "click", 5, 99.0, "2026-01-01 10:30:00")])
+    # file mtime order == processing order
+    _stamp_mtimes(*(src / f for f in ("a.parquet", "b.parquet", "c.parquet")))
 
     out = tmp_path / "out"
     run_windowed_stream(
@@ -146,8 +156,6 @@ def test_sessionize_stream_semantics(spark, tmp_path):
 
     gap=30min, watermark=45min, final watermark = 02:30 - 45min = 01:45;
     a trailing session emits iff end + 30min < 01:45."""
-    import time
-
     from otlp_cardinality_checker_spark.streaming.stream import (
         sessionize_stream,
     )
@@ -175,8 +183,8 @@ def test_sessionize_stream_semantics(spark, tmp_path):
     src.mkdir()
     cutoff = t("01:00:15")
     pdf[pdf.ts < cutoff][cols].to_parquet(src / "a.parquet", index=False)
-    time.sleep(1.2)
     pdf[pdf.ts >= cutoff][cols].to_parquet(src / "b.parquet", index=False)
+    _stamp_mtimes(src / "a.parquet", src / "b.parquet")
 
     sessionize_stream(
         spark, str(src), str(tmp_path / "out"), str(tmp_path / "ckpt"),
@@ -199,8 +207,6 @@ def test_sessionize_stream_checkpoint_restart(spark, tmp_path):
     only batch A on disk, then add batch B and run AGAIN from the same
     checkpoint — the union of outputs must equal the single-run result
     (state for open sessions is restored, not rebuilt)."""
-    import time
-
     from otlp_cardinality_checker_spark.streaming.stream import (
         sessionize_stream,
     )
@@ -230,12 +236,13 @@ def test_sessionize_stream_checkpoint_restart(spark, tmp_path):
         src.mkdir(parents=True)
         kw = dict(gap="30 minutes", watermark="45 minutes")
         pdf[pdf.ts < cutoff][cols].to_parquet(src / "a.parquet", index=False)
+        # b (written below, after any first run) is newer than a
+        _stamp_mtimes(src / "a.parquet")
         if restart:
             sessionize_stream(
                 spark, str(src), str(workdir / "out"),
                 str(workdir / "ckpt"), **kw,
             )
-        time.sleep(1.2)
         pdf[pdf.ts >= cutoff][cols].to_parquet(src / "b.parquet", index=False)
         sessionize_stream(
             spark, str(src), str(workdir / "out"), str(workdir / "ckpt"), **kw
@@ -259,8 +266,6 @@ def test_dedup_stream_incremental_resume(spark, tmp_path):
     duplicates of phase-1 texts and re-runs with the SAME checkpoint — only
     the new file is processed, and its rows must be flagged as duplicates
     against the persisted digest state."""
-    import time
-
     import pandas as pd
 
     from otlp_cardinality_checker_spark.streaming.stream import dedup_stream
@@ -277,13 +282,13 @@ def test_dedup_stream_incremental_resume(spark, tmp_path):
     pd.DataFrame([doc(1, "aaa"), doc(2, "aaa"), doc(3, "bbb")]).to_parquet(
         src / "f0.parquet", index=False
     )
-    time.sleep(1.2)
     pd.DataFrame([doc(4, "ccc"), doc(5, "bbb")]).to_parquet(
         src / "f1.parquet", index=False
     )
+    # f2 (written below, after the first run) is newer than f1
+    _stamp_mtimes(src / "f0.parquet", src / "f1.parquet")
     assert dedup_stream(spark, str(src), out, ckpt) == 2
 
-    time.sleep(1.2)
     # batch 2 (after resume): duplicates of earlier texts + one new
     pd.DataFrame([doc(6, "aaa"), doc(7, "ddd")]).to_parquet(
         src / "f2.parquet", index=False
@@ -321,8 +326,6 @@ def test_loop_stream_monoid_merge_edges(spark, tmp_path):
     crafted boundary cases: a run spanning all three slices, a
     single-run slice stitched on both sides, null templates at a
     boundary, and a conversation absent from the middle slice."""
-    import pandas as pd
-
     from otlp_cardinality_checker_spark.operators.conversation import (
         loop_partials,
         template_loops,
@@ -483,8 +486,6 @@ def test_cusum_stream_equals_batch_and_replay_safe(spark, tmp_path):
     partition overwrite, no double counting)."""
     import shutil
 
-    import pyspark.sql.functions as F
-
     from otlp_cardinality_checker_spark.operators.anomaly import cusum_drift
     from otlp_cardinality_checker_spark.streaming.stream import (
         cusum_stream,
@@ -527,8 +528,6 @@ def test_cusum_stream_equals_batch_and_replay_safe(spark, tmp_path):
 def test_trending_stream_equals_batch_and_replay_safe(spark, tmp_path):
     import shutil
 
-    import pyspark.sql.functions as F
-
     from otlp_cardinality_checker_spark.operators.text_analysis import (
         trending_terms,
     )
@@ -567,3 +566,26 @@ def test_trending_stream_equals_batch_and_replay_safe(spark, tmp_path):
         tuple(r) for r in current_trending(spark, str(tmp_path / "out")).collect()
     )
     assert replayed == streamed
+
+
+def test_drain_stops_query_and_raises_past_deadline(monkeypatch):
+    """A query still running at the drain deadline is stopped and the
+    caller gets TimeoutError instead of partial state (Spark-free: the
+    query never terminates and never reports itself inactive)."""
+    from otlp_cardinality_checker_spark.streaming import stream
+
+    class StuckQuery:
+        isActive = True
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    monkeypatch.setattr(stream, "DRAIN_TIMEOUT_S", 0.05)
+    query = StuckQuery()
+    with pytest.raises(TimeoutError):
+        stream._drain(query)
+    assert query.stopped
