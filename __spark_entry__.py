@@ -759,10 +759,9 @@ def _write_microbatch_sources(src, frames, ts_cols=("ts",)) -> None:
                 f"harness cap ({_MICROBATCH_ROW_CAP}); this helper is for "
                 "gate-scale fixtures only — use a distributed write"
             )
-        for c in ts_cols:
-            if c in pdf.columns:
-                # Spark cannot read parquet TIMESTAMP(NANOS); pin to micros
-                pdf[c] = pdf[c].astype("datetime64[us]")
+        # Spark cannot read parquet TIMESTAMP(NANOS); pin to micros (on a
+        # copy: callers may pass slices of their own frames)
+        pdf = pdf.astype({c: "datetime64[us]" for c in ts_cols if c in pdf.columns})
         path = src / f"part{i}.parquet"
         pdf.to_parquet(path, index=False)
         # mtime order == micro-batch order; set it explicitly (2s apart,

@@ -141,7 +141,6 @@ def global_top_k(
     k: int,
     salt_col: str,
     rank_name: str = "rank",
-    n_salt: int = 16,  # kept for API stability; unused since the r6 soak
 ) -> DataFrame:
     """GLOBAL top-k with exact ranks 1..k, bounded at any scale.
 

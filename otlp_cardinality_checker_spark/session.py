@@ -17,6 +17,21 @@ def default_parallelism() -> int:
     return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
+def default_driver_memory() -> str:
+    """Half of the memory available now (``/proc/meminfo``), at least 1g.
+
+    In local mode the driver heap is the executors' heap too, but the
+    Python workers, off-heap buffers and any RAM-backed scratch
+    (``/dev/shm``) need the rest; a heap sized past physical memory lets
+    the JVM grow into an out-of-memory kill instead of a GC.
+    """
+    with open("/proc/meminfo") as fh:
+        avail_kb = next(
+            int(line.split()[1]) for line in fh if line.startswith("MemAvailable:")
+        )
+    return f"{max(1, avail_kb // 2**21)}g"
+
+
 def get_spark(
     app_name: str = "transcript-cardinality-pipeline",
     cores: int | None = None,
@@ -41,9 +56,15 @@ def get_spark(
         # one task per file. On a real cluster (128MB-1GB files) submit
         # with maxPartitionBytes=128m.
         .config("spark.sql.files.maxPartitionBytes", "16m")
-        # local mode: driver == executor; 32 concurrent tasks over millions
-        # of parsed rows need real heap or GC/spill serializes the job
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # local mode: driver == executor, so this is the whole job's heap
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
+        # generated-class cache (static, one per JVM): a report pass compiles
+        # ~115 distinct classes and a stream ~70; at the default 100 entries
+        # every warm pass evicts and recompiles ~80 of them
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")

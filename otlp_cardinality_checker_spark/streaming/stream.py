@@ -9,8 +9,9 @@ snapshot/restore (`SURVEY.md §2.10`); the Spark-native equivalent is:
 * the SAME stage functions as the batch plan (parse/enrich/route are pure
   DataFrame transforms, so batch and streaming share one implementation),
 * ``foreachBatch`` writing the three sinks plus a mergeable aggregate
-  partial through :func:`_write_batch`, which states the replay contract
-  every stream in this module relies on,
+  partial through :func:`_write_batch`: each micro-batch overwrites its
+  own ``_batch_id=<n>`` directory, the replay contract every stream in
+  this module relies on,
 * a **lineage table**: one row per (batch_id, sink) with routed-row counts
   and wall time — the per-partition/micro-stage metrics the north rule asks
   for.
@@ -62,24 +63,24 @@ def _source(spark: SparkSession, schema: str, src_dir: str) -> DataFrame:
 
 
 def _write_batch(df: DataFrame, batch_id: int, path: Path) -> None:
-    """Write ``df`` as the ``_batch_id=<batch_id>`` partition of ``path``,
-    replacing that partition and no other.
+    """Write ``df`` into ``path/_batch_id=<batch_id>``, replacing that
+    directory and no other.
 
     This is the module's replay contract: a checkpoint replay re-runs a
     micro-batch under the same batch_id, so it overwrites its own earlier
     output instead of double-inserting it (exactly-once effect on top of
-    checkpoint replay). Readers merge the partitions — the Spark analogue
-    of the reference store's merge-on-insert
+    checkpoint replay). Readers of ``path`` discover ``_batch_id`` as a
+    partition column and merge the partitions — the Spark analogue of the
+    reference store's merge-on-insert
     (internal/storage/memory/store.go:252-317); on a real cluster this is
     a MERGE INTO an Iceberg table keyed by batch_id.
+
+    The directory is the write's own target, so the plan carries no
+    ``lit(batch_id)`` column (a per-batch literal is inlined into the
+    generated code and forces fresh classes every batch) and needs no
+    dynamic-partition sort or staging rename.
     """
-    (
-        df.withColumn("_batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("_batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(str(path))
-    )
+    df.write.mode("overwrite").parquet(str(path / f"_batch_id={batch_id}"))
 
 
 def _start(writer: DataStreamWriter, checkpoint_dir: str) -> StreamingQuery:

@@ -66,7 +66,8 @@ def main() -> int:
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
 
-    spark = get_spark()
+    # a codegen compile failure raises instead of running interpreted
+    spark = get_spark(extra_conf={"spark.sql.codegen.fallback": "false"})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -11,7 +11,12 @@ sys.path.insert(0, "/root/repo")
 def spark():
     from otlp_cardinality_checker_spark.session import get_spark
 
-    s = get_spark(app_name="pytest", shuffle_partitions=8)
+    # a codegen compile failure raises instead of running interpreted
+    s = get_spark(
+        app_name="pytest",
+        shuffle_partitions=8,
+        extra_conf={"spark.sql.codegen.fallback": "false"},
+    )
     yield s
     s.stop()
 
