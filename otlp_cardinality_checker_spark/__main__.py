@@ -18,6 +18,8 @@ maps 1:1:
 
 All subcommands accept `--sf-dir` (default `$SPARK_GRAFT_SF_DIR` or
 /root/testdata/sf0.01) and `--cores`.
+`--cores` defaults to `$SPARK_GRAFT_CPUS`, else the cores this process
+may run on.
 """
 
 from __future__ import annotations
@@ -148,7 +150,7 @@ def cmd_curate(args) -> int:
         ).collect()
     ]
     if args.out:
-        sampled.repartition(max(args.cores, 1)).write.mode(
+        sampled.repartition(spark.sparkContext.defaultParallelism).write.mode(
             "overwrite"
         ).parquet(args.out)
     # n_curated is exactly derivable from the audit (same keep expression
@@ -387,7 +389,7 @@ def main(argv: list[str] | None = None) -> int:
         "--sf-dir",
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"),
     )
-    ap.add_argument("--cores", type=int, default=8)
+    ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--engine", choices=("sql", "pandas"), default="sql")
     ap.add_argument("--patterns", help="user mask-pattern YAML override")
     sub = ap.add_subparsers(dest="cmd", required=True)

@@ -39,7 +39,10 @@ CARDINALITY_UID = 500  # uid modulus (mirrors scripts/test-hll-cardinality.sh)
 # fixed residues mod lcm(100, 20), so only 170 of the 500 residues are ever
 # emitted — a known constant for oracle checks, stable for n >= 4000.
 EXPECTED_UID_CARDINALITY = 170
-DATA_ROOT = Path(os.environ.get("SPARK_GRAFT_DATA_ROOT", "/root/repo/.data"))
+DATA_ROOT = Path(
+    os.environ.get("SPARK_GRAFT_DATA_ROOT")
+    or Path(__file__).resolve().parent.parent / ".data"
+)
 
 ROLES = ("user", "assistant", "system", "tool")
 # Weights ~= 40/40/5/15 with `assistant` as the hot key (FIXTURES.md §1).

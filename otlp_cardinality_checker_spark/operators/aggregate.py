@@ -11,11 +11,13 @@ Cardinality estimation has two modes:
   queries (estimates can never hash-match across engines) and mirrors the
   reference's exact region for <=10 uniques (`metadata.go:442-450`).
 * ``exact=False`` — **salted two-stage HLL**: stage 1 groups by
-  ``(group, salt = pmod(hash(conv_id), n_salt))`` computing
-  ``hll_sketch_agg`` partials, stage 2 unions with ``hll_union_agg``.
-  Mergeability of the sketch (reference `hll.go:156-168`) is what makes the
-  salted split exact-in-distribution; the salt defeats hot-key skew (few
-  roles/tools at 10^12 turns) by fanning one hot group across n_salt
+  ``(group, salt = pmod(hash(value), N_SALT), value)`` and computes
+  ``hll_sketch_agg`` partials per (group, salt), stage 2 unions them with
+  ``hll_union_agg`` (mergeable sketches, reference `hll.go:156-168`).
+  The salt hashes the attribute value, so the salts split a group's
+  distinct values into disjoint sets: that is why per-salt exact distinct
+  counts sum to the exact count and per-salt sketches union exactly. It
+  also fans one hot group (few roles/tools at 10^12 turns) across N_SALT
   reducers.
 
 First-N value samples: the reference keeps the first 10 unique values and
@@ -33,6 +35,22 @@ SAMPLE_CAP = 10
 WATCHED_VALUE_CAP = 10_000
 HIGH_CARDINALITY_DEFAULT_THRESHOLD = 100
 HLL_LG_K = 12  # ~1.6% rel. err (reference uses precision 10 ≈ same class)
+N_SALT = 16  # salts per group in every two-stage aggregate (see _salt)
+_TS_FORMAT = "yyyy-MM-dd HH:mm:ss"
+_KEY_STATS_COLUMNS = (
+    "sink", "key", "count", "est_cardinality", "value_samples",
+    "has_invalid_utf8", "pct",
+)
+_CATALOG_COLUMNS = (
+    "key", "count", "est_cardinality", "signal_types", "value_samples",
+    "first_seen", "last_seen", "has_invalid_utf8",
+)
+
+
+def _salt(col: str) -> F.Column:
+    """The salt of every two-stage aggregate here, ``pmod(hash(col),
+    N_SALT)``. N_SALT is read at call time, so a test can change it."""
+    return F.pmod(F.hash(col), F.lit(N_SALT))
 
 
 def exploded_attrs(
@@ -57,47 +75,6 @@ def exploded_attrs(
     ).where(F.col("key").isNotNull())
 
 
-def _samples_expr(value: str = "value") -> F.Column:
-    return F.slice(F.sort_array(F.collect_set(value)), 1, SAMPLE_CAP)
-
-
-def bounded_min_samples(
-    attrs: DataFrame,
-    group_cols: tuple[str, ...],
-    cap: int = SAMPLE_CAP,
-    n_salt: int = 16,
-    joined: bool = True,
-) -> DataFrame:
-    """Min-`cap` distinct values per group with BOUNDED executor memory.
-
-    ``collect_set`` buffers every distinct value of a group before the
-    min-10 slice — an OOM risk for a 10^9-cardinality key at the 10^12-turn
-    target. This is the two-stage shape instead: distinct -> salted local
-    top-`cap` (row_number streams over a sort, nothing buffers) -> global
-    top-`cap` over at most ``n_salt * cap`` rows per group -> tiny
-    collect_list. Every operator is streaming or bounded; sorts spill.
-    """
-    cols = list(group_cols)
-    d = attrs.select(*cols, "value").distinct()
-    w1 = Window.partitionBy(*cols, "_salt").orderBy("value")
-    w2 = Window.partitionBy(*cols).orderBy("value")
-    return (
-        d.withColumn("_salt", F.pmod(F.hash("value"), F.lit(n_salt)))
-        .withColumn("_r", F.row_number().over(w1))
-        .where(F.col("_r") <= cap)
-        .withColumn("_r2", F.row_number().over(w2))
-        .where(F.col("_r2") <= cap)
-        .groupBy(*cols)
-        .agg(
-            (
-                F.array_join(F.array_sort(F.collect_list("value")), "|")
-                if joined
-                else F.array_sort(F.collect_list("value"))
-            ).alias("value_samples" if joined else "samples")
-        )
-    )
-
-
 def sink_totals(routed: DataFrame) -> DataFrame:
     return routed.groupBy("sink").agg(F.count(F.lit(1)).alias("sink_rows"))
 
@@ -108,22 +85,25 @@ def salted_top_k(
     order_cols: tuple,
     k: int = 1,
     salt_col: str = "value",
-    n_salt: int = 16,
     keep_rank: bool = False,
 ) -> DataFrame:
     """Two-stage top-k per group with bounded reducers (the shared shape
-    behind watched_values, key_skew, and similarity.label_outliers — use
-    it for top-k with k > 1 or when rank is needed; a pure per-group
-    argmax is cheaper as one max_by hash agg, see
+    behind watched_values, key_skew, sampling, and similarity's per-query
+    and per-label ranks — use it for top-k with k > 1 or when rank is
+    needed; a pure per-group argmax is cheaper as one max_by hash agg, see
     graph.survivor_by_score): rank within (group, salt) first — any
-    global top-k row is in its salt's top-k — so the final window sorts at
-    most n_salt * k rows per group instead of the group's full partition.
-    Helper columns are dropped (``keep_rank=True`` keeps the final rank as
-    ``rank``); ties must be fully broken by order_cols for determinism."""
+    global top-k row is in its salt's top-k.
+
+    Memory bound: stage 1 keeps at most k rows per (group, salt), so the
+    final window sorts at most ``N_SALT * k`` rows per group, however
+    large the group; the stage-1 windows are sorts, which spill (pinned
+    by test_salted_top_k_equals_global_window). Helper columns are
+    dropped (``keep_rank=True`` keeps the final rank as ``rank``); ties
+    must be fully broken by order_cols for determinism."""
     w1 = Window.partitionBy(*partition_cols, "_salt").orderBy(*order_cols)
     w2 = Window.partitionBy(*partition_cols).orderBy(*order_cols)
     out = (
-        df.withColumn("_salt", F.pmod(F.hash(salt_col), F.lit(n_salt)))
+        df.withColumn("_salt", _salt(salt_col))
         .withColumn("_r", F.row_number().over(w1))
         .where(F.col("_r") <= k)
         .withColumn("_rank", F.row_number().over(w2))
@@ -155,7 +135,7 @@ def global_top_k(
       data-sized frame — the engine performs the two-stage top-k this
       helper used to hand-build with salts (the hand-built form measured
       4.3 s vs 0.2 s warm at 20M rows: its stage-1 shuffled ALL rows
-      into n_salt partitions, which WindowGroupLimit never does).
+      into N_SALT partitions, which WindowGroupLimit never does).
     * A bare ``Window.orderBy(...)`` is also optimized (limit pushdown,
       SPARK-37867) but keeps the empty partition spec, so WindowExec
       logs its "moving all data to a single partition" warning on every
@@ -181,8 +161,6 @@ def global_top_k(
 def value_grain(
     attrs: DataFrame,
     cols: list[str],
-    n_salt: int = 16,
-    with_ts: bool = True,
     with_sinks: bool = False,
 ) -> DataFrame:
     """Stage 1 of every bounded attribute aggregate: hash-agg DEDUP to the
@@ -195,30 +173,28 @@ def value_grain(
       shuffles and sorts every raw row; measured 30% slower end-to-end);
     * the row_number window then runs over DISTINCT values only —
       streaming over a much smaller sort, still nothing buffers;
-    * salt = hash(value) % n_salt: distinct values partition disjointly,
-      so per-salt exact distinct counts SUM to the global count, sketches
-      union exactly, and a hot key fans across n_salt reducers.
+    * the salt is :func:`_salt` of the value (see the module docstring).
     """
-    aggs = [F.count(F.lit(1)).alias("_vc")]
-    if with_ts:
-        aggs += [F.min("ts").alias("_tmin"), F.max("ts").alias("_tmax")]
+    aggs = [
+        F.count(F.lit(1)).alias("_vc"),
+        F.min("ts").alias("_tmin"),
+        F.max("ts").alias("_tmax"),
+    ]
     if with_sinks:
         aggs.append(F.collect_set("sink").alias("_vsinks"))
-    vals = attrs.groupBy(
-        *cols,
-        F.pmod(F.hash("value"), F.lit(n_salt)).alias("_salt"),
-        "value",
-    ).agg(*aggs)
+    vals = attrs.groupBy(*cols, _salt("value").alias("_salt"), "value").agg(
+        *aggs
+    )
     w = Window.partitionBy(*cols, "_salt").orderBy("value")
     return vals.withColumn("_dr", F.row_number().over(w))
 
 
-def _partial_aggs(with_ts: bool = True) -> list[F.Column]:
+def _partial_aggs() -> list[F.Column]:
     """(group, _salt)-grain aggregates over a value_grain frame. The
     collect_set is guarded by the rank, so its buffer holds at most
     SAMPLE_CAP values per salt group; _dcard is exact per salt (rows are
     distinct values) and sums exactly across disjoint salts."""
-    aggs = [
+    return [
         F.sum("_vc").alias("_cnt"),
         F.count(F.lit(1)).alias("_dcard"),
         F.hll_sketch_agg("value", F.lit(HLL_LG_K)).alias("_hll"),
@@ -232,40 +208,77 @@ def _partial_aggs(with_ts: bool = True) -> list[F.Column]:
             SAMPLE_CAP,
         ).alias("_samples"),
         F.max(F.contains("value", F.lit("�"))).alias("_taint"),
+        F.min("_tmin").alias("_first"),
+        F.max("_tmax").alias("_last"),
     ]
-    if with_ts:
-        aggs += [F.min("_tmin").alias("_first"), F.max("_tmax").alias("_last")]
-    return aggs
 
 
-def attr_partials(routed: DataFrame, n_salt: int = 16) -> DataFrame:
+def attr_partials(routed: DataFrame) -> DataFrame:
     """Shared (sink, key, _salt) partial-aggregate frame.
 
     ONE exploded-attrs scan produces the partials BOTH :func:`key_stats`
-    (grain sink,key) and :func:`attribute_catalog` (grain key) fold from.
-    Two finals built from the returned frame do NOT share it by
-    themselves: each branch prunes its own aggregate list, the plans
-    differ and ReuseExchange never fires, so a consumer that needs both
-    grains must materialize once (see :func:`key_stats_and_catalog`).
+    (grain sink,key) and the catalog grain (key) fold from, and a session
+    snapshot (``sessions.snapshot_key_stats``) keeps. Two finals built
+    from the returned frame do NOT share it by themselves: each branch
+    prunes its own aggregate list, the plans differ and ReuseExchange
+    never fires, so a consumer that needs both grains must materialize
+    once (see :func:`key_stats_and_catalog`).
     """
     attrs = exploded_attrs(routed)
-    marked = value_grain(attrs, ["sink", "key"], n_salt=n_salt)
+    marked = value_grain(attrs, ["sink", "key"])
     return marked.groupBy("sink", "key", "_salt").agg(*_partial_aggs())
 
 
-def _merged_samples() -> F.Column:
+def _merged_samples(col: str = "_samples") -> F.Column:
+    """Min-SAMPLE_CAP of the sample arrays in ``col``: the min-10 of
+    per-part min-10s is the global min-10, so partials, snapshots and
+    streamed states all merge their samples with this one expression."""
     # built lazily: constructing a Column requires an active SparkContext,
     # which must not be an import-time prerequisite of this module
     return F.slice(
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("_samples")))),
+        F.array_sort(F.array_distinct(F.flatten(F.collect_list(col)))),
         1,
         SAMPLE_CAP,
     )
 
 
-def key_stats_and_catalog(
-    routed: DataFrame, n_salt: int = 16
-) -> tuple[DataFrame, DataFrame]:
+def _cardinality(exact: bool) -> F.Column:
+    # exact: salts partition values disjointly, so per-salt distinct
+    # counts sum to the distinct count (no count_distinct Expand)
+    if exact:
+        return F.sum("_dcard")
+    return F.hll_sketch_estimate(F.hll_union_agg("_hll"))
+
+
+def _fold_aggs(cardinality: F.Column, sinks: F.Column) -> list[F.Column]:
+    """The final fold of (group, _salt) partials, at any grain: every
+    column a catalog row carries, in _CATALOG_COLUMNS order. ``sinks`` is
+    the sorted array of the group's sinks. key_stats selects its columns
+    from the same list; the optimizer prunes the aggregates it drops."""
+    return [
+        F.sum("_cnt").alias("count"),
+        cardinality.alias("est_cardinality"),
+        F.array_join(sinks, "|").alias("signal_types"),
+        F.array_join(_merged_samples(), "|").alias("value_samples"),
+        F.date_format(F.min("_first"), _TS_FORMAT).alias("first_seen"),
+        F.date_format(F.max("_last"), _TS_FORMAT).alias("last_seen"),
+        F.max("_taint").alias("has_invalid_utf8"),
+    ]
+
+
+def _with_pct(stats: DataFrame, routed: DataFrame) -> DataFrame:
+    """key_stats rows from a (sink, key) fold: pct of the sink's rows
+    (reference `internal/analyzer/logs.go:262-277`)."""
+    return (
+        stats.join(F.broadcast(sink_totals(routed)), "sink")
+        .withColumn(
+            "pct", F.round(F.col("count") * 100.0 / F.col("sink_rows"), 4)
+        )
+        .select(*_KEY_STATS_COLUMNS)
+    )
+
+
+def key_stats_and_catalog(routed: DataFrame) -> tuple[DataFrame, DataFrame]:
     """key_stats (sink, key) AND attribute_catalog (key) off ONE scan.
 
     The two grains overlap, so the fold from the shared
@@ -285,92 +298,35 @@ def key_stats_and_catalog(
     sinks (shared values double-count) — sketches union exactly under any
     partitioning.
     """
-    partials = attr_partials(routed, n_salt=n_salt)
-    gs = partials.groupingSets([["sink", "key"], ["key"]], "sink", "key").agg(
-        F.grouping_id().alias("_gid"),
-        F.sum("_cnt").alias("count"),
-        F.hll_sketch_estimate(F.hll_union_agg("_hll")).alias("est_cardinality"),
-        F.array_join(F.sort_array(F.collect_set("sink")), "|").alias(
-            "signal_types"
-        ),
-        F.array_join(_merged_samples(), "|").alias("value_samples"),
-        F.date_format(F.min("_first"), "yyyy-MM-dd HH:mm:ss").alias("first_seen"),
-        F.date_format(F.max("_last"), "yyyy-MM-dd HH:mm:ss").alias("last_seen"),
-        F.max("_taint").alias("has_invalid_utf8"),
-    ).localCheckpoint(eager=False)
-    totals = sink_totals(routed)
-    key_stats_df = (
-        gs.where(F.col("_gid") == 0)
-        .join(F.broadcast(totals), "sink")
-        .withColumn(
-            "pct", F.round(F.col("count") * 100.0 / F.col("sink_rows"), 4)
+    gs = (
+        attr_partials(routed)
+        .groupingSets([["sink", "key"], ["key"]], "sink", "key")
+        .agg(
+            F.grouping_id().alias("_gid"),
+            *_fold_aggs(
+                _cardinality(exact=False), F.sort_array(F.collect_set("sink"))
+            ),
         )
-        .select(
-            "sink",
-            "key",
-            "count",
-            "est_cardinality",
-            "value_samples",
-            "has_invalid_utf8",
-            "pct",
-        )
+        .localCheckpoint(eager=False)
     )
+    key_stats_df = _with_pct(gs.where(F.col("_gid") == 0), routed)
     # grouping_id: bit per grouping col, MSB first -> (key)-only set = 0b10
-    catalog_df = gs.where(F.col("_gid") == 2).select(
-        "key",
-        "count",
-        "est_cardinality",
-        "signal_types",
-        "value_samples",
-        "first_seen",
-        "last_seen",
-        "has_invalid_utf8",
-    )
+    catalog_df = gs.where(F.col("_gid") == 2).select(*_CATALOG_COLUMNS)
     return key_stats_df, catalog_df
 
 
-def key_stats(
-    routed: DataFrame,
-    exact: bool = False,
-    n_salt: int = 16,
-) -> DataFrame:
+def key_stats(routed: DataFrame, exact: bool = False) -> DataFrame:
     """Per-(sink, key) stats: count, pct, est_cardinality, samples, taint.
 
     Reference: KeyMetadata (`pkg/models/metadata.go:250-280`, AddValue
     `:382-424`) + percentage recompute (`internal/analyzer/logs.go:262-277`).
+    ONE scan, bounded memory, everything two-stage: see value_grain and
+    attr_partials.
     """
-    # ONE scan, bounded memory, everything two-stage: see value_grain /
-    # attr_partials. exact mode = sum of per-salt distinct counts (salts
-    # partition values disjointly) — no count_distinct Expand at all.
-    partials = attr_partials(routed, n_salt=n_salt)
-    card_final = (
-        F.sum("_dcard")
-        if exact
-        else F.hll_sketch_estimate(F.hll_union_agg("_hll"))
+    stats = attr_partials(routed).groupBy("sink", "key").agg(
+        *_fold_aggs(_cardinality(exact), F.sort_array(F.collect_set("sink")))
     )
-    agg = partials.groupBy("sink", "key").agg(
-        F.sum("_cnt").alias("count"),
-        card_final.alias("est_cardinality"),
-        F.array_join(_merged_samples(), "|").alias("value_samples"),
-        F.max("_taint").alias("has_invalid_utf8"),
-    )
-    totals = sink_totals(routed)
-    return (
-        agg.join(F.broadcast(totals), "sink")
-        .withColumn(
-            "pct", F.round(F.col("count") * 100.0 / F.col("sink_rows"), 4)
-        )
-        .drop("sink_rows")
-        .select(
-            "sink",
-            "key",
-            "count",
-            "est_cardinality",
-            "value_samples",
-            "has_invalid_utf8",
-            "pct",
-        )
-    )
+    return _with_pct(stats, routed)
 
 
 def service_stats(routed: DataFrame) -> DataFrame:
@@ -415,40 +371,9 @@ def attribute_catalog(routed: DataFrame, exact: bool = False) -> DataFrame:
         *_partial_aggs(),
         F.array_distinct(F.flatten(F.collect_list("_vsinks"))).alias("_sinks"),
     )
-    card_final = (
-        F.sum("_dcard")
-        if exact
-        else F.hll_sketch_estimate(F.hll_union_agg("_hll"))
-    )
+    sinks = F.array_sort(F.array_distinct(F.flatten(F.collect_list("_sinks"))))
     return partial.groupBy("key").agg(
-        F.sum("_cnt").alias("count"),
-        card_final.alias("est_cardinality"),
-        F.array_join(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("_sinks")))),
-            "|",
-        ).alias("signal_types"),
-        F.array_join(
-            F.slice(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("_samples")))
-                ),
-                1,
-                SAMPLE_CAP,
-            ),
-            "|",
-        ).alias("value_samples"),
-        F.date_format(F.min("_first"), "yyyy-MM-dd HH:mm:ss").alias("first_seen"),
-        F.date_format(F.max("_last"), "yyyy-MM-dd HH:mm:ss").alias("last_seen"),
-        F.max("_taint").alias("has_invalid_utf8"),
-    ).select(
-        "key",
-        "count",
-        "est_cardinality",
-        "signal_types",
-        "value_samples",
-        "first_seen",
-        "last_seen",
-        "has_invalid_utf8",
+        *_fold_aggs(_cardinality(exact), sinks)
     )
 
 
@@ -689,12 +614,12 @@ def metadata_complexity(
     )
 
 
-def key_skew(routed: DataFrame, n_salt: int = 16) -> DataFrame:
+def key_skew(routed: DataFrame) -> DataFrame:
     """Per-key value-skew audit: which attribute keys have a hot value.
 
     For every attribute key: row volume, distinct-value count, the single
     hottest value (two-stage argmax — salted local top-1, then a final
-    top-1 over at most n_salt rows per key, so no reducer ever sorts a full
+    top-1 over at most N_SALT rows per key, so no reducer ever sorts a full
     key partition), its share of the key's rows, and the skew ratio
     ``top_count / mean_count = top_count * n_values / n_rows`` (1.0 =
     perfectly uniform). This is the report that tells an operator which
@@ -707,11 +632,7 @@ def key_skew(routed: DataFrame, n_salt: int = 16) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("vcount"))
     )
     top = salted_top_k(
-        freq,
-        ["key"],
-        (F.desc("vcount"), F.asc("value")),
-        k=1,
-        n_salt=n_salt,
+        freq, ["key"], (F.desc("vcount"), F.asc("value")), k=1
     ).select(
         "key",
         F.col("value").alias("top_value"),

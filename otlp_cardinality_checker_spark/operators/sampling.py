@@ -317,7 +317,7 @@ def fixed_k_sample(
 
     Scale shape: delegates to aggregate.salted_top_k — rank within
     (stratum, salt-of-id) first, then a final window over at most
-    n_salt x k rows per stratum — so a hot stratum (one language being
+    N_SALT x k rows per stratum — so a hot stratum (one language being
     90% of a 10^12-row corpus) never sorts on a single reducer. The salt
     stage only changes the physical distribution, never membership.
     """

@@ -26,36 +26,27 @@ WARNING_RATIO = 2.0
 NEW_KEY_WARNING_CARDINALITY = 1000
 
 
-def snapshot_key_stats(routed: DataFrame, n_salt: int = 16) -> DataFrame:
+def snapshot_key_stats(routed: DataFrame) -> DataFrame:
     """Mergeable session snapshot of per-(sink,key) state.
 
     Carries the *sketch itself* (binary), not the estimate, so later merges
     stay exact-in-distribution — the Spark analogue of serializing HLL
-    registers.
+    registers. Folded from the same bounded (sink, key, salt) partials as
+    ``aggregate.key_stats``.
     """
-    from .aggregate import SAMPLE_CAP, attr_partials
+    from .aggregate import _merged_samples, attr_partials
 
-    # dedup-first bounded two-stage — exactly aggregate.attr_partials
-    # (value-hash salt so sketches union exactly; rank-guarded collect_set
-    # bounds the samples buffer at SAMPLE_CAP per salt)
-    partial = attr_partials(routed, n_salt=n_salt)
-    return partial.groupBy("sink", "key").agg(
+    return attr_partials(routed).groupBy("sink", "key").agg(
         F.sum("_cnt").alias("count"),
         F.hll_union_agg("_hll").alias("hll"),
-        F.slice(
-            F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list("_samples")))
-            ),
-            1,
-            SAMPLE_CAP,
-        ).alias("samples"),
+        _merged_samples().alias("samples"),
         F.max("_taint").alias("has_invalid_utf8"),
     )
 
 
 def merge_snapshots(*snapshots: DataFrame) -> DataFrame:
     """Additive union of session snapshots (U2)."""
-    from .aggregate import SAMPLE_CAP
+    from .aggregate import _merged_samples
 
     unioned = snapshots[0]
     for s in snapshots[1:]:
@@ -63,11 +54,7 @@ def merge_snapshots(*snapshots: DataFrame) -> DataFrame:
     return unioned.groupBy("sink", "key").agg(
         F.sum("count").alias("count"),
         F.hll_union_agg("hll").alias("hll"),
-        F.slice(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("samples")))),
-            1,
-            SAMPLE_CAP,
-        ).alias("samples"),
+        _merged_samples("samples").alias("samples"),
         F.max("has_invalid_utf8").alias("has_invalid_utf8"),
     )
 
@@ -98,6 +85,43 @@ def load_session(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def _graded_key_diff(joined: DataFrame) -> DataFrame:
+    """change_type and severity of (sink, key) diff rows carrying
+    count_from/count_to/card_from/card_to (a null ``from`` side: added;
+    null ``to``: removed)."""
+    change = (
+        F.when(F.col("count_from").isNull(), F.lit("added"))
+        .when(F.col("count_to").isNull(), F.lit("removed"))
+        .when(
+            (F.col("count_from") != F.col("count_to"))
+            | (F.col("card_from") != F.col("card_to")),
+            F.lit("changed"),
+        )
+        .otherwise(F.lit("unchanged"))
+    )
+    ratio = F.col("card_to") / F.nullif(F.col("card_from"), F.lit(0))
+    severity = (
+        F.when(
+            (change == "added")
+            & (F.col("card_to") >= NEW_KEY_WARNING_CARDINALITY),
+            F.lit("warning"),
+        )
+        .when((change == "changed") & (ratio >= CRITICAL_RATIO), F.lit("critical"))
+        .when((change == "changed") & (ratio >= WARNING_RATIO), F.lit("warning"))
+        .otherwise(F.lit("info"))
+    )
+    return joined.select(
+        "sink",
+        "key",
+        change.alias("change_type"),
+        severity.alias("severity"),
+        "count_from",
+        "count_to",
+        "card_from",
+        "card_to",
+    )
+
+
 def diff_key_stats(from_stats: DataFrame, to_stats: DataFrame) -> DataFrame:
     """Full-outer diff of two (sink, key, count, est_cardinality) states.
 
@@ -117,43 +141,10 @@ def diff_key_stats(from_stats: DataFrame, to_stats: DataFrame) -> DataFrame:
         F.col("count").alias("count_to"),
         F.col("est_cardinality").alias("card_to"),
     )
-    joined = a.join(b, ["sink", "key"], "full_outer")
-    change = (
-        F.when(F.col("count_from").isNull(), F.lit("added"))
-        .when(F.col("count_to").isNull(), F.lit("removed"))
-        .when(
-            (F.col("count_from") != F.col("count_to"))
-            | (F.col("card_from") != F.col("card_to")),
-            F.lit("changed"),
-        )
-        .otherwise(F.lit("unchanged"))
-    )
-    ratio = F.col("card_to") / F.nullif(F.col("card_from"), F.lit(0))
-    severity = (
-        F.when(
-            (change == "added")
-            & (F.col("card_to") >= NEW_KEY_WARNING_CARDINALITY),
-            F.lit("warning"),
-        )
-        .when((change == "changed") & (ratio >= CRITICAL_RATIO), F.lit("critical"))
-        .when((change == "changed") & (ratio >= WARNING_RATIO), F.lit("warning"))
-        .otherwise(F.lit("info"))
-    )
-    return joined.select(
-        "sink",
-        "key",
-        change.alias("change_type"),
-        severity.alias("severity"),
-        "count_from",
-        "count_to",
-        "card_from",
-        "card_to",
-    )
+    return _graded_key_diff(a.join(b, ["sink", "key"], "full_outer"))
 
 
-def diff_from_predicate(
-    routed: DataFrame, from_pred: F.Column, n_salt: int = 16
-) -> DataFrame:
+def diff_from_predicate(routed: DataFrame, from_pred: F.Column) -> DataFrame:
     """Single-scan session diff for the prefix-vs-now pattern.
 
     When the "from" session is a predicate-subset of the "to" session (the
@@ -170,22 +161,20 @@ def diff_from_predicate(
       ``from`` occurrence (rows are distinct values, salts are disjoint);
     * final: sums across salts, then the same change/severity grading as
       :func:`diff_key_stats`, with the ``from`` side nulled where the key
-      never occurred under the predicate.
+      never occurred under the predicate. Keys only in "from" cannot
+      exist (from ⊆ to), so "removed" never occurs here.
 
     Output is row-identical to the two-pass form (asserted in
     tests/test_sessions.py) — same columns, same grading — at one parse,
     one shuffle chain.
     """
-    from .aggregate import exploded_attrs
+    from .aggregate import _salt, exploded_attrs
 
     attrs = exploded_attrs(routed).withColumn(
         "_in_from", from_pred.cast("int")
     )
     vals = attrs.groupBy(
-        "sink",
-        "key",
-        F.pmod(F.hash("value"), F.lit(n_salt)).alias("_salt"),
-        "value",
+        "sink", "key", _salt("value").alias("_salt"), "value"
     ).agg(
         F.count(F.lit(1)).alias("_vc_to"),
         F.sum("_in_from").alias("_vc_from"),
@@ -203,70 +192,21 @@ def diff_from_predicate(
         F.sum("_dcard_from").alias("_card_from_raw"),
     )
     present_from = F.col("_count_from_raw") > 0
-    joined = agg.select(
-        "sink",
-        "key",
-        F.when(present_from, F.col("_count_from_raw")).alias("count_from"),
-        F.when(present_from, F.col("_card_from_raw")).alias("card_from"),
-        "count_to",
-        "card_to",
-    )
-    # keys only in "from" cannot exist (from ⊆ to), so "removed" is
-    # unreachable here by construction — kept for column parity
-    change = (
-        F.when(F.col("count_from").isNull(), F.lit("added"))
-        .when(F.col("count_to").isNull(), F.lit("removed"))
-        .when(
-            (F.col("count_from") != F.col("count_to"))
-            | (F.col("card_from") != F.col("card_to")),
-            F.lit("changed"),
+    return _graded_key_diff(
+        agg.select(
+            "sink",
+            "key",
+            F.when(present_from, F.col("_count_from_raw")).alias("count_from"),
+            F.when(present_from, F.col("_card_from_raw")).alias("card_from"),
+            "count_to",
+            "card_to",
         )
-        .otherwise(F.lit("unchanged"))
-    )
-    ratio = F.col("card_to") / F.nullif(F.col("card_from"), F.lit(0))
-    severity = (
-        F.when(
-            (change == "added")
-            & (F.col("card_to") >= NEW_KEY_WARNING_CARDINALITY),
-            F.lit("warning"),
-        )
-        .when((change == "changed") & (ratio >= CRITICAL_RATIO), F.lit("critical"))
-        .when((change == "changed") & (ratio >= WARNING_RATIO), F.lit("warning"))
-        .otherwise(F.lit("info"))
-    )
-    return joined.select(
-        "sink",
-        "key",
-        change.alias("change_type"),
-        severity.alias("severity"),
-        "count_from",
-        "count_to",
-        "card_from",
-        "card_to",
     )
 
 
-def service_diff_from_predicate(
-    routed: DataFrame, from_pred: F.Column
-) -> DataFrame:
-    """Single-scan service-grain diff (prefix-vs-now pattern): one
-    aggregation with a conditional "from" count instead of two parse
-    branches; output row-identical to
-    ``diff_service_stats(service_grain_stats(subset),
-    service_grain_stats(full))`` when the subset is ``from_pred``."""
-    agg = routed.groupBy("sink", "service", "severity").agg(
-        F.count(F.lit(1)).alias("count_to"),
-        F.sum(from_pred.cast("long")).alias("_from_raw"),
-    )
-    joined = agg.select(
-        "sink",
-        "service",
-        "severity",
-        F.when(F.col("_from_raw") > 0, F.col("_from_raw")).alias(
-            "count_from"
-        ),
-        "count_to",
-    )
+def _graded_service_diff(joined: DataFrame) -> DataFrame:
+    """change_type and sample-count delta of (sink, service, severity)
+    diff rows carrying count_from/count_to."""
     change = (
         F.when(F.col("count_from").isNull(), F.lit("added"))
         .when(F.col("count_to").isNull(), F.lit("removed"))
@@ -283,6 +223,31 @@ def service_diff_from_predicate(
         (F.coalesce("count_to", F.lit(0)) - F.coalesce("count_from", F.lit(0)))
         .cast("long")
         .alias("delta"),
+    )
+
+
+def service_diff_from_predicate(
+    routed: DataFrame, from_pred: F.Column
+) -> DataFrame:
+    """Single-scan service-grain diff (prefix-vs-now pattern): one
+    aggregation with a conditional "from" count instead of two parse
+    branches; output row-identical to
+    ``diff_service_stats(service_grain_stats(subset),
+    service_grain_stats(full))`` when the subset is ``from_pred``."""
+    agg = routed.groupBy("sink", "service", "severity").agg(
+        F.count(F.lit(1)).alias("count_to"),
+        F.sum(from_pred.cast("long")).alias("_from_raw"),
+    )
+    return _graded_service_diff(
+        agg.select(
+            "sink",
+            "service",
+            "severity",
+            F.when(F.col("_from_raw") > 0, F.col("_from_raw")).alias(
+                "count_from"
+            ),
+            "count_to",
+        )
     )
 
 
@@ -313,27 +278,12 @@ def diff_service_stats(
         "severity",
         F.col("sample_count").alias("count_to"),
     )
-    joined = a.join(b, ["sink", "service", "severity"], "full_outer")
-    change = (
-        F.when(F.col("count_from").isNull(), F.lit("added"))
-        .when(F.col("count_to").isNull(), F.lit("removed"))
-        .when(F.col("count_from") != F.col("count_to"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return joined.select(
-        "sink",
-        "service",
-        "severity",
-        change.alias("change_type"),
-        "count_from",
-        "count_to",
-        (F.coalesce("count_to", F.lit(0)) - F.coalesce("count_from", F.lit(0)))
-        .cast("long")
-        .alias("delta"),
+    return _graded_service_diff(
+        a.join(b, ["sink", "service", "severity"], "full_outer")
     )
 
 
-_SEVERITY_RANK = {"info": 0, "warning": 1, "critical": 2}
+_SEVERITIES = ("info", "warning", "critical")  # ascending
 
 
 def filter_diff(
@@ -354,11 +304,6 @@ def filter_diff(
     if key_contains:
         out = out.where(F.col("key").contains(key_contains))
     if min_severity:
-        rank = _SEVERITY_RANK[min_severity]
-        sev_rank = (
-            F.when(F.col("severity") == "critical", 2)
-            .when(F.col("severity") == "warning", 1)
-            .otherwise(0)
-        )
-        out = out.where(sev_rank >= rank)
+        at_least = _SEVERITIES[_SEVERITIES.index(min_severity):]
+        out = out.where(F.col("severity").isin(*at_least))
     return out

@@ -29,8 +29,10 @@ slow analysis); this one has none.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .aggregate import salted_top_k
 
 N_TABLES = 4
 N_BITS = 12
@@ -55,27 +57,18 @@ def cosine_expr(a, b):
 
 
 def _topk_per_query(
-    scored: DataFrame,
-    k: int,
-    query_id_col: str,
-    id_col: str,
-    n_salt: int = 16,
+    scored: DataFrame, k: int, query_id_col: str, id_col: str
 ) -> DataFrame:
-    """Two-stage top-k: a single window over ``query_id`` would pull every
-    scored corpus row for a query onto ONE reducer (the whole corpus per
-    query for brute force). Stage 1 ranks within (query, salt-of-id) so the
-    final window sees at most ``n_salt * k`` rows per query; any row in the
-    global top-k is in its salt's top-k, so the result is identical."""
-    order = (F.desc("cosine"), F.asc(id_col))
-    w1 = Window.partitionBy(query_id_col, "_salt").orderBy(*order)
-    w2 = Window.partitionBy(query_id_col).orderBy(*order)
-    return (
-        scored.withColumn("_salt", F.pmod(F.hash(id_col), F.lit(n_salt)))
-        .withColumn("_r", F.row_number().over(w1))
-        .where(F.col("_r") <= k)
-        .withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .drop("_salt", "_r")
+    """Per-query top-k by cosine (id breaks ties), ranked 1..k in
+    ``rank``: the two-stage ``aggregate.salted_top_k`` salted by id, so no
+    reducer holds a query's whole scored corpus."""
+    return salted_top_k(
+        scored,
+        [query_id_col],
+        (F.desc("cosine"), F.asc(id_col)),
+        k=k,
+        salt_col=id_col,
+        keep_rank=True,
     )
 
 
@@ -580,8 +573,6 @@ def label_outliers(emb: DataFrame, k: int = 3) -> DataFrame:
     HOFs) -> salted two-stage bottom-k per label. Ranking uses the ROUNDED
     cosine (asc, then vec_id) so the order is engine-portable.
     """
-    from .aggregate import salted_top_k
-
     d = emb.select(
         "label", F.posexplode(F.col("embedding").cast("array<double>"))
     ).select("label", F.col("pos"), F.col("col").alias("v"))

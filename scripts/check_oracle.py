@@ -12,10 +12,11 @@ from __future__ import annotations
 import hashlib
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -74,7 +75,10 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    failures = []
+    # an oracle without a query would never be checked
+    failures = sorted(set(oracles) - set(queries))
+    for name in failures:
+        print(f"FAIL {name}: oracle_sql() entry names no queries() entry")
     for name, fn in queries.items():
         if only and name not in only:
             continue
@@ -88,8 +92,9 @@ def main() -> int:
             failures.append(name)
             continue
         if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(srows)} rows, "
-                  f"{time.time()-t0:.1f}s, no oracle)")
+            s_n, _, s_h = frame_fingerprint(scols, srows)
+            print(f"ok   {name}: spark=({s_n},{s_h}) no oracle "
+                  f"{time.time()-t0:.1f}s")
             continue
         try:
             res = con.execute(oracles[name])

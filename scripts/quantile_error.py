@@ -32,7 +32,7 @@ def main() -> None:
     )
     from otlp_cardinality_checker_spark.session import get_spark
 
-    spark = get_spark(app_name="quantile-error", cores=16)
+    spark = get_spark(app_name="quantile-error")
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")

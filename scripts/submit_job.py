@@ -15,7 +15,9 @@ package must resolve from the --py-files zip exactly as it would on a
 1000-executor cluster where only the zip is shipped.
 
 Writes key_stats rows as JSON lines to <out>/key_stats.jsonl and prints a
-single RESULT line with row/turn counts for the caller to assert on.
+single RESULT line with row/turn counts for the caller to assert on. The
+synthetic transcripts are generated under ``$SPARK_GRAFT_DATA_ROOT``; set
+it, since a zipped package has no directory of its own to hold them.
 """
 
 from __future__ import annotations

@@ -1,10 +1,6 @@
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 
 @pytest.fixture(scope="session")

@@ -217,11 +217,12 @@ def test_prometheus_series_estimate(spark):
 
 
 def test_bounded_samples_equals_collect_set_path(tiny_routed):
-    """The two-stage bounded min-10 must equal the naive collect_set slice."""
+    """key_stats' salted two-stage min-10 samples (rank-guarded per salt,
+    then merged) must equal the naive collect_set slice."""
     from otlp_cardinality_checker_spark.operators.aggregate import (
         SAMPLE_CAP,
-        bounded_min_samples,
         exploded_attrs,
+        key_stats,
     )
 
     attrs = exploded_attrs(tiny_routed)
@@ -237,7 +238,7 @@ def test_bounded_samples_equals_collect_set_path(tiny_routed):
     }
     bounded = {
         (r["sink"], r["key"]): r["value_samples"]
-        for r in bounded_min_samples(attrs, ("sink", "key")).collect()
+        for r in key_stats(tiny_routed, exact=True).collect()
     }
     assert bounded == naive
 
@@ -306,17 +307,40 @@ def test_attr_frequencies_explode_once(tiny_routed, tmp_path):
     assert "ReusedExchange" in plan
 
 
-def test_salted_top_k_equals_global_window(spark):
+def _stage1_rows(df) -> int:
+    """Rows salted_top_k's stage-1 filter (``_r <= k``) passed on to the
+    final window, read from the SQL metrics of a run without AQE (``df``
+    must not have run yet: its physical plan is fixed at the first run)."""
+    conf = df.sparkSession.conf
+    aqe = conf.get("spark.sql.adaptive.enabled")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        df.collect()
+        stack = [df._jdf.queryExecution().executedPlan()]
+    finally:
+        conf.set("spark.sql.adaptive.enabled", aqe)
+    rows = []
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Filter" and "_r#" in node.condition().toString():
+            rows.append(node.metrics().apply("numOutputRows").value())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    assert len(rows) == 1, rows
+    return rows[0]
+
+
+def test_salted_top_k_equals_global_window(spark, monkeypatch):
     """Property: the two-stage salted top-k must equal the naive single
-    global window for every k, on seeded random data with heavy ties."""
+    global window for every k and salt count, on seeded random data with
+    heavy ties; and its memory bound holds: the final window sees at most
+    N_SALT * k rows per group."""
     import random
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from otlp_cardinality_checker_spark.operators.aggregate import (
-        salted_top_k,
-    )
+    from otlp_cardinality_checker_spark.operators import aggregate
 
     rng = random.Random(42)
     rows = [
@@ -328,22 +352,26 @@ def test_salted_top_k_equals_global_window(spark):
         .groupBy("g", "value")
         .agg(F.sum("w").alias("cnt"))
     )
+    n_groups = df.select("g").distinct().count()
     order = (F.desc("cnt"), F.asc("value"))
-    for k in (1, 3, 10):
-        fast = {
-            (r["g"], r["value"])
-            for r in salted_top_k(df, ["g"], order, k=k).collect()
-        }
-        naive = {
-            (r["g"], r["value"])
-            for r in df.withColumn(
-                "_rn",
-                F.row_number().over(Window.partitionBy("g").orderBy(*order)),
-            )
-            .where(F.col("_rn") <= k)
-            .collect()
-        }
-        assert fast == naive, k
+    for n_salt in (1, 3, 16):
+        monkeypatch.setattr(aggregate, "N_SALT", n_salt)
+        for k in (1, 3, 10):
+            def top():
+                return aggregate.salted_top_k(df, ["g"], order, k=k)
+
+            fast = {(r["g"], r["value"]) for r in top().collect()}
+            naive = {
+                (r["g"], r["value"])
+                for r in df.withColumn(
+                    "_rn",
+                    F.row_number().over(Window.partitionBy("g").orderBy(*order)),
+                )
+                .where(F.col("_rn") <= k)
+                .collect()
+            }
+            assert fast == naive, (n_salt, k)
+            assert _stage1_rows(top()) <= n_groups * n_salt * k, (n_salt, k)
 
 
 # ---------------------------------------------------------------------------

@@ -255,13 +255,7 @@ def test_type_correlation_exact_signs(spark):
 
     import numpy as np
 
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "e", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    import __spark_entry__ as m
 
     b = dt.datetime(2024, 1, 1)
     series = {

@@ -6,9 +6,11 @@ import subprocess
 import sys
 from pathlib import Path
 
+SCRIPTS = Path(__file__).resolve().parent.parent / "scripts"
+
 
 def test_pyfiles_zip_is_self_contained(tmp_path):
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, str(SCRIPTS))
     import importlib
 
     package = importlib.import_module("package")
@@ -51,7 +53,9 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     sf0.001, positive turn count)."""
     import json
 
-    sys.path.insert(0, "/root/repo/scripts")
+    from otlp_cardinality_checker_spark.datagen import DATA_ROOT
+
+    sys.path.insert(0, str(SCRIPTS))
     import importlib
 
     package = importlib.import_module("package")
@@ -65,13 +69,15 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
             "--conf", "spark.ui.enabled=false",
             "--conf", "spark.sql.shuffle.partitions=8",
             "--py-files", str(zip_path),
-            "/root/repo/scripts/submit_job.py",
+            str(SCRIPTS / "submit_job.py"),
             "--sf-dir", "/root/testdata/sf0.001",
             "--out", str(out),
         ],
         capture_output=True,
         text=True,
         cwd=str(tmp_path),  # away from the repo: only the zip ships
+        # the zip holds no directory for generated data: use this checkout's
+        env={**os.environ, "SPARK_GRAFT_DATA_ROOT": str(DATA_ROOT)},
         timeout=300,
     )
     assert res.returncode == 0, res.stderr[-3000:]

@@ -152,20 +152,35 @@ def test_sample_cap_and_sorting(tiny_routed):
         assert samples == sorted(samples)
 
 
-def test_salted_hll_equals_unsalted(tiny_routed):
-    """Two-stage salted agg must give the same estimates as 1-salt agg."""
-    from otlp_cardinality_checker_spark.operators.aggregate import key_stats
+def test_salted_hll_equals_unsalted(tiny_routed, monkeypatch):
+    """Every salted two-stage attribute aggregate must equal its one-salt
+    form: key_stats in both modes, both frames of key_stats_and_catalog
+    and a session snapshot's estimate. The exact mode is the strict one:
+    a salt that does not split values disjointly counts a value once per
+    salt it lands in."""
+    from otlp_cardinality_checker_spark.operators import aggregate
+    from otlp_cardinality_checker_spark.operators.sessions import (
+        estimate,
+        snapshot_key_stats,
+    )
 
-    a = {
-        (r["sink"], r["key"]): r["est_cardinality"]
-        for r in key_stats(tiny_routed, exact=False, n_salt=16).collect()
-    }
-    b = {
-        (r["sink"], r["key"]): r["est_cardinality"]
-        for r in key_stats(tiny_routed, exact=False, n_salt=1).collect()
-    }
-    assert a == b
+    def results():
+        ks, catalog = aggregate.key_stats_and_catalog(tiny_routed)
+        frames = {
+            "key_stats_exact": aggregate.key_stats(tiny_routed, exact=True),
+            "key_stats_hll": aggregate.key_stats(tiny_routed),
+            "key_stats_and_catalog.key_stats": ks,
+            "key_stats_and_catalog.catalog": catalog,
+            "snapshot": estimate(snapshot_key_stats(tiny_routed)),
+        }
+        return {n: sorted(map(tuple, df.collect())) for n, df in frames.items()}
 
+    monkeypatch.setattr(aggregate, "N_SALT", 16)
+    salted = results()
+    monkeypatch.setattr(aggregate, "N_SALT", 1)
+    unsalted = results()
+    for name, rows in salted.items():
+        assert rows == unsalted[name], name
 
 
 def test_jsonl_source_parity_and_quarantine(spark, tmp_path):

@@ -438,6 +438,7 @@ def test_markers_stream_equals_batch_and_replay_safe(spark, tmp_path):
     overwrites its batch partitions instead of double counting."""
     import shutil
 
+    from otlp_cardinality_checker_spark.datagen import ensure_dataset
     from otlp_cardinality_checker_spark.operators.conversation import (
         response_markers,
     )
@@ -446,9 +447,7 @@ def test_markers_stream_equals_batch_and_replay_safe(spark, tmp_path):
         markers_stream,
     )
 
-    turns = spark.read.parquet(
-        "/root/repo/.data/v7_n5000/transcripts.parquet"
-    )
+    turns = spark.read.parquet(str(ensure_dataset(SF) / "transcripts.parquet"))
     pdf = turns.toPandas()
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     src = tmp_path / "src"

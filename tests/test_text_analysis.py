@@ -459,13 +459,7 @@ def test_lang_confusion_diagonal_dominates(spark):
     """The fixture's docs carry their true lang; the detector's
     confusion matrix must be diagonal-heavy and shares must sum to 1
     per true class."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "e", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    import __spark_entry__ as m
     rows = m.queries()["lang_confusion"](spark, "/root/testdata/sf0.001").collect()
     by_true = {}
     for r in rows:

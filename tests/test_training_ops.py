@@ -1489,14 +1489,9 @@ def test_corpus_gini_extremes(spark):
     """Perfectly even masses -> gini 0; one source owning nearly all
     mass -> gini near (n-1)/n; cross-check against the sorted-rank
     closed form."""
-    import importlib.util
     import tempfile
 
-    spec = importlib.util.spec_from_file_location(
-        "e", "/root/repo/__spark_entry__.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    import __spark_entry__ as m
 
     def run(masses):
         rows = []
