@@ -8,10 +8,11 @@ Alongside the input table (exactly the `input_hint` shape:
 ``conv_id:string, turn_idx:int32, role:string, text:string, tool:string,
 ts:timestamp``) the generator emits a generation-time **truth** table
 (severity, template, long-form extracted attributes). Truth is derived by the
-*pandas* implementations in ``functions/`` at generation time, while the
-distributed pipeline's default engine is the independent Catalyst
-implementation — so the DuckDB-oracle comparison in ``__spark_entry__.py``
-cross-checks two separate implementations end-to-end.
+scalar per-row functions in ``functions/`` (``severity_of``, ``template_of``,
+``extract_attrs``) at generation time, while the distributed pipeline's
+default engine is the independent Catalyst implementation — so the
+DuckDB-oracle comparison (``__spark_entry__.oracle_sql``) cross-checks two
+separate implementations end-to-end.
 
 Text families are chosen so every masking pattern and variable-token
 heuristic of the reference fires (FIXTURES.md §1.1; reference pattern corpus:
@@ -39,6 +40,8 @@ CARDINALITY_UID = 500  # uid modulus (mirrors scripts/test-hll-cardinality.sh)
 # fixed residues mod lcm(100, 20), so only 170 of the 500 residues are ever
 # emitted — a known constant for oracle checks, stable for n >= 4000.
 EXPECTED_UID_CARDINALITY = 170
+# Generated data lives next to the checkout unless SPARK_GRAFT_DATA_ROOT
+# says otherwise; a package loaded from a --py-files zip must set it.
 DATA_ROOT = Path(
     os.environ.get("SPARK_GRAFT_DATA_ROOT")
     or Path(__file__).resolve().parent.parent / ".data"
@@ -303,6 +306,12 @@ def ensure_dataset(
     tool_dim.parquet and (optionally) truth.parquet / truth_attrs.parquet.
     `n_turns` overrides the sf-derived size (used by the scaling bench).
     """
+    if DATA_ROOT.parent.is_file():
+        raise RuntimeError(
+            f"no directory for generated data: {DATA_ROOT.parent} is the "
+            "archive the package was loaded from; set SPARK_GRAFT_DATA_ROOT "
+            "to a writable directory"
+        )
     n = n_turns or n_turns_for_sf(sf_dir)
     out = DATA_ROOT / f"v{GEN_VERSION}_n{n}"
     marker = out / ("_SUCCESS_TRUTH" if with_truth else "_SUCCESS")

@@ -9,8 +9,9 @@ values at the boundary — `metrics.go:388-405`).
 
 Both engines share ATTRIBUTE_SPECS:
 
-* Catalyst: ``map_filter(map(k1, regexp_extract(...), ...), v != '')`` —
-  one pass, JVM-side.
+* Catalyst: ``map_from_entries(filter(arrays_zip(keys, values), v != ''))``
+  over the per-key ``regexp_extract`` values — one pass, JVM-side (see
+  :func:`attrs_map_expr` for why not ``map_filter``).
 * pandas: ``Series.str.extract`` per spec inside the Arrow batch.
 """
 

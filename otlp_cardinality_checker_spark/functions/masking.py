@@ -7,17 +7,19 @@ regex -> placeholder rewrites with a cheap required-substring pre-check,
 followed by token-level generalization of high-entropy tokens to ``<*>`` and
 collapse of consecutive wildcards (`.../pkg/autotemplate/miner.go:415-434`).
 
-Two equivalent implementations are provided and property-tested against each
-other (tests/test_masking.py):
+Three implementations of one pattern table, tested against each other
+(tests/test_masking.py):
 
-* :func:`template_expr` — a pure Catalyst column expression
-  (``regexp_replace`` chain + ``transform(split(...))`` lambda). This is the
-  default engine: it stays inside whole-stage codegen on the JVM, so the hot
-  path has zero Python.
-* :func:`mask_series` / :func:`template_series` — vectorized pandas versions
-  used by the pandas-UDF parse engine and by the deterministic
-  truth-generation in ``datagen.py`` (which is what the DuckDB oracle checks
-  the distributed pipeline against).
+* :func:`masked_frame` / :func:`with_template` — the Catalyst engine, the
+  default. The mask chain is a stack of projections, one per guard level,
+  each pattern a ``regexp_replace`` behind a leaf-substring guard; the
+  tokenize/generalize tail is a ``transform(split(...))`` lambda, which
+  runs interpreted (higher-order functions get no codegen).
+* :func:`mask_text` / :func:`template_of` — the scalar reference. Datagen
+  derives the truth tables with it, and the DuckDB oracle checks the
+  pipeline against those tables.
+* :func:`mask_series` / :func:`template_series` — vectorized pandas
+  versions, used by the pandas-UDF parse engine.
 
 Deliberate deviations from the reference, chosen for order-independence and
 engine-parity (documented per SURVEY.md §7):
@@ -234,7 +236,7 @@ _NON_DIGIT = re.compile(r"[^0-9]")
 
 
 def is_variable_token(t: str) -> bool:
-    """Python twin of the Catalyst lambda inside :func:`template_expr`."""
+    """Python twin of the Catalyst lambda inside :func:`template_from_masked`."""
     n = len(t)
     if n == 0:
         return False
@@ -384,34 +386,8 @@ def template_series(s, compiled=None):
 
 
 # ---------------------------------------------------------------------------
-# Catalyst engine — the default. Entire chain compiles into whole-stage
-# codegen; `.explain` shows a single Project with no Python evaluation.
+# Catalyst engine — the default. The regexes above are valid Java regexes.
 # ---------------------------------------------------------------------------
-
-
-def _j(regex: str) -> str:
-    """Regexes in this module are already valid Java regexes."""
-    return regex
-
-
-def mask_expr(col: Column, patterns: tuple[MaskPattern, ...] | None = None) -> Column:
-    """Catalyst column: the ordered mask chain via `regexp_replace`.
-
-    The reference's RequiredSubstring fast path (`patterns.go:31`) is *not*
-    replicated here — not even as one guard around the sql_* group: any
-    `when(contains(running_expr), ...)` references the running expression
-    THREE times, and because the downstream template tokenization uses
-    higher-order functions (no whole-stage codegen, so no common
-    subexpression elimination) the prefix chain re-evaluates per
-    reference — measured 3.6x slower for the full parse. A plain linear
-    chain is evaluated once and a no-match `regexp_replace` is already
-    the identity. The pandas engine keeps the per-pattern guard, where it
-    is a genuine vectorized win.
-    """
-    c = F.coalesce(col, F.lit(""))
-    for p in patterns or MASK_PATTERNS:
-        c = F.regexp_replace(c, F.lit(_j(p.regex)), F.lit(p.repl))
-    return c
 
 
 def _variable_token_pred(t: Column) -> Column:
@@ -454,11 +430,12 @@ def template_from_masked(masked: Column) -> Column:
     """Tokenize + generalize an already-masked column (the template tail).
 
     NOTE: no when()/conditional may reference `masked` (or anything
-    derived from it) more than once when `masked` is the inline 19-pass
-    chain — the interpreted HOF context has no common-subexpression
-    elimination, so a second reference re-runs the whole chain (measured
-    1.7x on the template projection). The empty-token filter() stays a
-    per-token HOF for exactly this reason.
+    derived from it) more than once if `masked` is an inline expression
+    rather than a column — the interpreted HOF context has no
+    common-subexpression elimination, so a second reference re-runs it
+    (measured 1.7x on the template projection over the inline mask
+    chain). The empty-token filter() stays a per-token HOF for this
+    reason.
     """
     toks = F.split(F.trim(masked), _S + "+")
     toks = F.filter(toks, lambda t: t != F.lit(""))
@@ -467,20 +444,6 @@ def template_from_masked(masked: Column) -> Column:
     )
     joined = F.array_join(gen, " ")
     return F.regexp_replace(joined, r"<\*>( <\*>)+", "<*>")
-
-
-def template_expr(
-    col: Column, patterns: tuple[MaskPattern, ...] | None = None
-) -> Column:
-    """Catalyst column: full template extraction (mask -> tokens -> <*>).
-
-    Single-Column form, kept for call sites that only have an expression
-    slot. Hot paths with a DataFrame in hand should prefer
-    :func:`masked_frame` / :func:`with_template` — the stacked-projection
-    twin with leaf-guarded pattern skips (35% faster mask chain at sf0.1,
-    measured round 6; see OPTIMIZATION_r06.md).
-    """
-    return template_from_masked(mask_expr(col, patterns))
 
 
 def masked_frame(
@@ -497,9 +460,8 @@ def masked_frame(
     the upstream chain: `prev` is a bound attribute of the previous
     projection, not an inline expression tree, and CollapseProject keeps
     the stack (it refuses to inline a non-trivial expression referenced
-    more than once). This is the fast path the single-Column
-    :func:`mask_expr` cannot take — there the same `when` would double
-    the expression tree per pattern (2^19 nodes).
+    more than once). A single-Column chain cannot do this: there the same
+    `when` would double the expression tree per pattern (2^19 nodes).
 
     Why guards pay (guide §1 measurement, sf0.1 / 500k rows / 32c):
     Spark's `RegExpReplace` converts UTF8String -> java String -> matcher
@@ -514,11 +476,12 @@ def masked_frame(
     can form at a junction) any later pattern's required substring, so a
     substring absent from the leaf is absent from every evolving state,
     and the skipped regex could only have been the identity. Backrefs
-    only re-insert text already present. Verified by
-    test_masked_frame_equals_mask_expr plus a 500k-row corpus diff
-    (0 rows). User YAML tables get the UNGUARDED chain — an arbitrary
-    replacement literal may introduce a later guard substring, and the
-    pandas engine (evolving-string guards) would then disagree.
+    only re-insert text already present. Pinned against the scalar
+    :func:`mask_text` by test_masked_frame_equals_mask_expr; a 500k-row
+    corpus diff against the unguarded chain found 0 rows. User YAML
+    tables get the UNGUARDED chain — an arbitrary replacement literal may
+    introduce a later guard substring, and the pandas engine
+    (evolving-string guards) would then disagree.
     """
     pats = patterns or MASK_PATTERNS
     guarded = pats == MASK_PATTERNS
@@ -556,13 +519,13 @@ def masked_frame(
     for g, inside, post in levels:
         rep = F.col(out)
         for p in inside:
-            rep = F.regexp_replace(rep, F.lit(_j(p.regex)), F.lit(p.repl))
+            rep = F.regexp_replace(rep, F.lit(p.regex), F.lit(p.repl))
         if g is not None:
             rep = F.when(F.contains(leaf, F.lit(g)), rep).otherwise(
                 F.col(out)
             )
         for p in post:
-            rep = F.regexp_replace(rep, F.lit(_j(p.regex)), F.lit(p.repl))
+            rep = F.regexp_replace(rep, F.lit(p.regex), F.lit(p.repl))
         cur = cur.withColumn(out, rep)
     return cur
 
@@ -574,10 +537,9 @@ def with_template(
     patterns: tuple[MaskPattern, ...] | None = None,
 ):
     """DataFrame-level template extraction: :func:`masked_frame` + the
-    tokenize/generalize tail. Output rows are identical to
-    ``df.withColumn(out, template_expr(F.col(src), patterns))`` (pinned by
-    test_masked_frame_equals_mask_expr); this form is ~30% cheaper on the
-    mask chain. The intermediate masked column is dropped."""
+    tokenize/generalize tail. Output rows equal the scalar
+    :func:`template_of` (pinned by test_masked_frame_equals_mask_expr).
+    The intermediate masked column is dropped."""
     tmp = f"__masked_for_{out}"
     m = masked_frame(df, src=src, out=tmp, patterns=patterns)
     return m.withColumn(out, template_from_masked(F.col(tmp))).drop(tmp)

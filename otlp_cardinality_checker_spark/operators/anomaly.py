@@ -196,13 +196,22 @@ def cusum_drift(
     (group)-partitioned sort whose partitions hold #buckets rows
     (time-bounded, never corpus-bounded).
     """
+    gb = cusum_buckets(events, by=by, window=window)
+    return cusum_from_buckets(gb, by=by, k_sigma=k_sigma, h_sigma=h_sigma)
+
+
+def cusum_buckets(
+    events: DataFrame, by: str = "event_type", window: str = "1 hour"
+) -> DataFrame:
+    """CUSUM stage 1: the (grp, bucket, n_events) count frame. Counts are
+    plain sums, so the STREAMING twin writes this frame per micro-batch
+    and merges the partials by summing."""
     bucket = F.window(F.col("ts"), window).start.alias("bucket")
-    gb = (
+    return (
         events.select(F.col(by).alias("grp"), bucket)
         .groupBy("grp", "bucket")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    return cusum_from_buckets(gb, by=by, k_sigma=k_sigma, h_sigma=h_sigma)
 
 
 def cusum_from_buckets(

@@ -26,9 +26,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _by_turn(extra: str | None = None) -> Window:
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return w
+def _by_turn() -> Window:
+    return Window.partitionBy("conv_id").orderBy("turn_idx")
 
 
 def tool_bigrams(turns: DataFrame) -> DataFrame:
@@ -96,7 +95,7 @@ def template_loops(turns: DataFrame, flag_run: int = 3) -> DataFrame:
     island, and a conversation is ``flagged`` when its longest run reaches
     ``flag_run``.
 
-    Expects a ``template`` column (functions.masking.template_expr output
+    Expects a ``template`` column (functions.masking.with_template output
     or equivalent). Returns per-conversation
     (conv_id, n_turns, n_runs, n_repeat_pairs, max_run, flagged) with
     n_repeat_pairs = n_turns - n_runs (consecutive same-template pairs).
@@ -765,8 +764,8 @@ def preference_pairs(
             f"min_candidates must be >= 2, got {min_candidates}"
         )
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    # with_template: guarded stacked-projection chain (r6) — identical
-    # output, ~35% cheaper masks than the inline template_expr form
+    # with_template: guarded stacked-projection chain (r6), ~35% cheaper
+    # masks than the inline single-Column chain it replaced
     staged = with_template(
         turns.select("conv_id", "turn_idx", "role", "text"), out="_tpl"
     ).select(

@@ -57,8 +57,8 @@ def parse_turns(
 
 def _parse_sql(df: DataFrame, patterns=None) -> DataFrame:
     # masked_frame: stacked-projection mask chain with leaf-guarded
-    # pattern skips — row-identical to template_expr's inline chain but
-    # ~35% cheaper on the mask passes (see masking.masked_frame docstring;
+    # pattern skips — ~35% cheaper on the mask passes than the inline
+    # single-Column chain it replaced (see masking.masked_frame docstring;
     # OPTIMIZATION_r06.md has the measurements).
     text = F.col("text")
     base = df.columns

@@ -14,7 +14,7 @@ Skew note: groups are (role, severity) — few and potentially huge. The
 shards by (first token, token count), so one hot group fans across
 ``n_shards`` tasks; the result is the union of shard cluster sets, exactly
 as the reference's sharded GetClusters. Masking runs ONCE, JVM-side
-(`mask_expr`), shared by the shard router and the miner input.
+(`masked_frame`), shared by the shard router and the miner input.
 
 ``drain_infer`` is the reference's inference mode (`miner.go:125-134`):
 a trained model — just its (group, template) rows — is broadcast and each
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.masking import _S, mask_expr
+from ..functions.masking import _S, masked_frame
 
 DRAIN_SCHEMA = (
     "role string, severity string, template string, count long, "
@@ -40,8 +40,10 @@ INFER_SCHEMA = (
 
 
 def _masked_base(routed: DataFrame, n_shards: int) -> DataFrame:
-    masked = mask_expr(F.col("text")).alias("masked")
-    base = routed.select("role", "severity", "conv_id", "turn_idx", masked)
+    base = masked_frame(
+        routed.select("role", "severity", "conv_id", "turn_idx", "text"),
+        out="masked",
+    ).drop("text")
     if n_shards <= 1:
         return base.withColumn("_shard", F.lit(0))
     toks = F.filter(

@@ -1205,11 +1205,25 @@ def trending_terms(
     vocabulary); the rank window partitions by bucket over that vocab
     grain and only k rows per bucket survive.
     """
+    grain = term_counts(df, ts_col, text_col, min_len, window)
+    return top_terms(grain, k)
+
+
+def term_counts(
+    df: DataFrame,
+    ts_col: str = "ts",
+    text_col: str = "text",
+    min_len: int = 3,
+    window: str = "hour",
+) -> DataFrame:
+    """Trending-terms stage 1: the (bucket, tok, n) count frame. Counts
+    are plain sums, so the STREAMING twin writes this frame per
+    micro-batch and merges the partials by summing."""
     toks = F.filter(
         F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[^a-z]+"),
         lambda t: F.length(t) >= min_len,
     )
-    grain = (
+    return (
         df.select(
             F.date_trunc(window, F.col(ts_col)).alias("bucket"),
             F.explode_outer(toks).alias("tok"),
@@ -1218,6 +1232,11 @@ def trending_terms(
         .groupBy("bucket", "tok")
         .agg(F.count(F.lit(1)).alias("n"))
     )
+
+
+def top_terms(grain: DataFrame, k: int = 5) -> DataFrame:
+    """Trending-terms stage 2: rank a (bucket, tok, n) frame per bucket by
+    (n desc, tok asc) and keep the top ``k`` as (bucket, token, n, rank)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("bucket").orderBy(

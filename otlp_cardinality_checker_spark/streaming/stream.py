@@ -1145,15 +1145,11 @@ def cusum_stream(
     Scale shape: state grows by <= (#groups x #buckets-touched) rows per
     batch; raw events never enter state. Returns micro-batches executed.
     """
+    from ..operators.anomaly import cusum_buckets
 
     def on_batch(df: DataFrame, batch_id: int) -> None:
         _write_batch(
-            df.select(
-                F.col(group_col).alias("grp"),
-                F.window(F.col("ts"), window).start.alias("bucket"),
-            )
-            .groupBy("grp", "bucket")
-            .agg(F.count(F.lit(1)).alias("n_events")),
+            cusum_buckets(df, by=group_col, window=window),
             batch_id,
             Path(out_dir) / "cusum_partials",
         )
@@ -1186,31 +1182,20 @@ def trending_stream(
     checkpoint_dir: str,
 ) -> int:
     """Streaming trending-terms state: each micro-batch writes its
-    (bucket, token) COUNT partial (the tokenization + hash-agg of
-    text_analysis.trending_terms' stage 1) with :func:`_write_batch` —
-    plain sums, the module's standard partial->merge contract.
-    `current_trending` merges and runs the batch rank tail, so the
-    streamed leaderboard is bit-identical to the batch operator over
-    the union of batches.
+    (bucket, token) COUNT partial (text_analysis.term_counts, the batch
+    trending_terms' stage 1) with :func:`_write_batch` — plain sums, the
+    module's standard partial->merge contract. `current_trending` merges
+    and runs the batch rank tail, so the streamed leaderboard is
+    bit-identical to the batch operator over the union of batches.
 
     Scale shape: state grows by <= (buckets x per-bucket vocabulary)
     rows per batch; raw text never enters state.
     """
+    from ..operators.text_analysis import term_counts
 
     def on_batch(df: DataFrame, batch_id: int) -> None:
-        toks = F.filter(
-            F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                    "[^a-z]+"),
-            lambda t: F.length(t) >= 3,
-        )
         _write_batch(
-            df.select(
-                F.date_trunc("hour", F.col("ts")).alias("bucket"),
-                F.explode_outer(toks).alias("tok"),
-            )
-            .where(F.col("tok").isNotNull())
-            .groupBy("bucket", "tok")
-            .agg(F.count(F.lit(1)).alias("n")),
+            term_counts(df),
             batch_id,
             Path(out_dir) / "trending_partials",
         )
@@ -1223,20 +1208,14 @@ def trending_stream(
 def current_trending(
     spark: SparkSession, out_dir: str, k: int = 5
 ) -> DataFrame:
-    """Merge streamed (bucket, token) partials and rank — bit-identical
-    to the batch trending_terms over the same rows."""
-    from pyspark.sql import Window
+    """Merge streamed (bucket, token) partials and rank with the batch
+    tail (text_analysis.top_terms) — bit-identical to the batch
+    trending_terms over the same rows."""
+    from ..operators.text_analysis import top_terms
 
     merged = (
         spark.read.parquet(str(Path(out_dir) / "trending_partials"))
         .groupBy("bucket", "tok")
         .agg(F.sum("n").alias("n"))
     )
-    w = Window.partitionBy("bucket").orderBy(
-        F.col("n").desc(), F.col("tok").asc()
-    )
-    return (
-        merged.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("bucket", F.col("tok").alias("token"), "n", "rank")
-    )
+    return top_terms(merged, k)

@@ -207,7 +207,7 @@ def test_transcript_card_component_consistency(spark):
         template_loops,
     )
     from otlp_cardinality_checker_spark.functions.masking import (
-        template_expr,
+        with_template,
     )
     import pyspark.sql.functions as FF
 
@@ -245,10 +245,8 @@ def test_transcript_card_component_consistency(spark):
         assert abs(total - 1.0) < 1e-6, section
     # loop section equals template_loops aggregates
     tl = template_loops(
-        routed.select(
-            "conv_id", "turn_idx",
-            template_expr(FF.col("text")).alias("template"),
-        )
+        with_template(routed.select("conv_id", "turn_idx", "text"))
+        .select("conv_id", "turn_idx", "template")
     ).agg(
         FF.sum("n_repeat_pairs").alias("p"),
         FF.sum("n_turns").alias("t"),
@@ -267,7 +265,7 @@ def test_transcript_card_uses_pipeline_templates(tmp_path, spark, tiny_frames):
 
     from otlp_cardinality_checker_spark.datagen import role_dim, tool_dim
     from otlp_cardinality_checker_spark.functions.masking import (
-        template_expr,
+        with_template,
     )
     from otlp_cardinality_checker_spark.operators.card import (
         transcript_card,
@@ -319,10 +317,8 @@ patterns:
            card[("loop", "flagged_conv_share")])
     own = loop_section(routed.select("conv_id", "turn_idx", "template"))
     builtin = loop_section(
-        routed.select(
-            "conv_id", "turn_idx",
-            template_expr(FF.col("text")).alias("template"),
-        )
+        with_template(routed.select("conv_id", "turn_idx", "text"))
+        .select("conv_id", "turn_idx", "template")
     )
     assert got == own
     assert own != builtin  # the custom patterns change the loop figures

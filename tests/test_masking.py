@@ -188,7 +188,7 @@ def test_yaml_pattern_override(tmp_path, spark):
     from otlp_cardinality_checker_spark.functions.masking import (
         compile_patterns,
         load_patterns_yaml,
-        mask_expr,
+        masked_frame,
     )
 
     yml = tmp_path / "patterns.yaml"
@@ -212,11 +212,10 @@ patterns:
     # scalar engine
     assert mask_text(raw, compile_patterns(pats)) == want
     # Catalyst engine with the same user table
-    got = (
-        spark.range(1)
-        .select(mask_expr(F.lit(raw), pats).alias("m"))
-        .first()["m"]
-    )
+    got = masked_frame(
+        spark.range(1).select(F.lit(raw).alias("text")), out="m",
+        patterns=pats,
+    ).first()["m"]
     assert got == want
 
 
@@ -227,11 +226,10 @@ def test_catalyst_equals_scalar_on_non_ascii(spark):
     template must equal the scalar Python template on adversarial unicode
     strings - fullwidth digits, NBSP, CJK, combining accents, micro-sign."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from otlp_cardinality_checker_spark.functions.masking import (
-        template_expr,
         template_of,
+        with_template,
     )
 
     adversarial = [
@@ -255,9 +253,7 @@ def test_catalyst_equals_scalar_on_non_ascii(spark):
     )
     got = {
         r["i"]: r["t"]
-        for r in df.select(
-            "i", template_expr(F.col("text")).alias("t")
-        ).collect()
+        for r in with_template(df, out="t").select("i", "t").collect()
     }
     for i, raw in enumerate(adversarial):
         assert got[i] == template_of(raw), f"divergence on {raw!r}"
@@ -299,16 +295,16 @@ patterns:
 def test_masked_frame_equals_mask_expr(spark):
     """The stacked-projection leaf-guarded mask chain (masked_frame /
     with_template, the r6 fast path used by _parse_sql) is row-identical
-    to the single-Column inline chain on goldens AND on adversarial
-    guard-interaction strings: substrings removed by earlier masks,
-    placeholder junctions, empties."""
+    to the scalar reference (mask_text / template_of, which derives the
+    truth tables; its guards check the evolving string) on goldens AND on
+    adversarial guard-interaction strings: substrings removed by earlier
+    masks, placeholder junctions, empties."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from otlp_cardinality_checker_spark.functions.masking import (
-        mask_expr,
+        mask_text,
         masked_frame,
-        template_expr,
+        template_of,
         with_template,
     )
 
@@ -336,26 +332,26 @@ def test_masked_frame_equals_mask_expr(spark):
             src="text",
             out="t_frame",
         )
-        .withColumn("m_col", mask_expr(F.col("text")))
-        .withColumn("t_col", template_expr(F.col("text")))
         .collect()
     )
     for r in got:
-        assert r["m_frame"] == r["m_col"], cases[r["i"]]
-        assert r["t_frame"] == r["t_col"], cases[r["i"]]
+        raw = cases[r["i"]] or ""  # the Catalyst chain reads NULL as ""
+        assert r["m_frame"] == mask_text(raw), cases[r["i"]]
+        assert r["t_frame"] == template_of(raw), cases[r["i"]]
 
 
 def test_masked_frame_user_patterns_unguarded(spark, tmp_path):
     """User YAML tables run the UNGUARDED chain inside masked_frame (an
     arbitrary repl literal may introduce a later guard substring), so a
     pattern whose required_substring only appears via an earlier user
-    replacement still fires — matching the single-Column engine."""
+    replacement still fires — matching the scalar engine, whose guards
+    check the evolving string."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from otlp_cardinality_checker_spark.functions.masking import (
         MaskPattern,
-        mask_expr,
+        compile_patterns,
+        mask_text,
         masked_frame,
     )
 
@@ -365,13 +361,10 @@ def test_masked_frame_user_patterns_unguarded(spark, tmp_path):
         MaskPattern("uses", r"Q:[0-9]+", "<Q>", "Q:"),
     )
     df = spark.createDataFrame(pd.DataFrame({"text": ["hello123", "Q:55"]}))
-    got = (
-        masked_frame(df, src="text", out="m", patterns=pats)
-        .withColumn("m_col", mask_expr(F.col("text"), pats))
-        .collect()
-    )
+    got = masked_frame(df, src="text", out="m", patterns=pats).collect()
     for r in got:
-        assert r["m"] == r["m_col"]
+        assert r["m"] == mask_text(r["text"], compile_patterns(pats))
+    assert [r["m"] for r in got] == ["<Q>", "<Q>"]
 
 
 def test_template_series_duplicate_index_labels():

@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import os
+import shutil
 import subprocess
 import sys
 from pathlib import Path
+
+import pytest
 
 SCRIPTS = Path(__file__).resolve().parent.parent / "scripts"
 
@@ -34,10 +38,34 @@ def test_pyfiles_zip_is_self_contained(tmp_path):
     assert "zip-import-ok" in res.stdout
 
 
-import os
-import shutil
+def test_zipped_package_without_data_root_names_the_setting(tmp_path):
+    """A package loaded from the zip has no directory for generated data:
+    with SPARK_GRAFT_DATA_ROOT unset, ensure_dataset must say to set it
+    instead of failing inside the archive path."""
+    sys.path.insert(0, str(SCRIPTS))
+    import importlib
 
-import pytest
+    package = importlib.import_module("package")
+    zip_path = package.build(tmp_path)
+    code = (
+        f"import sys; sys.path.insert(0, {str(zip_path)!r}); "
+        "from otlp_cardinality_checker_spark import datagen; "
+        "datagen.ensure_dataset('/root/testdata/sf0.001')"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_DATA_ROOT"}
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        cwd=str(tmp_path),
+        env=env,
+        timeout=60,
+    )
+    assert res.returncode != 0
+    last = res.stderr.strip().splitlines()[-1]
+    assert last.startswith("RuntimeError"), res.stderr[-2000:]
+    assert "SPARK_GRAFT_DATA_ROOT" in last
+    assert not (zip_path.parent / ".data").exists()
 
 
 @pytest.mark.skipif(

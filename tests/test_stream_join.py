@@ -45,7 +45,7 @@ def test_stream_join_equals_batch_join(spark):
     """The driver query contract: emitted pairs == plain batch join."""
     import __spark_entry__ as entry
 
-    got = entry.q_attribution_join_stream(spark, SF)
+    got = entry.queries()["attribution_join_stream"](spark, SF)
     ev = spark.read.parquet(f"{SF}/events.parquet").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
