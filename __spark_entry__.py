@@ -1,4 +1,4 @@
-"""Driver contract: ``entry(spark)`` smoke-runs the flagship pipeline at
+"""Query contract: ``entry(spark)`` smoke-runs the flagship pipeline at
 sf0.001, ``queries()`` maps each query name to (spark, sf_dir) ->
 DataFrame and ``oracle_sql()`` to the DuckDB SQL whose rows must
 hash-match it. The records live in ``registry/``, one module per input

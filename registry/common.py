@@ -77,7 +77,7 @@ def _oracle_sf() -> str:
     """Scale dir for standalone fixture-path oracles.
 
     Same contract as the pipeline-prefix CTEs (``oracle_sql()``): the
-    driver's gate runs at sf0.01, SPARK_GRAFT_ORACLE_SF re-points the
+    gate runs at sf0.01, SPARK_GRAFT_ORACLE_SF re-points the
     oracle side when the local replica verifies another scale — without
     this the conversation/tool oracles silently kept reading sf0.01
     fixtures during an sf0.1 sweep (caught by the round-5 full sweep).

@@ -1,8 +1,8 @@
-"""Queries over the driver's ``documents`` table, one document at a time
+"""Queries over the ``documents`` input table, one document at a time
 or per group: quality scores and filters, token, length and language
 statistics, tokenizers, sampling, mixtures and dataset cards.
 
-Oracles read the ``documents`` view the driver registers. The queries
+Oracles read a ``documents`` view over the same parquet. The queries
 that compare documents with each other are in ``documents_dedup``.
 """
 

@@ -1,4 +1,4 @@
-"""Queries over the driver's ``documents`` table that compare documents
+"""Queries over the ``documents`` input table that compare documents
 with each other: exact and near-duplicate detection (shingle Jaccard,
 MinHash, SimHash, winnowing), duplicate clusters, contamination and
 n-gram overlap.

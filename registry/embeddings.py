@@ -1,4 +1,4 @@
-"""Queries over the driver's ``embeddings`` table: exact and approximate
+"""Queries over the ``embeddings`` input table: exact and approximate
 top-k search, near duplicates, clusters, quantization and label audits.
 """
 

@@ -1,4 +1,4 @@
-"""Queries over the driver's ``events`` table: event-time windows,
+"""Queries over the ``events`` input table: event-time windows,
 sessions, funnels, sketches, drift and anomaly operators, and the
 metric-shape reads derived from events.
 """

@@ -1,4 +1,4 @@
-"""The streaming queries: each writes a driver table as a few micro-batch
+"""The streaming queries: each writes an input table as a few micro-batch
 files, runs a real Structured Streaming job over them and returns the
 merged state.
 

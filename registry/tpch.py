@@ -1,4 +1,4 @@
-"""Queries over the driver's TPC-H tables that exercise a shared
+"""Queries over the TPC-H input tables that exercise a shared
 operator: numeric profiles, k-anonymity, l-diversity, fuzzy name pairs,
 referential-integrity scorecards and a purge audit.
 """

@@ -50,7 +50,7 @@ def test_zipped_package_without_data_root_names_the_setting(tmp_path):
     code = (
         f"import sys; sys.path.insert(0, {str(zip_path)!r}); "
         "from otlp_cardinality_checker_spark import datagen; "
-        "datagen.ensure_dataset('/root/testdata/sf0.001')"
+        "datagen.ensure_dataset('sf0.001')"
     )
     env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_DATA_ROOT"}
     res = subprocess.run(

@@ -1,4 +1,4 @@
-"""The driver contract as a registry merge (Spark-free).
+"""The query contract as a registry merge (Spark-free).
 
 ``oracle_manifest.json`` freezes the contract: the sorted ``queries()``
 names and the sha256 of every ``oracle_sql()`` text at sf0.001, with the
@@ -14,7 +14,6 @@ from pathlib import Path
 
 import pytest
 
-SF001 = "/root/testdata/sf0.001"
 MANIFEST = Path(__file__).resolve().parent / "oracle_manifest.json"
 
 
@@ -35,6 +34,8 @@ def contract() -> dict:
 
 
 def test_oracle_texts_match_manifest(monkeypatch):
+    from registry.common import SF001
+
     monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF", SF001)
     want = json.loads(MANIFEST.read_text())
     got = contract()
@@ -64,6 +65,8 @@ def test_merge_rejects_a_name_defined_twice(monkeypatch):
 
 if __name__ == "__main__":
     import os
+
+    from registry.common import SF001
 
     os.environ["SPARK_GRAFT_ORACLE_SF"] = SF001
     MANIFEST.write_text(json.dumps(contract(), indent=1) + "\n")
