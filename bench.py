@@ -99,9 +99,7 @@ def pipeline_pass(spark, sf_dir: str, n_turns: int | None, out_dir: str,
     from otlp_cardinality_checker_spark.operators import aggregate as agg
     from otlp_cardinality_checker_spark.plans.pipeline import routed_turns
 
-    routed = routed_turns(
-        spark, sf_dir, engine="sql", with_truth=False, n_turns=n_turns
-    )
+    routed = routed_turns(spark, sf_dir, with_truth=False, n_turns=n_turns)
     t0 = time.time()
     routed_path = f"{out_dir}/run{run_id}/routed"
     # snappy, not the session-default zstd: this materialization is a HOT
@@ -226,12 +224,10 @@ SCALE_CORES_N = int(os.environ.get("SPARK_GRAFT_SCALE_CORES_N", "2"))
 SCALE_ROUNDS = int(os.environ.get("SPARK_GRAFT_SCALE_ROUNDS", "3"))
 
 
-def compare_parse_engines(sf_dir: str, cores: int) -> dict:
-    """Rows/sec through the parse projection alone, per engine: the Catalyst
-    chain (JVM) vs the Arrow-batched pandas UDF (grok mode)."""
+def parse_rows_per_sec(sf_dir: str, cores: int) -> dict:
+    """Rows/sec through the parse projection alone, under the
+    ``parse_engines.sql_rows_per_sec`` key that BENCH_r0*.json record."""
     import time as _t
-
-    from pyspark.sql import functions as F
 
     from otlp_cardinality_checker_spark.datagen import n_turns_for_sf
     from otlp_cardinality_checker_spark.operators.parse import parse_turns
@@ -240,23 +236,20 @@ def compare_parse_engines(sf_dir: str, cores: int) -> dict:
         load_transcripts,
     )
 
-    spark = get_spark(app_name="bench-engines", cores=cores)
-    out = {}
+    spark = get_spark(app_name="bench-parse", cores=cores)
     try:
         df = load_transcripts(spark, sf_dir, with_truth=False)
         n = n_turns_for_sf(sf_dir)
-        for engine in ("sql", "pandas"):
-            # noop write: forces full materialization of every parsed
-            # column (an aggregate over two columns lets Catalyst prune
-            # most of the parse and over-reports by >10x)
-            parsed = parse_turns(df, engine=engine)
-            parsed.write.format("noop").mode("overwrite").save()  # warm
-            t0 = _t.time()
-            parsed.write.format("noop").mode("overwrite").save()
-            out[f"{engine}_rows_per_sec"] = round(n / (_t.time() - t0), 1)
+        # noop write: forces full materialization of every parsed column
+        # (an aggregate over two columns lets Catalyst prune most of the
+        # parse and over-reports by >10x)
+        parsed = parse_turns(df)
+        parsed.write.format("noop").mode("overwrite").save()  # warm
+        t0 = _t.time()
+        parsed.write.format("noop").mode("overwrite").save()
+        return {"sql_rows_per_sec": round(n / (_t.time() - t0), 1)}
     finally:
         spark.stop()
-    return out
 
 
 def run_scaling_interleaved(
@@ -352,7 +345,7 @@ def main() -> None:
     bw_before = bandwidth_probe_gbps()
     pipeline = run_pipeline_once(args.sf_dir, args.cores)
     queries = run_query_timings(args.sf_dir, args.cores)
-    engines = compare_parse_engines(args.sf_dir, args.cores)
+    parse = parse_rows_per_sec(args.sf_dir, args.cores)
 
     result = {
         "metric": "pipeline_turns_per_sec",
@@ -362,7 +355,7 @@ def main() -> None:
         "sf": sf,
         "n_turns": pipeline["n_turns"],
         "pipeline_sec": round(pipeline["elapsed"], 2),
-        "parse_engines": engines,
+        "parse_engines": parse,
         # host-noise self-calibration: a fixed 20M-iteration pure-Python
         # spin, timed before and after the measured work. Quiet-window
         # reference on this box is ~1.0-1.2 s; readings much above that

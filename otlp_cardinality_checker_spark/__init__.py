@@ -7,10 +7,9 @@ multi-turn agent transcripts (conv_id, turn_idx, role, text, tool, ts),
 producing mergeable per-key cardinality statistics, log templates, attribute
 catalogs, session snapshots/diffs, and severity-graded reports.
 
-Everything is expressed with the public DataFrame/SQL API; the only Python in
-the hot path is Arrow-batched pandas UDFs in the optional ``pandas`` parse
-engine. The default ``sql`` engine runs the entire parse stage inside
-Catalyst/whole-stage-codegen.
+Everything is expressed with the public DataFrame/SQL API, and the parse
+stage runs entirely inside Catalyst/whole-stage-codegen, with no Python in
+the hot path.
 """
 
 __version__ = "0.1.0"

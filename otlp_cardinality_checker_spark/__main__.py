@@ -39,8 +39,9 @@ def _spark(args):
 def _routed(spark, args):
     from .plans.pipeline import routed_turns
 
+    # no subcommand reads truth, so none is generated for a fresh sf dir
     return routed_turns(
-        spark, args.sf_dir, engine=args.engine, patterns_yaml=args.patterns
+        spark, args.sf_dir, with_truth=False, patterns_yaml=args.patterns
     )
 
 
@@ -390,7 +391,6 @@ def main(argv: list[str] | None = None) -> int:
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"),
     )
     ap.add_argument("--cores", type=int, default=None)
-    ap.add_argument("--engine", choices=("sql", "pandas"), default="sql")
     ap.add_argument("--patterns", help="user mask-pattern YAML override")
     sub = ap.add_subparsers(dest="cmd", required=True)
 

@@ -9,8 +9,8 @@ Alongside the input table (exactly the `input_hint` shape:
 ts:timestamp``) the generator emits a generation-time **truth** table
 (severity, template, long-form extracted attributes). Truth is derived by the
 scalar per-row functions in ``functions/`` (``severity_of``, ``template_of``,
-``extract_attrs``) at generation time, while the distributed pipeline's
-default engine is the independent Catalyst implementation — so the
+``extract_attrs``) at generation time, while the distributed pipeline
+runs the independent Catalyst implementation — so the
 DuckDB-oracle comparison (``__spark_entry__.oracle_sql``) cross-checks two
 separate implementations end-to-end.
 

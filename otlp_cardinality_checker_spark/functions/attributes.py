@@ -7,12 +7,15 @@ them from ``text`` with a fixed grok-like spec: one named capture per
 attribute key. Values are strings (the reference stringifies all attribute
 values at the boundary — `metrics.go:388-405`).
 
-Both engines share ATTRIBUTE_SPECS:
+Three implementations share ATTRIBUTE_SPECS:
 
-* Catalyst: ``map_from_entries(filter(arrays_zip(keys, values), v != ''))``
-  over the per-key ``regexp_extract`` values — one pass, JVM-side (see
+* Catalyst, what the parse stage runs:
+  ``map_from_entries(filter(arrays_zip(keys, values), v != ''))`` over the
+  per-key ``regexp_extract`` values — one pass, JVM-side (see
   :func:`attrs_map_expr` for why not ``map_filter``).
-* pandas: ``Series.str.extract`` per spec inside the Arrow batch.
+* :func:`extract_attrs`, the scalar reference datagen derives truth with.
+* :func:`attrs_frame`, a vectorized ``Series.str.extract`` per spec, for
+  callers that derive truth for a whole pandas frame at once.
 """
 
 from __future__ import annotations
@@ -39,7 +42,7 @@ class AttributeSpec:
 
 # ASCII-pinned atoms shared with the masking table (see masking.py:
 # java.util.regex \d/\w/\b are ASCII, Python's are Unicode — explicit
-# classes + lookarounds make both engines agree on non-ASCII text).
+# classes + lookarounds make Java and Python agree on non-ASCII text).
 from .masking import _NA, _NB  # noqa: E402
 
 ATTRIBUTE_SPECS: tuple[AttributeSpec, ...] = (
@@ -144,7 +147,8 @@ def attrs_map_expr(text: Column) -> Column:
 
 
 def attrs_frame(texts):
-    """pandas engine: DataFrame with one (nullable string) column per key."""
+    """Vectorized :func:`extract_attrs` over a pandas Series: a DataFrame
+    with one (nullable string) column per key."""
     import pandas as pd
 
     s = texts.fillna("")

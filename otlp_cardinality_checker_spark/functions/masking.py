@@ -7,22 +7,20 @@ regex -> placeholder rewrites with a cheap required-substring pre-check,
 followed by token-level generalization of high-entropy tokens to ``<*>`` and
 collapse of consecutive wildcards (`.../pkg/autotemplate/miner.go:415-434`).
 
-Three implementations of one pattern table, tested against each other
+Two implementations of one pattern table, tested against each other
 (tests/test_masking.py):
 
-* :func:`masked_frame` / :func:`with_template` — the Catalyst engine, the
-  default. The mask chain is a stack of projections, one per guard level,
-  each pattern a ``regexp_replace`` behind a leaf-substring guard; the
-  tokenize/generalize tail is a ``transform(split(...))`` lambda, which
-  runs interpreted (higher-order functions get no codegen).
+* :func:`masked_frame` / :func:`with_template` — the Catalyst path the
+  pipeline runs. The mask chain is a stack of projections, one per guard
+  level, each pattern a ``regexp_replace`` behind a leaf-substring guard;
+  the tokenize/generalize tail is a ``transform(split(...))`` lambda,
+  which runs interpreted (higher-order functions get no codegen).
 * :func:`mask_text` / :func:`template_of` — the scalar reference. Datagen
   derives the truth tables with it, and the DuckDB oracle checks the
   pipeline against those tables.
-* :func:`mask_series` / :func:`template_series` — vectorized pandas
-  versions, used by the pandas-UDF parse engine.
 
 Deliberate deviations from the reference, chosen for order-independence and
-engine-parity (documented per SURVEY.md §7):
+parity between the two implementations (documented per SURVEY.md §7):
 
 * Tokenization is whitespace-only *after* masking (the reference also splits
   on ``:=/[](),"``; those delimiters are handled here by masking the
@@ -43,7 +41,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
-# Mask pattern table — ONE definition, compiled for both engines.
+# Mask pattern table — ONE definition, compiled for both implementations.
 # `regex` must be valid for BOTH java.util.regex and Python `re`.
 # `repl` uses $1-style group refs (converted to \1 for Python).
 # ---------------------------------------------------------------------------
@@ -60,8 +58,8 @@ class MaskPattern:
 # ASCII-pinned regex atoms. java.util.regex gives \d \w \s \b ASCII
 # semantics while Python `re` gives them Unicode semantics, so the shared
 # pattern table spells every class out explicitly (and replaces \b with
-# lookarounds) — the two engines then agree on NON-ASCII input too, not
-# just the ASCII fixture corpus.
+# lookarounds) — the Java and Python regexes then agree on NON-ASCII
+# input too, not just the ASCII fixture corpus.
 _S = r"[ \t\r\n\f\x0b]"  # \s, pinned
 _NS = r"[^ \t\r\n\f\x0b]"  # \S, pinned
 _NB = r"(?<![0-9A-Za-z_])"  # \b before a word char, pinned
@@ -184,7 +182,7 @@ def _py_repl(repl: str) -> str:
 
 
 def compile_patterns(patterns: tuple[MaskPattern, ...]):
-    """Compile a pattern table for the Python engines (cached per table)."""
+    """Compile a pattern table for the scalar reference."""
     return tuple((p, re.compile(p.regex), _py_repl(p.repl)) for p in patterns)
 
 
@@ -225,7 +223,7 @@ def load_patterns_yaml(path: str) -> tuple[MaskPattern, ...]:
 LONG_TOKEN_THRESHOLD = 30
 
 # ASCII-pinned (see MASK_PATTERNS note): [0-9] everywhere, never \d, so
-# the scalar/pandas truth and the Catalyst rlike twins agree on non-ASCII.
+# the scalar truth and the Catalyst rlike twins agree on non-ASCII.
 _PURE_NUMBER = re.compile(r"^-?[0-9]+(?:\.[0-9]+)?$")
 _NUM_UNIT = re.compile(
     r"^[0-9]+(?:\.[0-9]+)?(?:ms|s|m|h|us|ns|B|KB|MB|GB|TB|b|kb|mb|gb|k|K|M|G)$"
@@ -279,114 +277,9 @@ def template_of(s: str, compiled=None) -> str:
     return _COLLAPSE_WILDCARD.sub("<*>", joined)
 
 
-def mask_series(s, compiled=None):
-    """Vectorized pandas implementation of the mask chain.
-
-    r6: guarded patterns run the regex over the MATCHING SUBSET only
-    (``s.loc[m] = s.loc[m].str.replace(...)``). The r5 form ran
-    ``str.replace`` over the whole series and then ``where``-merged —
-    paying the regex on the 61-100% of rows the guard had already
-    excluded. Output identical by construction (non-matching rows were
-    identity under replace anyway); engine-parity property tests pin it.
-    """
-    s = s.fillna("")
-    out = None  # copy lazily, only when a guarded subset must mutate
-    for pat, rx, repl in compiled or _COMPILED:
-        if pat.required_substring:
-            cur = out if out is not None else s
-            m = cur.str.contains(pat.required_substring, regex=False)
-            if not m.any():
-                continue
-            if out is None:
-                out = s.copy()
-            out.loc[m] = out.loc[m].str.replace(rx, repl, regex=True)
-        else:
-            cur = out if out is not None else s
-            out = cur.str.replace(rx, repl, regex=True)
-    return out if out is not None else s
-
-
-def template_series(s, compiled=None):
-    """Vectorized pandas implementation of :func:`template_of`.
-
-    Mask chain: vectorized `str.replace`. Token generalization: tokens are
-    exploded to one long Series and every heuristic is a vectorized
-    `str.fullmatch` / `str.count` / length comparison — no per-row Python
-    (north-rule requirement for the pandas/Arrow parse engine).
-    """
-    import pandas as pd
-
-    import numpy as np
-
-    masked = mask_series(s, compiled)
-    # positional frame: the run-boundary join below requires each row's
-    # tokens to form ONE contiguous run, which duplicate input labels
-    # would break (r6 review). RangeIndex guarantees it; the caller's
-    # index is restored on the way out, and rows that share a label each
-    # get their OWN template — matching the scalar template_of contract
-    # (the old groupby(level=0) form concatenated such rows' tokens).
-    orig_index = masked.index
-    masked = masked.reset_index(drop=True)
-    toks = masked.str.findall(_NS + "+")
-    ex = toks.explode()
-    present = ex.notna()
-    exs = ex[present].astype(str)
-    n = exs.str.len()
-    digits = exs.str.count(r"[0-9]")
-    # r6: digit-factored short circuit (same decision table as
-    # is_variable_token and the Catalyst twin). Every numeric/unit/
-    # timestamp rule requires a digit, and the only digitless variable
-    # shape is the all-hex-letters id — so the 4 fullmatch regexes run
-    # over the digit-bearing token subset only, and digitless tokens pay
-    # one cheap rule. Same booleans, ~60% less regex work measured.
-    has_digit = (digits > 0).to_numpy()
-    is_var = np.zeros(len(exs), dtype=bool)
-    d = exs[has_digit]
-    if len(d):
-        nd = n[has_digit]
-        dd = digits[has_digit]
-        with_digit = (
-            d.str.fullmatch(r"-?[0-9]+(?:\.[0-9]+)?")
-            | d.str.fullmatch(
-                r"[0-9]+(?:\.[0-9]+)?(?:ms|s|m|h|us|ns|B|KB|MB|GB|TB|b|kb|mb|gb|k|K|M|G)"
-            )
-            | d.str.fullmatch(r"[0-9a-fA-F-]{8,}")
-            | (d.str.fullmatch(r"[0-9][0-9:.TZ-]{3,}") & d.str.contains(r"[-:T]"))
-            | ((nd >= 4) & (dd * 100 >= 60 * nd))
-        )
-        is_var[has_digit] = with_digit.to_numpy()
-    digitless_long = (~has_digit) & (n >= 8).to_numpy()
-    g = exs[digitless_long]
-    if len(g):
-        without_digit = g.str.fullmatch(r"[a-fA-F-]+") & g.str.contains(
-            r"[a-fA-F]"
-        )
-        is_var[digitless_long] = without_digit.to_numpy()
-    is_var |= (n > LONG_TOKEN_THRESHOLD).to_numpy()
-    vals = np.where(is_var, "<*>", exs.to_numpy(dtype=object))
-    # explode() emits tokens row-contiguously, so the per-row join is a
-    # run-boundary scan over the label array — measured ~4x faster than
-    # groupby(level=0).agg(" ".join) at 650k tokens
-    idx = exs.index.to_numpy()
-    if len(idx):
-        change = np.flatnonzero(idx[1:] != idx[:-1]) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(vals)]))
-        joined = pd.Series(
-            [" ".join(vals[a:b]) for a, b in zip(starts, ends)],
-            index=idx[starts],
-            dtype=object,
-        )
-    else:  # no tokens anywhere (all-empty/whitespace batch)
-        joined = pd.Series([], index=pd.Index([]), dtype=object)
-    out = pd.Series("", index=masked.index, dtype=object)
-    out.loc[joined.index] = joined.str.replace(_COLLAPSE_WILDCARD, "<*>", regex=True)
-    out.index = orig_index
-    return out
-
-
 # ---------------------------------------------------------------------------
-# Catalyst engine — the default. The regexes above are valid Java regexes.
+# Catalyst path — what the pipeline runs. The regexes above are valid Java
+# regexes.
 # ---------------------------------------------------------------------------
 
 
@@ -470,8 +363,8 @@ def masked_frame(
     most guards rarely ('@' 0%, '://' 0%, 'db/query:' 4%, '"' 12%,
     '?' 11%), and the guarded chain drops mask time 0.80 s -> 0.52 s.
 
-    Guards check the ORIGINAL text, not the evolving string (the scalar /
-    pandas engines check the evolving string). This is result-identical
+    Guards check the ORIGINAL text, not the evolving string (the scalar
+    reference checks the evolving string). This is result-identical
     for the builtin table: no builtin replacement literal contains (or
     can form at a junction) any later pattern's required substring, so a
     substring absent from the leaf is absent from every evolving state,
@@ -480,7 +373,7 @@ def masked_frame(
     :func:`mask_text` by test_masked_frame_equals_mask_expr; a 500k-row
     corpus diff against the unguarded chain found 0 rows. User YAML
     tables get the UNGUARDED chain — an arbitrary replacement literal may
-    introduce a later guard substring, and the pandas engine
+    introduce a later guard substring, and the scalar reference
     (evolving-string guards) would then disagree.
     """
     pats = patterns or MASK_PATTERNS

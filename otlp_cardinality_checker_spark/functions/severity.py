@@ -3,7 +3,8 @@
 Re-expresses `inferSeverityFromBody` (`/root/reference/internal/analyzer/
 logs.go:51-65`): priority-ordered keyword scan ERROR > WARN > INFO > DEBUG,
 defaulting to UNSET. Pure Catalyst (a CASE chain over `contains`), so it
-stays in whole-stage codegen; the pandas twin is used for truth generation.
+stays in whole-stage codegen. The scalar :func:`severity_of` derives the
+truth tables; :func:`severity_series` is its vectorized pandas form.
 """
 
 from __future__ import annotations

@@ -440,8 +440,7 @@ def cross_split_containment(
 
 
 def _simhash_token_hashes(text_col: str):
-    """xxhash64 per distinct whitespace token — shared by both engines so
-    tokenization + hashing stay JVM-side and bit-identical."""
+    """xxhash64 per distinct whitespace token, computed JVM-side."""
     toks = F.array_distinct(
         F.filter(
             F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
@@ -455,30 +454,19 @@ def _simhash_token_hashes(text_col: str):
 _SIMHASH_BIT_VALS = [(1 << b) if b < 63 else -(1 << 63) for b in range(64)]
 
 
-def simhash_signatures(
-    docs: DataFrame, text_col: str = "text", engine: str = "sql"
-) -> DataFrame:
+def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """64-bit SimHash per document from whitespace-token hashes.
 
     For each bit b: sign = sum over tokens of (+1 if bit set else -1);
     signature bit = 1 when sum > 0 (so the signature's bit-63 contribution
     is -(1<<63) in int64 two's complement).
 
-    Dual-engine, the ``char_entropy`` pattern: ``engine="sql"`` makes ONE
-    pass over the token-hash array — a single ``F.aggregate`` folding into
-    a 64-slot vote-counter array (the pre-round-5 formulation ran 64
-    separate aggregates, re-scanning the array per bit). ``engine="pandas"``
-    is the Arrow twin: token hashes still computed JVM-side (xxhash64),
-    shipped via ``mapInArrow`` — the list column's lengths and flat values
-    buffer are read zero-copy, votes come from one ``unpackbits`` +
-    ``add.reduceat`` per batch, no per-row Python anywhere. Engines are
-    property-tested equal (test_dedup), and the sf0.001 output is pinned
-    to a golden fingerprint.
+    ONE pass over the token-hash array — a single ``F.aggregate`` folding
+    into a 64-slot vote-counter array (the pre-round-5 formulation ran 64
+    separate aggregates, re-scanning the array per bit). Votes are checked
+    against a Python count over the same token hashes (test_dedup), and
+    the sf0.001 output is pinned to a golden fingerprint.
     """
-    if engine == "pandas":
-        return _simhash_signatures_pandas(docs, text_col)
-    if engine != "sql":
-        raise ValueError(f"unknown simhash engine: {engine!r}")
     # NULL text folds to the zero signature, as pre-round-5 (votes NULL ->
     # every bit's when() falls to otherwise(0)); coalesce preserves that
     hashes = F.coalesce(
@@ -509,68 +497,6 @@ def simhash_signatures(
         lambda acc, v: acc + v,
     )
     return docs.select("doc_id", sig.alias("simhash"))
-
-
-def _simhash_signatures_pandas(docs: DataFrame, text_col: str) -> DataFrame:
-    """Arrow-batched SimHash twin: JVM token hashes in, numpy votes out."""
-
-    def batches(it):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for rb in it:
-            la = rb.column(rb.schema.get_field_index("_hashes"))
-            n = len(la)
-            # zero-copy list internals: per-row lengths (null list -> 0
-            # tokens -> zero signature, matching the SQL engine's coalesce)
-            # and the flat values buffer — no per-row Python loop
-            lens = (
-                pc.fill_null(pc.list_value_length(la), 0)
-                .cast(pa.int64())
-                .to_numpy()
-            )
-            flat = la.flatten().to_numpy()
-            counters = np.zeros((n, 64), dtype=np.int64)
-            if flat.size:
-                # (T, 64) bit matrix in one unpackbits (little-endian
-                # within AND across the 8 bytes of each hash -> column b
-                # IS bit b), then one segment-sum per row via reduceat;
-                # votes = 2*set_bits - n_tokens. The matrix stays uint8 —
-                # reduceat's dtype=int64 widens the ACCUMULATOR only, and
-                # this host (like any wide executor) is bandwidth-bound:
-                # the int32 variant moves 6x the bytes for the same sums
-                bits = np.unpackbits(
-                    flat.view(np.uint8).reshape(-1, 8),
-                    axis=1,
-                    bitorder="little",
-                )
-                nz = np.flatnonzero(lens)
-                starts = np.zeros(n, dtype=np.int64)
-                starts[1:] = np.cumsum(lens)[:-1]
-                set_bits = np.add.reduceat(
-                    bits, starts[nz], axis=0, dtype=np.int64
-                )
-                # reduceat merges a segment into the next when consecutive
-                # starts are equal — nz indexing guarantees every kept
-                # start opens a non-empty segment, so segments align 1:1
-                counters[nz] = 2 * set_bits - lens[nz, None]
-            sig = (
-                (
-                    (counters > 0).astype(np.uint64)
-                    << np.arange(64, dtype=np.uint64)
-                )
-                .sum(axis=1, dtype=np.uint64)
-                .view(np.int64)
-            )
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(rb.schema.get_field_index("doc_id")), pa.array(sig)],
-                names=["doc_id", "simhash"],
-            )
-
-    return docs.select(
-        "doc_id", _simhash_token_hashes(text_col).alias("_hashes")
-    ).mapInArrow(batches, schema="doc_id long, simhash long")
 
 
 def simhash_near_dups(docs: DataFrame) -> DataFrame:

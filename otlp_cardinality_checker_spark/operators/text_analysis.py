@@ -251,14 +251,13 @@ def filter_funnel(
     )
 
 
-def char_entropy(docs: DataFrame, engine: str = "sql") -> DataFrame:
+def char_entropy(docs: DataFrame) -> DataFrame:
     """Per-document Shannon entropy over the letter distribution (a-z) —
     the gibberish/repetition detector: natural prose sits near the
     language's letter-entropy (~2.9 nats for English); keyboard mashing,
     repeated padding, and base64 blobs land far from it.
 
-    Dual-engine (the parse stage's pattern): ``engine="sql"`` is entirely
-    scalar Catalyst expressions — 26 `replace`-based letter counts per row,
+    Entirely scalar Catalyst expressions — 26 `replace`-based letter counts per row,
     then the entropy sum with a zero-count guard; no explode, no shuffle,
     no Python. The counts/total/entropy are STACKED PROJECTIONS (lower →
     counts → total → entropy), so every generated method stays small and
@@ -270,15 +269,7 @@ def char_entropy(docs: DataFrame, engine: str = "sql") -> DataFrame:
     more than once above). The arithmetic — term order, operations,
     operand values — is unchanged, so results are bit-identical and the
     DuckDB oracle's IEEE parity after round(…, 4) is untouched.
-    ``engine="pandas"`` is the vectorized Arrow twin for when
-    entropy lands on a hot path: one np.bincount over the batch's
-    concatenated lowercased bytes, fully codegen-independent; the two
-    engines are property-tested equal (test_text_analysis).
     """
-    if engine == "pandas":
-        return _char_entropy_pandas(docs)
-    if engine != "sql":
-        raise ValueError(f"unknown char_entropy engine: {engine!r}")
     letters = "abcdefghijklmnopqrstuvwxyz"
     lo = F.col("_ce_lower")
     staged = docs.select(
@@ -314,58 +305,6 @@ def char_entropy(docs: DataFrame, engine: str = "sql") -> DataFrame:
         "lang",
         F.col("_ce_total").cast("long").alias("n_letters"),
         F.round(ent, 4).alias("entropy"),
-    )
-
-
-def _char_entropy_pandas(docs: DataFrame) -> DataFrame:
-    """Arrow-batched twin of :func:`char_entropy`: ONE np.bincount over the
-    batch's concatenated lowercased UTF-8 bytes (a-z never collides with
-    UTF-8 continuation/lead bytes, so byte counting == ASCII letter
-    counting), then vectorized -p·ln(p).  No per-row Python."""
-
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            encoded = [
-                t.lower().encode("utf-8")
-                for t in pdf["text"].fillna("").astype(str)
-            ]
-            n = len(encoded)
-            lens = np.fromiter(
-                (len(e) for e in encoded), dtype=np.int64, count=n
-            )
-            buf = np.frombuffer(b"".join(encoded), dtype=np.uint8)
-            if buf.size:
-                row_id = np.repeat(np.arange(n), lens)
-                letter = (buf >= 97) & (buf <= 122)
-                counts = np.bincount(
-                    row_id[letter] * 26 + (buf[letter] - 97),
-                    minlength=n * 26,
-                ).reshape(n, 26)
-            else:
-                counts = np.zeros((n, 26), dtype=np.int64)
-            total = counts.sum(axis=1)
-            safe = np.maximum(total, 1).astype(np.float64)
-            p = counts / safe[:, None]
-            terms = np.where(counts > 0, -p * np.log(np.where(p > 0, p, 1.0)), 0.0)
-            # SQL-engine parity: length(NULL) propagates, so NULL text
-            # yields n_letters = NULL (entropy still 0.0 via the when())
-            n_letters = pd.array(total, dtype="Int64")
-            n_letters[pdf["text"].isna().to_numpy()] = pd.NA
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "lang": pdf["lang"],
-                    "n_letters": n_letters,
-                    "entropy": np.round(terms.sum(axis=1), 4),
-                }
-            )
-
-    return docs.select("doc_id", "lang", "text").mapInPandas(
-        batches,
-        schema="doc_id long, lang string, n_letters long, entropy double",
     )
 
 

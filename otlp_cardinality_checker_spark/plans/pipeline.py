@@ -22,13 +22,12 @@ from ..sources.transcripts import load_dims, load_transcripts
 def routed_turns(
     spark: SparkSession,
     sf_dir: str,
-    engine: str = "sql",
     with_truth: bool = True,
     n_turns: int | None = None,
     patterns_yaml: str | None = None,
 ) -> DataFrame:
     turns = load_transcripts(spark, sf_dir, with_truth=with_truth, n_turns=n_turns)
-    role_dim, tool_dim = load_dims(spark, sf_dir)
-    parsed = parse_turns(turns, engine=engine, patterns_yaml=patterns_yaml)
+    role_dim, tool_dim = load_dims(spark, sf_dir, n_turns=n_turns)
+    parsed = parse_turns(turns, patterns_yaml=patterns_yaml)
     enriched = enrich_turns(parsed, role_dim, tool_dim)
     return route_turns(enriched)

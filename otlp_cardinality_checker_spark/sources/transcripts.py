@@ -44,8 +44,13 @@ def load_transcripts(
     return spark.read.parquet(str(data_dir / "transcripts.parquet"))
 
 
-def load_dims(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    data_dir = ensure_dataset(sf_dir)
+def load_dims(
+    spark: SparkSession, sf_dir: str, n_turns: int | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """(role_dim, tool_dim) from the dataset directory of ``sf_dir``, or of
+    the ``n_turns`` override. The dims need no truth, so a dataset already
+    written without it is read as it is, not regenerated."""
+    data_dir = ensure_dataset(sf_dir, with_truth=False, n_turns=n_turns)
     return (
         spark.read.parquet(str(data_dir / "role_dim.parquet")),
         spark.read.parquet(str(data_dir / "tool_dim.parquet")),

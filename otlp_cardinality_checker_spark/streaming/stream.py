@@ -147,7 +147,7 @@ def _process_batch(
 
     t0 = time.time()
     routed = route_turns(
-        enrich_turns(parse_turns(batch_df, engine="sql"), role_dim, tool_dim)
+        enrich_turns(parse_turns(batch_df), role_dim, tool_dim)
     )
     routed.persist()
     # materialize the cache in ONE job before the concurrent fan-out:

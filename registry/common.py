@@ -25,7 +25,7 @@ SF01 = "/root/testdata/sf0.01"
 
 
 def _routed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return routed_turns(spark, sf_dir, engine="sql")
+    return routed_turns(spark, sf_dir)
 
 
 def _oracle_prefix(sf_dir: str | None = None) -> str:

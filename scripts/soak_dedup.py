@@ -159,21 +159,14 @@ def main() -> None:
     out["dup_token_frac"] = round(ds_agg["dt"] / ds_agg["nt"], 4)
     out["dup_spans_checksum"] = ds_agg["h"]
 
-    # SimHash: both engines over the full corpus; checksum equality is the
-    # cross-engine correctness claim at soak scale
+    # SimHash over the full corpus
     from otlp_cardinality_checker_spark.operators.dedup import simhash_signatures
 
-    sums = {}
-    for engine in ("sql", "pandas"):
-        t0 = time.time()
-        row = (
-            simhash_signatures(docs, engine=engine)
-            .agg(F.sum(F.hash("doc_id", "simhash")).alias("h"))
-            .collect()[0]
-        )
-        out[f"simhash_{engine}_sec"] = round(time.time() - t0, 1)
-        sums[engine] = row["h"]
-    out["simhash_engines_agree"] = sums["sql"] == sums["pandas"]
+    t0 = time.time()
+    simhash_signatures(docs).agg(
+        F.sum(F.hash("doc_id", "simhash")).alias("h")
+    ).collect()
+    out["simhash_sql_sec"] = round(time.time() - t0, 1)
 
     # containment_pairs (capped): same inverted-index join budget as the
     # k-gram Jaccard leg — the leg pins that adding the asymmetric

@@ -47,7 +47,7 @@ def main() -> None:
     from otlp_cardinality_checker_spark.operators.aggregate import key_stats
     from otlp_cardinality_checker_spark.plans.pipeline import routed_turns
 
-    routed = routed_turns(spark, args.sf_dir, engine="sql")
+    routed = routed_turns(spark, args.sf_dir)
     n_turns = routed.count()
     rows = [r.asDict() for r in key_stats(routed, exact=True).collect()]
 

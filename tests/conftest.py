@@ -38,3 +38,28 @@ def tiny_routed(spark, tiny_frames):
     rd = spark.createDataFrame(role_dim(include_system=False))
     td = spark.createDataFrame(tool_dim())
     return route_turns(enrich_turns(parse_turns(df), rd, td)).cache()
+
+
+def _char_entropy_of(text):
+    """Scalar char_entropy row: (n_letters, entropy) over the lowercased
+    a-z counts, -p*ln(p) summed in the Catalyst projection's a..z term
+    order and rounded HALF_UP to 4 places as Spark's round() does."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    if text is None:  # length(NULL) propagates; every term falls to 0.0
+        return None, 0.0
+    lower = text.lower()
+    counts = [lower.count(c) for c in "abcdefghijklmnopqrstuvwxyz"]
+    total = sum(counts)
+    safe = float(max(total, 1))
+    ent = 0.0
+    for cnt in counts:
+        ent += -(cnt / safe) * math.log(cnt / safe) if cnt > 0 else 0.0
+    rounded = Decimal(repr(ent)).quantize(Decimal("0.0001"), ROUND_HALF_UP)
+    return total, float(rounded)
+
+
+@pytest.fixture(scope="session")
+def char_entropy_ref():
+    return _char_entropy_of

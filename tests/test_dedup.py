@@ -94,20 +94,34 @@ def test_simhash_identical_docs_collide(spark):
 
 def test_simhash_golden_fingerprint(spark, docs):
     """Pins the round-5 single-pass rewrite to the pre-rewrite output:
-    sum(hash(doc_id, simhash)) over sf0.001 documents, both engines."""
+    sum(hash(doc_id, simhash)) over sf0.001 documents."""
     from otlp_cardinality_checker_spark.operators.dedup import simhash_signatures
 
-    for engine in ("sql", "pandas"):
-        row = (
-            simhash_signatures(docs, engine=engine)
-            .agg(F.sum(F.hash("doc_id", "simhash")).alias("h"), F.count("*").alias("n"))
-            .collect()[0]
-        )
-        assert (row["h"], row["n"]) == (3256769042, 500), engine
+    row = (
+        simhash_signatures(docs)
+        .agg(F.sum(F.hash("doc_id", "simhash")).alias("h"), F.count("*").alias("n"))
+        .collect()[0]
+    )
+    assert (row["h"], row["n"]) == (3256769042, 500)
+
+
+def _simhash_of(hashes):
+    """Scalar SimHash over one doc's token hashes: bit b is set when more
+    tokens have it set than not; bit 63 is the int64 sign bit."""
+    sig = 0
+    for b in range(64):
+        if sum(1 if (h >> b) & 1 else -1 for h in hashes or ()) > 0:
+            sig |= 1 << b
+    return sig - (1 << 64) if sig >= 1 << 63 else sig
 
 
 def test_simhash_engines_agree_on_adversarial_inputs(spark):
-    from otlp_cardinality_checker_spark.operators.dedup import simhash_signatures
+    """The Catalyst vote fold equals a Python vote count over the same
+    JVM-side token hashes."""
+    from otlp_cardinality_checker_spark.operators.dedup import (
+        _simhash_token_hashes,
+        simhash_signatures,
+    )
 
     rows = [
         (1, ""),  # zero tokens -> zero signature
@@ -120,8 +134,13 @@ def test_simhash_engines_agree_on_adversarial_inputs(spark):
         (8, "x " * 5000),  # long degenerate doc
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(map(tuple, simhash_signatures(docs, engine="sql").collect()))
-    b = sorted(map(tuple, simhash_signatures(docs, engine="pandas").collect()))
+    a = sorted(map(tuple, simhash_signatures(docs).collect()))
+    b = sorted(
+        (r["doc_id"], _simhash_of(r["h"]))
+        for r in docs.select(
+            "doc_id", _simhash_token_hashes("text").alias("h")
+        ).collect()
+    )
     assert a == b
     by_id = dict(a)
     assert by_id[1] == by_id[2] == by_id[3] == 0

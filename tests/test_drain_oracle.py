@@ -265,7 +265,7 @@ def test_drain_templates_matches_independent_oracle_sf001(spark):
     )
     from otlp_cardinality_checker_spark.plans.pipeline import routed_turns
 
-    routed = routed_turns(spark, SF001_DIR, engine="sql")
+    routed = routed_turns(spark, SF001_DIR)
     got = drain_templates(routed).toPandas()
 
     fed = (
@@ -303,7 +303,7 @@ def test_drain_infer_matches_independent_oracle_sf001(spark):
     )
     from otlp_cardinality_checker_spark.plans.pipeline import routed_turns
 
-    routed = routed_turns(spark, SF001_DIR, engine="sql")
+    routed = routed_turns(spark, SF001_DIR)
     model = drain_templates(routed)
     inferred = drain_infer(routed, model).toPandas()
     model_pdf = model.toPandas()

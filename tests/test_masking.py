@@ -260,7 +260,13 @@ def test_catalyst_equals_scalar_on_non_ascii(spark):
 
 
 def test_parse_turns_yaml_override_both_engines(tmp_path, spark, tiny_frames):
-    """patterns_yaml flows through BOTH parse engines and they agree."""
+    """patterns_yaml flows through the Catalyst parse, which agrees with
+    the scalar template_of under the same compiled user table."""
+    from otlp_cardinality_checker_spark.functions.masking import (
+        compile_patterns,
+        load_patterns_yaml,
+        template_of,
+    )
     from otlp_cardinality_checker_spark.operators.parse import parse_turns
 
     yml = tmp_path / "user_patterns.yaml"
@@ -273,28 +279,27 @@ patterns:
 """
     )
     transcripts, _, _ = tiny_frames
-    df = spark.createDataFrame(transcripts.head(40))
+    head = transcripts.head(40)
+    df = spark.createDataFrame(head)
     sql_t = [
         r["template"]
-        for r in parse_turns(df, engine="sql", patterns_yaml=str(yml))
+        for r in parse_turns(df, patterns_yaml=str(yml))
         .orderBy("conv_id", "turn_idx")
         .select("template")
         .collect()
     ]
-    pd_t = [
-        r["template"]
-        for r in parse_turns(df, engine="pandas", patterns_yaml=str(yml))
-        .orderBy("conv_id", "turn_idx")
-        .select("template")
-        .collect()
+    compiled = compile_patterns(load_patterns_yaml(str(yml)))
+    ref_t = [
+        template_of(t or "", compiled)
+        for t in head.sort_values(["conv_id", "turn_idx"])["text"]
     ]
-    assert sql_t == pd_t
+    assert sql_t == ref_t
     assert any("X" in t for t in sql_t)  # the user mask actually applied
 
 
 def test_masked_frame_equals_mask_expr(spark):
     """The stacked-projection leaf-guarded mask chain (masked_frame /
-    with_template, the r6 fast path used by _parse_sql) is row-identical
+    with_template, the r6 fast path used by parse_turns) is row-identical
     to the scalar reference (mask_text / template_of, which derives the
     truth tables; its guards check the evolving string) on goldens AND on
     adversarial guard-interaction strings: substrings removed by earlier
@@ -365,21 +370,3 @@ def test_masked_frame_user_patterns_unguarded(spark, tmp_path):
     for r in got:
         assert r["m"] == mask_text(r["text"], compile_patterns(pats))
     assert [r["m"] for r in got] == ["<Q>", "<Q>"]
-
-
-def test_template_series_duplicate_index_labels():
-    """r6 review: duplicate input labels (public-API edge; the engines
-    always pass unique RangeIndex) must not crash the run-boundary join,
-    and each ROW keeps its own template — the scalar template_of
-    contract — rather than the old groupby form's token concatenation."""
-    import pandas as pd
-
-    from otlp_cardinality_checker_spark.functions.masking import (
-        template_of,
-        template_series,
-    )
-
-    s = pd.Series(["alpha 11", "beta 22", "gamma 33"], index=[0, 1, 0])
-    got = template_series(s)
-    assert list(got.index) == [0, 1, 0]
-    assert got.tolist() == [template_of(x) for x in s.tolist()]

@@ -8,22 +8,43 @@ import pytest
 
 
 def test_engines_agree(spark, tiny_frames):
-    """Catalyst parse engine == pandas parse engine, row for row."""
+    """Catalyst parse == the scalar references (template_of, severity_of,
+    extract_attrs) applied per row, row for row."""
+    from otlp_cardinality_checker_spark.functions.attributes import extract_attrs
+    from otlp_cardinality_checker_spark.functions.masking import template_of
+    from otlp_cardinality_checker_spark.functions.severity import severity_of
     from otlp_cardinality_checker_spark.operators.parse import parse_turns
 
     transcripts, _, _ = tiny_frames
     df = spark.createDataFrame(transcripts)
     cols = ["conv_id", "turn_idx", "severity_inferred", "template", "attrs"]
-    a = parse_turns(df, engine="sql").select(cols).toPandas()
-    b = parse_turns(df, engine="pandas").select(cols).toPandas()
     key = ["conv_id", "turn_idx"]
+    a = parse_turns(df).select(cols).toPandas()
     a = a.sort_values(key).reset_index(drop=True)
-    b = b.sort_values(key).reset_index(drop=True)
-    assert a["severity_inferred"].tolist() == b["severity_inferred"].tolist()
-    assert a["template"].tolist() == b["template"].tolist()
+    b = transcripts.sort_values(key).reset_index(drop=True)
+    texts = b["text"].fillna("").tolist()
+    assert a["severity_inferred"].tolist() == [severity_of(t) for t in texts]
+    assert a["template"].tolist() == [template_of(t) for t in texts]
     assert [sorted(d.items()) for d in a["attrs"]] == [
-        sorted(d.items()) for d in b["attrs"]
+        sorted(extract_attrs(t).items()) for t in texts
     ]
+
+
+def test_load_dims_reads_a_no_truth_dataset_as_is(spark, tmp_path, monkeypatch):
+    """The dims need no truth: after a with_truth=False load, load_dims
+    must neither write truth tables nor rewrite the transcripts."""
+    from otlp_cardinality_checker_spark import datagen
+    from otlp_cardinality_checker_spark.sources.transcripts import load_dims
+
+    monkeypatch.setattr(datagen, "DATA_ROOT", tmp_path)
+    out = datagen.ensure_dataset("sf0.0002", with_truth=False)
+    parts = out / "transcripts.parquet"
+    before = {p.name: p.stat().st_mtime_ns for p in parts.iterdir()}
+    role_dim, _ = load_dims(spark, "sf0.0002")
+    assert role_dim.count() > 0
+    assert not (out / "truth.parquet").exists()
+    assert {p.name: p.stat().st_mtime_ns for p in parts.iterdir()} == before
+    assert [p.name for p in tmp_path.iterdir()] == [out.name]
 
 
 def test_parse_matches_generation_truth(spark, tiny_frames):

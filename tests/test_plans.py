@@ -1,8 +1,8 @@
 """Physical-plan quality gates.
 
 These pin the scale-critical plan properties so regressions fail loudly:
-the enrich joins must broadcast (no fact-side shuffle), the default parse
-engine must stay JVM-side (no Python eval nodes), and projections must
+the enrich joins must broadcast (no fact-side shuffle), the parse stage
+must stay JVM-side (no Python eval nodes), and projections must
 prune columns down to the parquet scan.
 """
 
@@ -33,17 +33,6 @@ def test_sql_parse_engine_has_no_python(tiny_routed):
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
     assert "FlatMapGroupsInPandas" not in plan
-
-
-def test_pandas_engine_is_arrow_batched(spark, tiny_frames):
-    from otlp_cardinality_checker_spark.operators.parse import parse_turns
-
-    transcripts, _, _ = tiny_frames
-    plan = plan_of(parse_turns(spark.createDataFrame(transcripts), engine="pandas"))
-    # mapInPandas lowers to MapInPandas / ArrowEvalPython-family nodes,
-    # never row-at-a-time BatchEvalPython
-    assert "MapInPandas" in plan
-    assert "BatchEvalPython" not in plan
 
 
 def test_column_pruning_reaches_scan(spark):
@@ -422,8 +411,8 @@ def test_list_attributes_rejects_unbounded_limit(spark):
             list_attributes(cat, limit=bad)
 
 
-def test_char_entropy_projection_stack_compiles(spark):
-    """char_entropy's sql engine must stay a STACKED projection chain:
+def test_char_entropy_projection_stack_compiles(spark, char_entropy_ref):
+    """char_entropy must stay a STACKED projection chain:
     the single-expression form inlined each length/replace count 3x into
     the entropy sum, blew the 64KB codegen method limit, and silently
     fell back to interpreted eval recomputing lower(text) 52x/row (2.3x
@@ -448,14 +437,14 @@ def test_char_entropy_projection_stack_compiles(spark):
         assert not ("replace(" in section and "ln(" in section), (
             "entropy projection re-inlined the replace-based counts"
         )
-    # results identical to the Arrow twin (spot value check)
+    # results identical to the scalar reference (spot value check)
     sample = docs.orderBy("doc_id").limit(50)
     rows = {r["doc_id"]: r for r in char_entropy(sample).collect()}
-    twin = {
-        r["doc_id"]: r
-        for r in char_entropy(sample, engine="pandas").collect()
+    ref = {
+        r["doc_id"]: char_entropy_ref(r["text"])
+        for r in sample.select("doc_id", "text").collect()
     }
-    assert rows.keys() == twin.keys()
+    assert rows.keys() == ref.keys()
     for k in rows:
-        assert rows[k]["n_letters"] == twin[k]["n_letters"]
-        assert abs(rows[k]["entropy"] - twin[k]["entropy"]) < 1e-9
+        assert rows[k]["n_letters"] == ref[k][0]
+        assert abs(rows[k]["entropy"] - ref[k][1]) < 1e-9

@@ -1,5 +1,5 @@
-"""Property-based tests: the vectorized pandas implementations must equal
-the scalar reference implementations on arbitrary inputs (hypothesis)."""
+"""Property-based tests: the vectorized pandas helpers must equal the
+scalar reference implementations on arbitrary inputs (hypothesis)."""
 
 from __future__ import annotations
 
@@ -10,10 +10,6 @@ from hypothesis import strategies as st
 from otlp_cardinality_checker_spark.functions.attributes import (
     attrs_frame,
     extract_attrs,
-)
-from otlp_cardinality_checker_spark.functions.masking import (
-    template_of,
-    template_series,
 )
 from otlp_cardinality_checker_spark.functions.severity import (
     severity_of,
@@ -30,15 +26,6 @@ _TOKENS = st.sampled_from(
     ["GET ", "http://", "user_", "error", "warn ", " retries", "txn_", "HTTP/1.1\" "]
 )
 TEXT = st.lists(st.one_of(_CHARS, _TOKENS), min_size=0, max_size=8).map("".join)
-
-
-@settings(max_examples=300, deadline=None)
-@given(st.lists(TEXT, min_size=1, max_size=8))
-def test_template_vectorized_equals_scalar(texts):
-    s = pd.Series(texts, dtype="string")
-    vec = template_series(s).tolist()
-    scal = [template_of(t) for t in texts]
-    assert vec == scal
 
 
 @settings(max_examples=300, deadline=None)

@@ -45,10 +45,9 @@ def test_fingerprint_whitespace_canonicalization(spark):
     assert got[1] != got[3]
 
 
-def test_char_entropy_engines_agree_on_corpus(spark):
-    """Dual-engine property (the parse-stage pattern applied to entropy):
-    the Catalyst expression tree and the Arrow/numpy twin must agree on
-    every document of the sf0.01 corpus after round(…, 4)."""
+def test_char_entropy_engines_agree_on_corpus(spark, char_entropy_ref):
+    """The Catalyst expression tree must agree with the scalar a-z
+    reference on every document of the sf0.01 corpus after round(…, 4)."""
     from otlp_cardinality_checker_spark.operators.text_analysis import (
         char_entropy,
     )
@@ -56,18 +55,18 @@ def test_char_entropy_engines_agree_on_corpus(spark):
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     sql_rows = {
         r.doc_id: (r.lang, r.n_letters, r.entropy)
-        for r in char_entropy(docs, engine="sql").collect()
+        for r in char_entropy(docs).collect()
     }
-    pd_rows = {
-        r.doc_id: (r.lang, r.n_letters, r.entropy)
-        for r in char_entropy(docs, engine="pandas").collect()
+    ref_rows = {
+        r.doc_id: (r.lang, *char_entropy_ref(r.text))
+        for r in docs.select("doc_id", "lang", "text").collect()
     }
-    assert sql_rows == pd_rows and len(sql_rows) > 0
+    assert sql_rows == ref_rows and len(sql_rows) > 0
 
 
-def test_char_entropy_engines_agree_on_adversarial_inputs(spark):
+def test_char_entropy_engines_agree_on_adversarial_inputs(spark, char_entropy_ref):
     """NULL text, empty text, non-ASCII, uppercase, and single-letter spam
-    must produce identical rows from both engines."""
+    must produce the scalar reference's rows."""
     from otlp_cardinality_checker_spark.operators.text_analysis import (
         char_entropy,
     )
@@ -81,8 +80,8 @@ def test_char_entropy_engines_agree_on_adversarial_inputs(spark):
         (6, "zzzzzzzzzzzzzzzzzzzzzz", "en"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    a = sorted(map(tuple, char_entropy(docs, engine="sql").collect()))
-    b = sorted(map(tuple, char_entropy(docs, engine="pandas").collect()))
+    a = sorted(map(tuple, char_entropy(docs).collect()))
+    b = sorted((i, lang, *char_entropy_ref(text)) for i, text, lang in rows)
     assert a == b
     by_id = {t[0]: t for t in a}
     assert by_id[3][3] == 0.0  # lower() folds 4x'a'+4x'A' to one symbol
