@@ -257,9 +257,9 @@ def char_entropy(docs: DataFrame) -> DataFrame:
     language's letter-entropy (~2.9 nats for English); keyboard mashing,
     repeated padding, and base64 blobs land far from it.
 
-    Entirely scalar Catalyst expressions — 26 `replace`-based letter counts per row,
-    then the entropy sum with a zero-count guard; no explode, no shuffle,
-    no Python. The counts/total/entropy are STACKED PROJECTIONS (lower →
+    Entirely scalar Catalyst expressions — 26 `replace`-based letter
+    counts per row, then the entropy sum with a zero-count guard; no
+    explode, no shuffle, no Python. The counts/total/entropy are STACKED PROJECTIONS (lower →
     counts → total → entropy), so every generated method stays small and
     the whole stage compiles: the r5 single-expression form inlined each
     length/replace count 3x into the entropy sum (~16k generated lines),

@@ -64,7 +64,9 @@ def test_char_entropy_engines_agree_on_corpus(spark, char_entropy_ref):
     assert sql_rows == ref_rows and len(sql_rows) > 0
 
 
-def test_char_entropy_engines_agree_on_adversarial_inputs(spark, char_entropy_ref):
+def test_char_entropy_engines_agree_on_adversarial_inputs(
+    spark, char_entropy_ref
+):
     """NULL text, empty text, non-ASCII, uppercase, and single-letter spam
     must produce the scalar reference's rows."""
     from otlp_cardinality_checker_spark.operators.text_analysis import (
