@@ -326,9 +326,7 @@ _STATE_MARKERS = (
     "agg_state",
     "agg_state_compacted",
     "lineage",
-    "sink_chat",
-    "sink_error",
-    "sink_tool_call",
+    "sinks",
     "commits",  # streaming checkpoint
     "offsets",  # streaming checkpoint
 )

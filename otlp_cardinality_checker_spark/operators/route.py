@@ -6,7 +6,9 @@ stores (`/root/reference/internal/receiver/http.go:171-173`,
 rule (chat / tool-call / error); predicates are exhaustive and disjoint so
 per-sink routed-row counts must sum to the input row count (FIXTURES.md §4).
 
-At scale the fan-out writes are bucketed on ``conv_id`` so downstream
+The fan-out is one write partitioned by ``sink``
+(:func:`write_sink_partitions`), used by the stream's micro-batches and by
+:func:`write_sinks`. It is repartitioned on ``conv_id`` so downstream
 per-conversation reads and joins are co-located without a shuffle.
 """
 
@@ -43,12 +45,30 @@ def route_turns(enriched: DataFrame) -> DataFrame:
     return enriched.withColumn("sink", sink_expr())
 
 
-def split_sinks(routed: DataFrame) -> dict[str, DataFrame]:
-    """One filtered projection per sink (Catalyst pushes the filter down)."""
-    return {
-        name: routed.where(F.col("sink") == name).select(*SINK_COLUMNS[name])
-        for name in SINKS
-    }
+def write_sink_partitions(
+    routed: DataFrame,
+    path: str,
+    n_parts: int | None = 32,
+    mode: str = "overwrite",
+) -> dict[str, str]:
+    """The one sink fan-out: a single write of ``routed`` into
+    ``path/sink=<name>/``, one action for all three sinks.
+
+    Each row keeps the union of ``SINK_COLUMNS``, so ``chat`` and ``error``
+    files carry the tool columns as nulls; select ``SINK_COLUMNS[name]``
+    to read a sink in its own shape. ``repartition(n_parts, conv_id)``
+    co-locates a conversation in one task, which writes one file per sink
+    it holds rows of; pass ``n_parts=None`` when the input is already
+    conv_id-clustered. A sink without rows gets no directory.
+
+    Returns {sink_name: directory}.
+    """
+    cols = list(dict.fromkeys(c for name in SINKS for c in SINK_COLUMNS[name]))
+    df = routed.select(*cols, "sink")
+    if n_parts is not None:
+        df = df.repartition(n_parts, "conv_id")
+    df.write.mode(mode).partitionBy("sink").parquet(path)
+    return {name: str(Path(path) / f"sink={name}") for name in SINKS}
 
 
 def write_sinks(
@@ -63,57 +83,37 @@ def write_sinks(
 
     ``table_format="auto"`` writes Iceberg tables when an Iceberg catalog
     is on the classpath (gated exactly like the loader,
-    `sources/transcripts._iceberg_available`) — there the bucketing is the
-    ``bucket(n, conv_id)`` partition transform and fan-out idempotence is
-    snapshot-based. This container has no Iceberg runtime, so the fallback
-    is parquet + an explicit ``repartition(n, conv_id)``, which models the
-    same co-location property. Pass ``n_buckets=None`` when the input is
-    already conv_id-clustered.
+    `sources/transcripts._iceberg_available`) — there each sink is its own
+    table, the bucketing is the ``bucket(n, conv_id)`` partition transform
+    and fan-out idempotence is snapshot-based. Without an Iceberg runtime
+    the fallback is :func:`write_sink_partitions` into ``out_dir``: one
+    write, ``repartition(n_buckets, conv_id)``, which models the same
+    co-location property.
 
-    Returns {sink_name: location}: parquet paths under ``out_dir`` in
-    parquet mode, catalog-qualified table identifiers
+    Returns {sink_name: location}: the ``sink=<name>`` directories under
+    ``out_dir`` in parquet mode, catalog-qualified table identifiers
     (``<namespace>.sink_<name>``) in Iceberg mode — callers must treat the
     values as read targets, not assume filesystem paths.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..sources.transcripts import _iceberg_available
 
     use_iceberg = table_format == "iceberg" or (
         table_format == "auto" and _iceberg_available(routed.sparkSession)
     )
-    sinks = split_sinks(routed)
-    if use_iceberg:  # pragma: no cover - no Iceberg jar in container
-        locations = {
-            name: f"{iceberg_namespace}.sink_{name}" for name in sinks
-        }
-        routed.sparkSession.sql(
-            f"CREATE NAMESPACE IF NOT EXISTS {iceberg_namespace}"
+    if not use_iceberg:
+        return write_sink_partitions(routed, out_dir, n_buckets, mode)
+    routed.sparkSession.sql(f"CREATE NAMESPACE IF NOT EXISTS {iceberg_namespace}")
+    locations = {}
+    for name in SINKS:
+        table = locations[name] = f"{iceberg_namespace}.sink_{name}"
+        df = routed.where(F.col("sink") == name).select(*SINK_COLUMNS[name])
+        writer = df.writeTo(table).partitionedBy(
+            F.bucket(n_buckets or 32, F.col("conv_id"))
         )
-    else:
-        locations = {name: str(Path(out_dir) / f"sink_{name}") for name in sinks}
-
-    def _write(name: str) -> None:
-        df = sinks[name]
-        if use_iceberg:  # pragma: no cover - no Iceberg jar in container
-            writer = df.writeTo(locations[name]).partitionedBy(
-                F.bucket(n_buckets or 32, F.col("conv_id"))
-            )
-            exists = df.sparkSession.catalog.tableExists(locations[name])
-            if mode == "append" and exists:
-                writer.append()
-            else:
-                writer.createOrReplace()
-            return
-        if n_buckets is not None:
-            df = df.repartition(n_buckets, "conv_id")
-        df.write.mode(mode).parquet(locations[name])
-
-    # the three writes are independent jobs; submit concurrently so the
-    # scheduler keeps all cores busy across them
-    with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
-        for f in [pool.submit(_write, n) for n in sinks]:
-            f.result()
+        if mode == "append" and routed.sparkSession.catalog.tableExists(table):
+            writer.append()
+        else:
+            writer.createOrReplace()
     return locations
 
 

@@ -4,7 +4,8 @@ This is the Spark-native equivalent of the reference's ingest lifecycle
 (`/root/reference/internal/analyzer/logs.go:103-313`): ``routed_turns``
 loads the transcripts and dimensions and returns one declarative routed
 frame, the input of the aggregates (`operators/aggregate.py`) and of the
-sink fan-out (`operators/route.write_sinks`). Catalyst handles partial
+sink fan-out (one sink-partitioned write,
+`operators/route.write_sink_partitions`). Catalyst handles partial
 aggregation (the reference's analyzer-side partial merge) and AQE
 handles runtime shuffle sizing.
 """

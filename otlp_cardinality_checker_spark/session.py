@@ -65,6 +65,11 @@ def get_spark(
         # ~115 distinct classes and a stream ~70; at the default 100 entries
         # every warm pass evicts and recompiles ~80 of them
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # keep the whole-stage codegen id out of the generated source: under
+        # AQE one plan's stages do not get the same ids in every run (the
+        # stream's two dim broadcast stages swap them), and with the id in
+        # the class name such a stage misses the cache and recompiles
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")

@@ -8,9 +8,10 @@ snapshot/restore (`SURVEY.md §2.10`); the Spark-native equivalent is:
   cluster),
 * the SAME stage functions as the batch plan (parse/enrich/route are pure
   DataFrame transforms, so batch and streaming share one implementation),
-* ``foreachBatch`` writing the three sinks plus a mergeable aggregate
-  partial through :func:`_write_batch`: each micro-batch overwrites its
-  own ``_batch_id=<n>`` directory, the replay contract every stream in
+* ``foreachBatch`` making two writes per micro-batch (:func:`_process_batch`):
+  one routed write partitioned by sink, then a mergeable aggregate
+  partial. Each overwrites the micro-batch's own ``_batch_id=<n>``
+  directory (:func:`_write_batch`), the replay contract every stream in
   this module relies on,
 * a **lineage table**: one row per (batch_id, sink) with routed-row counts
   and wall time — the per-partition/micro-stage metrics the north rule asks
@@ -36,10 +37,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from ..datagen import ensure_dataset
 from ..operators.enrich import enrich_turns
 from ..operators.parse import parse_turns
-from ..operators.route import SINKS, route_turns, split_sinks
-from ..sources.transcripts import load_dims, truth_paths
+from ..operators.route import route_turns, write_sink_partitions
+from ..sources.transcripts import load_dims
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -143,6 +145,23 @@ def _process_batch(
     tool_dim: DataFrame,
     out_dir: str,
 ) -> None:
+    """Route one micro-batch into ``sinks/_batch_id=<n>/sink=<name>/``,
+    then write its aggregate-state snapshot and its lineage file.
+
+    The two writes run one after the other over the persisted routed
+    frame: the first fills the cache, and two concurrent first actions
+    would each parse the batch. The snapshot needs ``attrs``, which the
+    sink files do not store, so the cache stays. Both writes replace only
+    this batch's ``_batch_id=<n>`` directory (see :func:`_write_batch`).
+
+    Lineage rows, in ``SINKS`` order, come from the sink files' footers:
+    each of the ``n_partitions`` conv_id partitions writes one file per
+    sink it has rows for, so a starved partition is a missing file and
+    sets the sink's ``min_partition_rows`` to 0. ``wall_sec`` ends with
+    the sink write.
+    """
+    import pyarrow.parquet as pq
+
     from ..operators.sessions import snapshot_key_stats
 
     t0 = time.time()
@@ -150,75 +169,38 @@ def _process_batch(
         enrich_turns(parse_turns(batch_df), role_dim, tool_dim)
     )
     routed.persist()
-    # materialize the cache in ONE job before the concurrent fan-out:
-    # four threads racing the first action would each recompute the
-    # parse chain into the cache (measured slower than sequential)
-    routed.count()
     try:
-        n_write_parts = 4
-        sinks = split_sinks(routed)
-
-        def _one_sink(sink: str) -> dict:
-            # ONE Spark job per sink: just the write. Per-partition lineage
-            # stats come from the parquet footers of the files that write
-            # just produced (driver-side metadata reads, microseconds per
-            # file) — they describe the ACTUAL write layout rather than a
-            # second shuffle's recomputation of it, and they replace the
-            # separate stats job + per-sink persist the 12.6 s/batch fixed
-            # cost was measured with. Spark writes no file for an empty
-            # partition, so starvation is visible as missing files:
-            # fewer footers than n_write_parts -> min_partition_rows = 0.
-            _write_batch(
-                sinks[sink].repartition(n_write_parts, "conv_id"),
-                batch_id,
-                Path(out_dir) / f"sink_{sink}",
-            )
-            import pyarrow.parquet as pq
-
-            part_dir = (
-                Path(out_dir) / f"sink_{sink}" / f"_batch_id={batch_id}"
-            )
+        n_parts = 4
+        sink_dirs = write_sink_partitions(
+            routed,
+            str(Path(out_dir) / "sinks" / f"_batch_id={batch_id}"),
+            n_parts,
+        )
+        wall_sec = round(time.time() - t0, 3)
+        lineage_rows = []
+        for sink, sink_dir in sink_dirs.items():
             sizes = [
                 pq.ParquetFile(str(f)).metadata.num_rows
-                for f in sorted(part_dir.glob("*.parquet"))
+                for f in Path(sink_dir).glob("*.parquet")
             ]
-            sizes = [s for s in sizes if s > 0]
-            starved = len(sizes) < n_write_parts
-            return {
+            lineage_rows.append({
                 "batch_id": batch_id,
                 "sink": sink,
                 "n_rows": sum(sizes),
-                "n_partitions": n_write_parts,
+                "n_partitions": n_parts,
                 "n_nonempty_partitions": len(sizes),
-                "min_partition_rows": 0 if starved else min(sizes),
-                "max_partition_rows": max(sizes) if sizes else 0,
-                "wall_sec": round(time.time() - t0, 3),
-            }
-
-        def _state_snapshot() -> None:
-            # mergeable aggregate state: one PARTIAL snapshot (counts + HLL
-            # sketch binaries + sample arrays) per micro-batch. Deliberate
-            # single-file write: the snapshot is O(#keys) rows (tiny), and
-            # one file per batch keeps the resume path's latest-batch read
-            # trivial; NOT a data-volume path
-            _write_batch(
-                snapshot_key_stats(routed).coalesce(1),
-                batch_id,
-                Path(out_dir) / "agg_state",
-            )
-
-        # the three per-sink writes AND the state snapshot all depend only
-        # on the cached `routed` — they are independent jobs, so they run
-        # concurrently to overlap scheduling + I/O latency, the dominant
-        # share of the per-micro-batch FIXED cost. Same pattern as the
-        # batch fan-out (route.write_sinks). Lineage rows stay sink-ordered
-        # (pool.map preserves order; the state future is separate).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(SINKS) + 1) as pool:
-            state_future = pool.submit(_state_snapshot)
-            lineage_rows = list(pool.map(_one_sink, SINKS))
-            state_future.result()
+                "min_partition_rows": 0 if len(sizes) < n_parts else min(sizes),
+                "max_partition_rows": max(sizes, default=0),
+                "wall_sec": wall_sec,
+            })
+        # mergeable aggregate state: one partial snapshot (counts, HLL
+        # sketch binaries, sample arrays) of O(#keys) rows, written as one
+        # file so the resume path's latest-batch read stays trivial
+        _write_batch(
+            snapshot_key_stats(routed).coalesce(1),
+            batch_id,
+            Path(out_dir) / "agg_state",
+        )
     finally:
         routed.unpersist()
     lineage_dir = Path(out_dir) / "lineage"
@@ -238,8 +220,8 @@ def run_stream(
     """Run the streaming pipeline until the source is drained (or until
     `stop_after_batches` micro-batches, to simulate a kill). Returns the
     number of micro-batches executed in this invocation."""
-    src_dir = str(Path(truth_paths(sf_dir)["transcripts"]).parent / "stream_src")
-    _ensure_stream_source(spark, sf_dir, src_dir)
+    transcripts, src_dir = _stream_paths(sf_dir)
+    _ensure_stream_source(spark, transcripts, src_dir)
     role_dim, tool_dim = load_dims(spark, sf_dir)
     role_dim = role_dim.cache()
     tool_dim = tool_dim.cache()
@@ -293,12 +275,23 @@ def run_stream(
     return len(done)
 
 
-def _ensure_stream_source(spark: SparkSession, sf_dir: str, src_dir: str) -> None:
-    """Split the transcripts fixture into multiple files => micro-batches."""
-    p = Path(src_dir)
-    if (p / "_SUCCESS").exists():
+def _stream_paths(sf_dir: str) -> tuple[str, str]:
+    """(transcripts glob, stream source directory) of ``sf_dir``'s dataset.
+
+    The lookup needs no truth tables, so, as in ``load_dims``, a dataset
+    written without them is read as it is, not regenerated with them.
+    """
+    parts = ensure_dataset(sf_dir, with_truth=False) / "transcripts.parquet"
+    return str(parts / "*.parquet"), str(parts / "stream_src")
+
+
+def _ensure_stream_source(
+    spark: SparkSession, transcripts: str, src_dir: str
+) -> None:
+    """Split the transcripts into multiple files => micro-batches."""
+    if (Path(src_dir) / "_SUCCESS").exists():
         return
-    df = spark.read.parquet(truth_paths(sf_dir)["transcripts"])
+    df = spark.read.parquet(transcripts)
     df.repartition(4, "conv_id").write.mode("overwrite").parquet(src_dir)
 
 

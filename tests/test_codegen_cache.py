@@ -2,13 +2,20 @@
 
 A repeated report pass or micro-batch runs the same plans, so every
 whole-stage-codegen class it needs should come from the codegen cache.
-Two ways this regresses: the cache (``spark.sql.codegen.cache.maxEntries``)
+Three ways this regresses: the cache (``spark.sql.codegen.cache.maxEntries``)
 is smaller than a pass's working set, so each pass evicts and recompiles
-most of its classes; or a plan inlines a per-run literal (``lit(batch_id)``),
-so each run generates new source that can never hit the cache.
+most of its classes; a plan inlines a per-run literal (``lit(batch_id)``),
+so each run generates new source that can never hit the cache; or the
+codegen stage id is in the class name, and AQE does not give one plan's
+stages the same ids in every run, so its classes differ from run to run.
+
+The stream's micro-batches are also pinned on the number of Spark jobs
+each runs, counted the same way around ``_process_batch``.
 """
 
 from __future__ import annotations
+
+import pytest
 
 SF = "/root/testdata/sf0.001"
 
@@ -51,22 +58,46 @@ def test_warm_report_pass_compiles_nothing_new(spark, tiny_frames, tmp_path):
     assert warm <= 8, f"warm pass compiled {warm} classes (cold pass {cold})"
 
 
-def test_stream_micro_batches_reuse_generated_code(spark, tmp_path, monkeypatch):
-    """``run_stream`` over several small files: after the second
-    micro-batch (which still compiles a few scans of the cached dim
-    tables that the first does not), a micro-batch compiles no classes."""
+@pytest.fixture(scope="module")
+def stream_batches(spark, tmp_path_factory):
+    """``run_stream`` over the 4 sf0.001 files; per ``_process_batch``
+    call, the classes compiled and the Spark jobs run."""
     from otlp_cardinality_checker_spark.streaming import stream
 
-    per_batch: list[int] = []
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    compiles: list[int] = []
+    n_jobs: list[int] = []
     process = stream._process_batch
 
     def counted(df, batch_id, *args):
-        before = _compiles(spark)
+        c0, j0 = _compiles(spark), scheduler.numTotalJobs()
         process(df, batch_id, *args)
-        per_batch.append(_compiles(spark) - before)
+        compiles.append(_compiles(spark) - c0)
+        n_jobs.append(scheduler.numTotalJobs() - j0)
 
-    monkeypatch.setattr(stream, "_process_batch", counted)
-    n = stream.run_stream(spark, SF, str(tmp_path / "out"), str(tmp_path / "ckpt"))
-    assert n == len(per_batch) >= 4
-    assert per_batch[1] <= 8, per_batch
-    assert per_batch[2:] == [0] * (n - 2), per_batch
+    tmp = tmp_path_factory.mktemp("stream")
+    stream._process_batch = counted
+    try:
+        n = stream.run_stream(spark, SF, str(tmp / "out"), str(tmp / "ckpt"))
+    finally:
+        stream._process_batch = process
+    assert n == len(compiles) == len(n_jobs) >= 4
+    return compiles, n_jobs
+
+
+def test_stream_micro_batches_reuse_generated_code(stream_batches):
+    """After the first micro-batch, a micro-batch compiles no classes,
+    the filters over the cached dims in the enrich joins' two broadcast
+    stages included."""
+    compiles, _ = stream_batches
+    assert compiles[1:] == [0] * (len(compiles) - 1), compiles
+
+
+def test_stream_micro_batch_job_count(stream_batches):
+    """A warm micro-batch is two writes over the persisted routed frame:
+    the sink-partitioned write (5 jobs at sf0.001, the dim broadcasts and
+    the conv_id shuffle included) and the state snapshot (4). More jobs
+    means a count, a filtered per-sink write or another action came
+    back."""
+    _, n_jobs = stream_batches
+    assert max(n_jobs[1:]) <= 9, n_jobs

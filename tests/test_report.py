@@ -59,6 +59,12 @@ def test_cli_clear_refuses_non_state_dirs(tmp_path, capsys):
     assert main(["clear", str(precious), "--force"]) == 0
     assert not precious.exists()
 
+    # a stream's sink table alone is state too
+    sinks_only = tmp_path / "sinks_only"
+    (sinks_only / "sinks" / "_batch_id=0").mkdir(parents=True)
+    assert main(["clear", str(sinks_only)]) == 0
+    assert not sinks_only.exists()
+
     # missing dirs are a no-op, not an error
     assert main(["clear", str(tmp_path / "nope")]) == 0
 

@@ -25,17 +25,31 @@ def _stamp_mtimes(*paths) -> None:
 
 
 def _read_all_sinks(spark, out_dir):
-    frames = {}
-    for sink in ("chat", "error", "tool_call"):
-        pdf = (
-            spark.read.parquet(f"{out_dir}/sink_{sink}")
-            .drop("_batch_id")
-            .toPandas()
-            .sort_values(["conv_id", "turn_idx"])
-            .reset_index(drop=True)
-        )
-        frames[sink] = pdf
-    return frames
+    """Each sink of ``run_stream``'s ``sinks/`` table, in its own columns."""
+    from otlp_cardinality_checker_spark.operators.route import SINK_COLUMNS
+
+    routed = spark.read.parquet(f"{out_dir}/sinks").toPandas()
+    return {
+        sink: routed.loc[routed["sink"] == sink, list(cols)]
+        .sort_values(["conv_id", "turn_idx"])
+        .reset_index(drop=True)
+        for sink, cols in SINK_COLUMNS.items()
+    }
+
+
+def test_stream_source_lookup_writes_no_truth(tmp_path, monkeypatch):
+    """``run_stream`` needs only the transcripts: looking up its source on
+    a dataset written without truth tables must not add them."""
+    from otlp_cardinality_checker_spark import datagen
+    from otlp_cardinality_checker_spark.streaming.stream import _stream_paths
+
+    monkeypatch.setattr(datagen, "DATA_ROOT", tmp_path)
+    out = datagen.ensure_dataset("sf0.0002", with_truth=False)
+    transcripts, src_dir = _stream_paths("sf0.0002")
+    assert transcripts == str(out / "transcripts.parquet" / "*.parquet")
+    assert src_dir == str(out / "transcripts.parquet" / "stream_src")
+    assert not (out / "_SUCCESS_TRUTH").exists()
+    assert not (out / "truth.parquet").exists()
 
 
 @pytest.mark.slow
@@ -72,14 +86,7 @@ def test_kill_resume_equivalence(spark, tmp_path):
     lineage = read_lineage(str(resumed / "out"))
     assert {r["sink"] for r in lineage} == {"chat", "error", "tool_call"}
     total_routed = sum(r["n_rows"] for r in lineage)
-    n_input = spark.read.parquet(
-        f"{straight}/out/sink_chat"
-    ).count() + spark.read.parquet(
-        f"{straight}/out/sink_error"
-    ).count() + spark.read.parquet(
-        f"{straight}/out/sink_tool_call"
-    ).count()
-    assert total_routed == n_input
+    assert total_routed == sum(len(frame) for frame in a.values())
     # per-partition lineage: partition sizes must account for the sink's
     # rows and expose the skew/starvation envelope on the WRITE partitioning
     for r in lineage:
