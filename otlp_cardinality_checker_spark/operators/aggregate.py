@@ -88,11 +88,10 @@ def salted_top_k(
     keep_rank: bool = False,
 ) -> DataFrame:
     """Two-stage top-k per group with bounded reducers (the shared shape
-    behind watched_values, key_skew, sampling, and similarity's per-query
-    and per-label ranks — use it for top-k with k > 1 or when rank is
-    needed; a pure per-group argmax is cheaper as one max_by hash agg, see
-    graph.survivor_by_score): rank within (group, salt) first — any
-    global top-k row is in its salt's top-k.
+    behind watched_values, key_skew and sampling — use it for top-k with
+    k > 1 or when rank is needed; a pure per-group argmax is cheaper as
+    one max_by hash agg, see graph.survivor_by_score): rank within
+    (group, salt) first — any global top-k row is in its salt's top-k.
 
     Memory bound: stage 1 keeps at most k rows per (group, salt), so the
     final window sorts at most ``N_SALT * k`` rows per group, however

@@ -1,10 +1,10 @@
 """Distributed connected components + near-dup clustering (graph step of
 a training-data dedup pipeline).
 
-Pair generators (`dedup.exact_jaccard`, `dedup.minhash_near_dups`,
-`similarity.embedding_near_dups`) emit near-duplicate EDGES; an actual
-dedup needs the transitive closure — one cluster id per document, one
-survivor per cluster (the standard CCNet/RefinedWeb-style final step).
+Pair generators (`dedup.exact_jaccard`, `dedup.minhash_near_dups`) emit
+near-duplicate EDGES; an actual dedup needs the transitive closure — one
+cluster id per document, one survivor per cluster (the standard
+CCNet/RefinedWeb-style final step).
 
 Connected components here is the alternating **large-star / small-star**
 algorithm (Kiveris et al., "Connected Components in MapReduce and
@@ -256,7 +256,7 @@ def split_assignment(
 
 def cluster_size_hist(clusters: DataFrame) -> DataFrame:
     """Cluster-size histogram over a (doc_id, cluster_id, cluster_size)
-    clustering (the `jaccard_clusters` / `embedding_clusters` output):
+    clustering (the `jaccard_clusters` output):
     one row per size — ``(cluster_size, n_clusters, n_docs, doc_share)``.
     The shape a dedup review reads first: a healthy near-dup graph is
     singleton-dominated with a thin tail; a fat tail means the

@@ -276,13 +276,15 @@ def run_stream(
 
 
 def _stream_paths(sf_dir: str) -> tuple[str, str]:
-    """(transcripts glob, stream source directory) of ``sf_dir``'s dataset.
+    """(transcripts directory, stream source directory) of ``sf_dir``'s
+    dataset. A parquet read of the directory takes only its top-level
+    files, not those under ``stream_src/``.
 
     The lookup needs no truth tables, so, as in ``load_dims``, a dataset
     written without them is read as it is, not regenerated with them.
     """
     parts = ensure_dataset(sf_dir, with_truth=False) / "transcripts.parquet"
-    return str(parts / "*.parquet"), str(parts / "stream_src")
+    return str(parts), str(parts / "stream_src")
 
 
 def _ensure_stream_source(

@@ -18,7 +18,6 @@ FAMILIES = (
     "transcripts",
     "documents",
     "documents_dedup",
-    "embeddings",
     "events",
     "tpch",
     "streaming",

@@ -1,9 +1,9 @@
 """Shared soak instrumentation: driver-JVM peak RSS + Spark stage metrics.
 
-Used by scripts/soak.py (pipeline), scripts/soak_dedup.py, and
-scripts/soak_ann.py so every soak records the same memory envelope:
-peak RSS (local mode: driver == executors), memory/disk spill, peak task
-execution memory, and total shuffle write, via the status REST API.
+Used by scripts/soak.py (pipeline) and scripts/soak_dedup.py so every
+soak records the same memory envelope: peak RSS (local mode: driver ==
+executors), memory/disk spill, peak task execution memory, and total
+shuffle write, via the status REST API.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Dedup + similarity operator tests over the driver documents/embeddings."""
+"""Dedup operator tests over the fixture documents table and crafted corpora."""
 
 from __future__ import annotations
 
@@ -13,13 +13,6 @@ def docs(spark):
     df = spark.read.parquet(f"{SF}/documents.parquet").cache()
     yield df
     df.unpersist()  # cached plans shadow FileScan for same-path reads
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    df = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
-    yield df
-    df.unpersist()
 
 
 def test_exact_dedup_conserves_rows(spark, docs):
@@ -146,25 +139,6 @@ def test_simhash_engines_agree_on_adversarial_inputs(spark):
     assert by_id[1] == by_id[2] == by_id[3] == 0
 
 
-def test_brute_force_topk(spark, emb):
-    from otlp_cardinality_checker_spark.operators.similarity import brute_force_topk
-
-    queries = emb.limit(3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = brute_force_topk(emb, queries, k=5).toPandas()
-    assert set(got["query_id"].unique()) == set(
-        r["query_id"] for r in queries.collect()
-    )
-    for qid, grp in got.groupby("query_id"):
-        assert len(grp) == 5
-        # self must rank first with cosine 1.0
-        top = grp[grp["rank"] == 1].iloc[0]
-        assert top["vec_id"] == qid
-        assert abs(top["cosine"] - 1.0) < 1e-4
-        assert grp.sort_values("rank")["cosine"].is_monotonic_decreasing
-
-
 def test_simhash_hamming_pairs_complete_vs_brute_force(spark):
     """Block-partitioned Hamming search == brute-force all-pairs scan
     (pigeonhole completeness + XOR/popcount verify), at several d."""
@@ -210,181 +184,6 @@ def test_simhash_hamming_block_cap_semantics(spark):
         tuple(r) for r in simhash_hamming_pairs(docs, 3).collect()
     )
     assert a == b and a
-
-
-def test_brute_force_arrow_engine_matches_sql(spark, emb):
-    """The GEMM (mapInArrow) engine returns the same top-k SETS as the
-    Catalyst engine — per partition it keeps a superset of any global
-    winner, and the final fold is the same exact SQL top-k. Run against
-    a repartitioned corpus so the per-partition local-top-k path is
-    actually exercised across multiple batches."""
-    from otlp_cardinality_checker_spark.operators.similarity import (
-        brute_force_topk,
-    )
-
-    corpus = emb.repartition(7)
-    queries = emb.limit(5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    a = {
-        (r["query_id"], r["vec_id"])
-        for r in brute_force_topk(corpus, queries, k=8).collect()
-    }
-    b = {
-        (r["query_id"], r["vec_id"])
-        for r in brute_force_topk(
-            corpus, queries, k=8, engine="arrow"
-        ).collect()
-    }
-    assert a == b and len(a) == 5 * 8
-
-
-def test_lsh_arrow_engine_matches_sql(spark, emb):
-    """The GEMM bucket-assignment engine produces the same (id, table,
-    bucket) set as the Catalyst HOF fold — sign flips would need a
-    projection within float-rounding distance of zero — and therefore the
-    same lsh_topk results."""
-    from otlp_cardinality_checker_spark.operators.similarity import (
-        N_BITS,
-        N_TABLES,
-        _bucket_rows_arrow,
-        _buckets_from_planes,
-        _planes_df,
-        lsh_topk,
-    )
-
-    dim = len(emb.select("embedding").first()[0])
-    c = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("_cvec")
-    ).repartition(5)
-    planes = F.broadcast(
-        _planes_df(spark, dim, list(range(N_TABLES)), N_BITS)
-    )
-    sql_b = {
-        tuple(r)
-        for r in c.crossJoin(planes)
-        .select(
-            "vec_id",
-            F.posexplode(
-                _buckets_from_planes(F.col("_cvec"), F.col("_planes"), N_BITS)
-            ).alias("tbl", "bucket"),
-        )
-        .collect()
-    }
-    ar_b = {
-        tuple(r)
-        for r in _bucket_rows_arrow(c, dim, N_TABLES, N_BITS, "vec_id")
-        .select("vec_id", "tbl", "bucket")
-        .collect()
-    }
-    assert ar_b == sql_b
-    queries = emb.limit(4).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    a = {
-        (r["query_id"], r["vec_id"])
-        for r in lsh_topk(emb, queries, dim=dim, k=5).collect()
-    }
-    b = {
-        (r["query_id"], r["vec_id"])
-        for r in lsh_topk(
-            emb, queries, dim=dim, k=5, engine="arrow"
-        ).collect()
-    }
-    assert a == b
-
-
-def test_lsh_topk_recall_planted_clusters(spark):
-    """ANN recall measured where it is meaningful: planted angular clusters
-    (uniform random vectors have pairwise cosine ~0, so 'nearest' is noise)."""
-    from otlp_cardinality_checker_spark.operators.similarity import (
-        brute_force_topk,
-        lsh_topk,
-    )
-
-    dim, n_clusters, per_cluster = 16, 6, 8
-    rows = []
-    for c in range(n_clusters):
-        base = [((c * 37 + d * 11) % 17) - 8.0 for d in range(dim)]
-        for j in range(per_cluster):
-            noise = [(((c * 13 + j * 7 + d) % 5) - 2) * 0.05 for d in range(dim)]
-            rows.append((c * 100 + j, [b + n for b, n in zip(base, noise)]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    k = per_cluster
-    exact = brute_force_topk(emb, queries, k=k).toPandas()
-    approx = lsh_topk(emb, queries, dim=dim, k=k, n_bits=8).toPandas()
-    exact_sets = exact.groupby("query_id")["vec_id"].apply(set)
-    approx_sets = approx.groupby("query_id")["vec_id"].apply(set)
-    recalls = [
-        len(exact_sets[q] & approx_sets.get(q, set())) / k
-        for q in exact_sets.index
-    ]
-    assert sum(recalls) / len(recalls) >= 0.9
-
-
-def test_ivf_topk_recall_planted_clusters(spark):
-    """IVF recall on the same planted angular clusters as the LSH test:
-    nprobe covering half the lists must recover the cluster members."""
-    from otlp_cardinality_checker_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_fit,
-        ivf_topk,
-    )
-
-    dim, n_clusters, per_cluster = 16, 6, 8
-    rows = []
-    for c in range(n_clusters):
-        base = [((c * 37 + d * 11) % 17) - 8.0 for d in range(dim)]
-        for j in range(per_cluster):
-            noise = [(((c * 13 + j * 7 + d) % 5) - 2) * 0.05 for d in range(dim)]
-            rows.append((c * 100 + j, [b + n for b, n in zip(base, noise)]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    k = per_cluster
-    exact = brute_force_topk(emb, queries, k=k).toPandas()
-    assigned, centroids = ivf_fit(emb, nlist=6)
-    approx = ivf_topk(assigned, centroids, queries, k=k, nprobe=3).toPandas()
-    exact_sets = exact.groupby("query_id")["vec_id"].apply(set)
-    approx_sets = approx.groupby("query_id")["vec_id"].apply(set)
-    recalls = [
-        len(exact_sets[q] & approx_sets.get(q, set())) / k
-        for q in exact_sets.index
-    ]
-    assert sum(recalls) / len(recalls) >= 0.9
-
-
-def test_embedding_near_dups_exact_vs_bucketed(spark):
-    """The LSH-bucketed near-dup pairs must be a subset of the exact pairs,
-    with high recall on planted near-duplicates."""
-    from otlp_cardinality_checker_spark.operators.similarity import (
-        embedding_cosine_near_dups,
-        embedding_near_dups_exact,
-    )
-
-    dim = 12
-    rows = []
-    for i in range(30):
-        base = [((i * 7 + d * 3) % 11) - 5.0 for d in range(dim)]
-        rows.append((i * 2, base))
-        # planted near-duplicate: tiny perturbation
-        rows.append((i * 2 + 1, [b + 0.01 * ((d + i) % 3 - 1) for d, b in enumerate(base)]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dups_exact(emb, threshold=0.999).collect()
-    }
-    bucketed = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_cosine_near_dups(emb, threshold=0.999, dim=dim).collect()
-    }
-    planted = {(2 * i, 2 * i + 1) for i in range(30)}
-    assert bucketed <= exact
-    assert len(bucketed & planted) / len(planted) >= 0.9
 
 
 def test_capped_default_bounds_hot_shingle_fanout(spark):
@@ -465,74 +264,6 @@ def test_minhash_positions_are_independent_functions(spark):
     # disagree — the buggy form agreed on ALL of them
     agree = sum(1 for a, b in zip(sigs[1], sigs[2]) if a == b)
     assert agree < len(sigs[1]) // 2
-
-
-def test_lsh_bucket_regression_pin(spark):
-    """Pin the broadcast-plane bucket formulation to an independent
-    ground truth: numpy dot products against the same xorshift planes.
-
-    The round-4 formulation embedded every plane component as a literal
-    (O(dim x bits x tables) plan nodes); the broadcast-array rewrite must
-    produce bit-identical buckets. An independent recomputation (numpy,
-    not Spark HOFs) pins the semantics: bucket = sum(1<<b for bits whose
-    projection is strictly positive), per table."""
-    import numpy as np
-
-    from otlp_cardinality_checker_spark.operators.similarity import (
-        _buckets_from_planes,
-        _hyperplane,
-        _planes_df,
-    )
-
-    dim, n_tables, n_bits = 16, 4, 8
-    rows = [
-        (i, [(((i * 31 + d * 7) % 23) - 11.0) / 7.0 for d in range(dim)])
-        for i in range(40)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    planes = F.broadcast(
-        _planes_df(spark, dim, list(range(n_tables)), n_bits)
-    )
-    got = {
-        r["vec_id"]: r["buckets"]
-        for r in emb.crossJoin(planes)
-        .select(
-            "vec_id",
-            _buckets_from_planes(F.col("embedding"), F.col("_planes"), n_bits)
-            .alias("buckets"),
-        )
-        .collect()
-    }
-    for vid, vec in rows:
-        v = np.array(vec)
-        want = [
-            sum(
-                1 << b
-                for b in range(n_bits)
-                if float(v @ np.array(_hyperplane(dim, t, b))) > 0
-            )
-            for t in range(n_tables)
-        ]
-        assert got[vid] == want, vid
-
-
-def test_lsh_plan_size_constant_in_dim(spark):
-    """The plan must stay O(1) in (dim x bits x tables): at dim=384 the
-    old literal-per-component formulation put ~37k literal nodes into one
-    projection. Compare analyzed-plan text length at dim=8 vs dim=384 —
-    with planes shipped as broadcast data the plans are near-identical."""
-    from otlp_cardinality_checker_spark.operators.similarity import lsh_topk
-
-    def plan_len(dim):
-        emb = spark.createDataFrame(
-            [(0, [0.5] * dim)], "vec_id long, embedding array<double>"
-        )
-        q = emb.select(F.col("vec_id").alias("query_id"), "embedding")
-        df = lsh_topk(emb, q, dim=dim, k=3)
-        return len(df._jdf.queryExecution().analyzed().toString())
-
-    small, large = plan_len(8), plan_len(384)
-    assert large < small * 1.5, (small, large)
 
 
 def test_incremental_dedup_composes_with_store(spark, tmp_path):

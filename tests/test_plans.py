@@ -103,31 +103,17 @@ def test_minhash_verification_scores_candidates_only(spark):
     assert "explode(shingles" not in plan
 
 
-def test_topk_windows_are_two_stage(spark, tiny_routed):
-    """watched_values and brute_force_topk must never sort an unbounded key
-    partition on one reducer: the first window ranks within (key, _salt)."""
-    import pandas as pd
-
+def test_topk_windows_are_two_stage(tiny_routed):
+    """watched_values and key_skew, two salted_top_k callers, must never
+    sort an unbounded key partition on one reducer: the first window
+    ranks within (key, _salt)."""
     from otlp_cardinality_checker_spark.operators.aggregate import (
+        key_skew,
         watched_values,
     )
-    from otlp_cardinality_checker_spark.operators.similarity import (
-        brute_force_topk,
-    )
 
-    plan = plan_of(watched_values(tiny_routed))
-    assert "_salt" in plan  # salted local top-k stage present
-
-    emb = spark.createDataFrame(
-        pd.DataFrame(
-            {"vec_id": [1, 2], "embedding": [[1.0, 0.0], [0.0, 1.0]]}
-        )
-    )
-    q = spark.createDataFrame(
-        pd.DataFrame({"query_id": [10], "embedding": [[1.0, 1.0]]})
-    )
-    plan2 = plan_of(brute_force_topk(emb, q, k=1))
-    assert "_salt" in plan2
+    for df in (watched_values(tiny_routed), key_skew(tiny_routed)):
+        assert "_salt" in plan_of(df)  # salted local top-k stage present
 
 
 def test_fused_diff_scans_once(tiny_routed):

@@ -65,7 +65,10 @@ def test_merge_rejects_a_name_defined_twice(monkeypatch):
 
 if __name__ == "__main__":
     import os
+    import sys
 
+    # run as a script, the path holds tests/, not the checkout
+    sys.path.insert(0, str(MANIFEST.parent.parent))
     from registry.common import SF001
 
     os.environ["SPARK_GRAFT_ORACLE_SF"] = SF001

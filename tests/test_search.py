@@ -81,125 +81,3 @@ def test_bm25_index_parquet_roundtrip(spark, tmp_path):
     a = sorted(map(tuple, via_index.collect()))
     b = sorted(map(tuple, one_shot.collect()))
     assert a == b and len(a) > 0
-
-
-def test_embedding_health_degenerate_flags(spark):
-    """Zero vectors and NaN components are flagged; norms match the
-    closed form at 6 dp; dim is per-row exact."""
-    import math
-
-    from otlp_cardinality_checker_spark.operators.similarity import (
-        embedding_health,
-    )
-
-    rows = [
-        (0, [3.0, 4.0]),                  # norm 5
-        (1, [0.0, 0.0]),                  # zero
-        (2, [1.0, float("nan")]),         # NaN
-        (3, [1.0, 2.0, 2.0]),             # dim 3, norm 3
-    ]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {r["vec_id"]: r for r in embedding_health(vecs).collect()}
-    assert got[0]["l2_norm"] == 5.0 and not got[0]["is_zero"]
-    assert got[1]["is_zero"] and not got[1]["has_nan"]
-    assert got[2]["has_nan"] and math.isnan(got[2]["l2_norm"])
-    assert got[3]["dim"] == 3 and got[3]["l2_norm"] == 3.0
-
-
-def test_embedding_quantization_numpy_twin(spark):
-    """int8 symmetric quantization audit must match a numpy
-    implementation of the same formula, including a zero vector (exact
-    reconstruction) and a clamp-exercising outlier component."""
-    import numpy as np
-
-    from otlp_cardinality_checker_spark.operators.similarity import (
-        embedding_quantization,
-    )
-
-    vecs = [
-        (0, 0, [0.5, -0.25, 0.125, 0.0]),
-        (1, 0, [1.0, 0.001, -0.002, 0.003]),
-        (2, 1, [0.0, 0.0, 0.0, 0.0]),        # zero vector
-        (3, 1, [0.1, 0.2, -0.3, 0.4]),
-    ]
-    df = spark.createDataFrame(
-        vecs, "vec_id long, label int, embedding array<float>"
-    )
-    got = {r["label"]: r for r in embedding_quantization(df).collect()}
-
-    def audit(rows):
-        sp = np_ = 0.0
-        scales = []
-        for _, _, v in rows:
-            v = np.array(v, dtype=np.float32).astype(np.float64)
-            m = np.abs(v).max()
-            s = m / 127.0
-            scales.append(s)
-            sp += float((v * v).sum())
-            if m == 0:
-                continue
-            q = np.clip(np.round(v / s), -127, 127)
-            np_ += float(((v - s * q) ** 2).sum())
-        return scales, sp, np_
-
-    for lbl in (0, 1):
-        rows = [r for r in vecs if r[1] == lbl]
-        scales, sp, np_ = audit(rows)
-        g = got[lbl]
-        assert g["n_vecs"] == len(rows)
-        assert abs(g["avg_scale"] - round(sum(scales) / len(scales), 8)) <= 1e-8
-        assert abs(g["signal_power"] - round(sp, 6)) <= 1e-6
-        assert abs(g["noise_power"] - round(np_, 6)) <= 1e-6
-        if np_ > 0:
-            import math
-            assert abs(g["snr_db"] - round(10 * math.log10(sp / np_), 4)) <= 1e-3
-
-    # zero vector contributed nothing to label-1 noise beyond vec 3
-    assert got[1]["noise_power"] >= 0.0
-
-
-def test_class_separability_orders_separated_above_mixed(spark):
-    """Two tight, distant clusters give a large Fisher ratio; two
-    interleaved clusters give ~0 — numpy twin checks the numbers."""
-    import numpy as np
-
-    from otlp_cardinality_checker_spark.operators.similarity import (
-        class_separability,
-    )
-
-    rows = []
-    vid = 0
-    # labels 0/1: tight clusters far apart on dim 0
-    for lbl, center in ((0, -10.0), (1, 10.0)):
-        for i in range(8):
-            rows.append((vid, lbl, [center + 0.1 * (i % 3), 0.0, 1.0]))
-            vid += 1
-    # label 2: sits on top of label 0 (inseparable pair (0, 2))
-    for i in range(8):
-        rows.append((vid, 2, [-10.0 + 0.1 * (i % 3), 0.0, 1.0]))
-        vid += 1
-    df = spark.createDataFrame(
-        rows, "vec_id long, label int, embedding array<float>"
-    )
-    got = {(r["label_a"], r["label_b"]): r
-           for r in class_separability(df).collect()}
-
-    def twin(va, vb):
-        # the column is array<float>: route the twin through float32 so
-        # both sides quantize identically before the float64 math
-        va = np.array(va, dtype=np.float32).astype(np.float64)
-        vb = np.array(vb, dtype=np.float32).astype(np.float64)
-        ca, cb = va.mean(0), vb.mean(0)
-        cd2 = float(((ca - cb) ** 2).sum())
-        sa = float((((va - ca) ** 2).sum(1)).mean())
-        sb = float((((vb - cb) ** 2).sum(1)).mean())
-        return np.sqrt(cd2), cd2 / (sa + sb)
-
-    by_label = {}
-    for _, lbl, v in rows:
-        by_label.setdefault(lbl, []).append(v)
-    for (a, b), r in got.items():
-        dist, fisher = twin(by_label[a], by_label[b])
-        assert abs(r["centroid_dist"] - round(dist, 6)) <= 1e-4
-        assert abs(r["fisher_ratio"] - fisher) <= 1e-5 * max(fisher, 1.0)
-    assert got[(0, 1)]["fisher_ratio"] > 1000 * got[(0, 2)]["fisher_ratio"]

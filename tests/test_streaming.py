@@ -46,7 +46,7 @@ def test_stream_source_lookup_writes_no_truth(tmp_path, monkeypatch):
     monkeypatch.setattr(datagen, "DATA_ROOT", tmp_path)
     out = datagen.ensure_dataset("sf0.0002", with_truth=False)
     transcripts, src_dir = _stream_paths("sf0.0002")
-    assert transcripts == str(out / "transcripts.parquet" / "*.parquet")
+    assert transcripts == str(out / "transcripts.parquet")
     assert src_dir == str(out / "transcripts.parquet" / "stream_src")
     assert not (out / "_SUCCESS_TRUTH").exists()
     assert not (out / "truth.parquet").exists()

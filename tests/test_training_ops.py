@@ -643,28 +643,6 @@ def test_source_divergence_flags_outlier_source(spark):
     assert got["srcA"] < 0.1  # matches the corpus-dominant distribution
 
 
-def test_label_outliers_finds_planted_outlier(spark):
-    """A vector pointing away from its label's tight cluster must rank as
-    that label's #1 outlier."""
-    import pandas as pd
-
-    from otlp_cardinality_checker_spark.operators.similarity import (
-        label_outliers,
-    )
-
-    rows = [(i, [1.0, 0.05 * i, 0.0], 0) for i in range(8)]
-    rows.append((99, [-1.0, 0.0, 0.0], 0))       # planted outlier, label 0
-    rows += [(200 + i, [0.0, 1.0, 0.02 * i], 1) for i in range(5)]
-    emb = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["vec_id", "embedding", "label"])
-    )
-    got = label_outliers(emb, k=2).collect()
-    top0 = [r for r in got if r["label"] == 0 and r["rank"] == 1][0]
-    assert top0["vec_id"] == 99
-    assert top0["cosine"] < 0
-    assert all(r["rank"] <= 2 for r in got)
-
-
 def test_new_ops_handle_empty_input(spark):
     """Every round-2 operator must return an empty frame (not crash, not a
     null-ridden row) on empty input."""
