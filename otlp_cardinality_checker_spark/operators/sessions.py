@@ -25,6 +25,13 @@ CRITICAL_RATIO = 10.0
 WARNING_RATIO = 2.0
 NEW_KEY_WARNING_CARDINALITY = 1000
 
+# the columns of a snapshot, as snapshot_key_stats and merge_snapshots make
+# them; readers of written state declare it instead of inferring it
+STATE_SCHEMA = (
+    "sink string, key string, count bigint, hll binary, "
+    "samples array<string>, has_invalid_utf8 boolean"
+)
+
 
 def snapshot_key_stats(routed: DataFrame) -> DataFrame:
     """Mergeable session snapshot of per-(sink,key) state.
@@ -32,7 +39,8 @@ def snapshot_key_stats(routed: DataFrame) -> DataFrame:
     Carries the *sketch itself* (binary), not the estimate, so later merges
     stay exact-in-distribution — the Spark analogue of serializing HLL
     registers. Folded from the same bounded (sink, key, salt) partials as
-    ``aggregate.key_stats``.
+    ``aggregate.key_stats``. Over a one-partition ``routed`` the folds
+    need no exchange, so the snapshot is one stage (one job to write).
     """
     from .aggregate import _merged_samples, attr_partials
 
@@ -45,13 +53,21 @@ def snapshot_key_stats(routed: DataFrame) -> DataFrame:
 
 
 def merge_snapshots(*snapshots: DataFrame) -> DataFrame:
-    """Additive union of session snapshots (U2)."""
+    """Additive union of session snapshots (U2).
+
+    Snapshots hold O(#keys) rows, so the union is folded on one partition:
+    a one-partition input satisfies the grouping's distribution, the fold
+    needs no shuffle, and the merged frame is one partition (one file
+    when written). A union's HLL estimate can depend on the order its
+    sketches are merged in; this fold merges them in the input's row
+    order on any number of cores, where a shuffled merge's order followed
+    how the scan packed files into tasks."""
     from .aggregate import _merged_samples
 
     unioned = snapshots[0]
     for s in snapshots[1:]:
         unioned = unioned.unionByName(s)
-    return unioned.groupBy("sink", "key").agg(
+    return unioned.coalesce(1).groupBy("sink", "key").agg(
         F.sum("count").alias("count"),
         F.hll_union_agg("hll").alias("hll"),
         _merged_samples("samples").alias("samples"),

@@ -17,6 +17,22 @@ from pyspark.sql import functions as F, SparkSession
 
 from ..datagen import ensure_dataset
 
+# The columns of transcripts.parquet as ``datagen`` writes them: pandas'
+# naive datetimes are parquet timestamps without a zone, read as
+# timestamp_ntz. Every read of these files declares its schema, since a
+# parquet read without one runs a footer-reading Spark job per call.
+TRANSCRIPT_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp_ntz"
+)
+# The same columns with ``ts`` as a timestamp, the event time the streams
+# and the JSON-lines reader use; under the sessions' UTC zone the
+# wall-clock values are the same.
+TRANSCRIPT_EVENT_SCHEMA = TRANSCRIPT_SCHEMA.replace("_ntz", "")
+ROLE_DIM_SCHEMA = "role string, role_class string, severity_default string"
+TOOL_DIM_SCHEMA = "tool string, tool_family string, is_privileged boolean"
+JSONL_SCHEMA = f"{TRANSCRIPT_EVENT_SCHEMA}, _corrupt_record string"
+
 
 def _iceberg_available(spark: SparkSession) -> bool:
     try:
@@ -34,6 +50,9 @@ def load_transcripts(
     with_truth: bool = True,
     n_turns: int | None = None,
 ) -> DataFrame:
+    """The transcripts of ``sf_dir``'s dataset (or of the ``n_turns``
+    override). The parquet read declares ``TRANSCRIPT_SCHEMA``, so
+    building the frame runs no Spark job."""
     data_dir = ensure_dataset(sf_dir, with_truth=with_truth, n_turns=n_turns)
     if _iceberg_available(spark):  # pragma: no cover - no jar in container
         table = f"transcripts_n{data_dir.name}"
@@ -41,7 +60,9 @@ def load_transcripts(
             return spark.read.format("iceberg").load(table)
         except Exception:
             pass
-    return spark.read.parquet(str(data_dir / "transcripts.parquet"))
+    return spark.read.schema(TRANSCRIPT_SCHEMA).parquet(
+        str(data_dir / "transcripts.parquet")
+    )
 
 
 def load_dims(
@@ -49,11 +70,16 @@ def load_dims(
 ) -> tuple[DataFrame, DataFrame]:
     """(role_dim, tool_dim) from the dataset directory of ``sf_dir``, or of
     the ``n_turns`` override. The dims need no truth, so a dataset already
-    written without it is read as it is, not regenerated."""
+    written without it is read as it is, not regenerated. Both reads
+    declare their schema, so building the frames runs no Spark job."""
     data_dir = ensure_dataset(sf_dir, with_truth=False, n_turns=n_turns)
     return (
-        spark.read.parquet(str(data_dir / "role_dim.parquet")),
-        spark.read.parquet(str(data_dir / "tool_dim.parquet")),
+        spark.read.schema(ROLE_DIM_SCHEMA).parquet(
+            str(data_dir / "role_dim.parquet")
+        ),
+        spark.read.schema(TOOL_DIM_SCHEMA).parquet(
+            str(data_dir / "tool_dim.parquet")
+        ),
     )
 
 
@@ -67,12 +93,6 @@ def truth_paths(sf_dir: str) -> dict[str, str]:
         "truth": str(data_dir / "truth.parquet"),
         "truth_attrs": str(data_dir / "truth_attrs.parquet"),
     }
-
-
-JSONL_SCHEMA = (
-    "conv_id string, turn_idx int, role string, text string, "
-    "tool string, ts timestamp, _corrupt_record string"
-)
 
 
 def load_transcripts_jsonl(spark: SparkSession, path: str) -> DataFrame:

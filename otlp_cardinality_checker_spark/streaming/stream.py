@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import json
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,11 +41,10 @@ from ..datagen import ensure_dataset
 from ..operators.enrich import enrich_turns
 from ..operators.parse import parse_turns
 from ..operators.route import route_turns, write_sink_partitions
-from ..sources.transcripts import load_dims
-
-TRANSCRIPT_SCHEMA = (
-    "conv_id string, turn_idx int, role string, text string, "
-    "tool string, ts timestamp"
+from ..sources.transcripts import (
+    TRANSCRIPT_EVENT_SCHEMA,
+    TRANSCRIPT_SCHEMA,
+    load_dims,
 )
 
 # longest a stream may run before _drain stops it and raises
@@ -154,6 +153,16 @@ def _process_batch(
     sink files do not store, so the cache stays. Both writes replace only
     this batch's ``_batch_id=<n>`` directory (see :func:`_write_batch`).
 
+    A warm micro-batch runs 6 Spark jobs: the two dim broadcasts, the
+    cache fill, the ``conv_id`` shuffle and the sink write, then the
+    snapshot as one job. The snapshot folds ``routed.coalesce(1)``, which
+    needs no exchange; the parse stays parallel, since the sink write has
+    already filled the cache. A micro-batch is one source file
+    (``maxFilesPerTrigger=1``), so while that file is one split (at most
+    ``spark.sql.files.maxPartitionBytes``, 16m in ``session.py``),
+    ``routed`` is one partition anyway and the snapshot loses no
+    parallelism.
+
     Lineage rows, in ``SINKS`` order, come from the sink files' footers:
     each of the ``n_partitions`` conv_id partitions writes one file per
     sink it has rows for, so a starved partition is a missing file and
@@ -194,10 +203,10 @@ def _process_batch(
                 "wall_sec": wall_sec,
             })
         # mergeable aggregate state: one partial snapshot (counts, HLL
-        # sketch binaries, sample arrays) of O(#keys) rows, written as one
-        # file so the resume path's latest-batch read stays trivial
+        # sketch binaries, sample arrays) of O(#keys) rows, folded and
+        # written as one partition, so one file
         _write_batch(
-            snapshot_key_stats(routed).coalesce(1),
+            snapshot_key_stats(routed.coalesce(1)),
             batch_id,
             Path(out_dir) / "agg_state",
         )
@@ -232,10 +241,9 @@ def run_stream(
         _process_batch(df, batch_id, role_dim, tool_dim, out_dir)
         done.append(batch_id)
 
+    source = _source(spark, TRANSCRIPT_EVENT_SCHEMA, src_dir)
     query = _start(
-        _source(spark, TRANSCRIPT_SCHEMA, src_dir).writeStream.foreachBatch(
-            on_batch
-        ),
+        source.writeStream.foreachBatch(on_batch),
         checkpoint_dir,
     )
     try:
@@ -293,7 +301,7 @@ def _ensure_stream_source(
     """Split the transcripts into multiple files => micro-batches."""
     if (Path(src_dir) / "_SUCCESS").exists():
         return
-    df = spark.read.parquet(transcripts)
+    df = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(transcripts)
     df.repartition(4, "conv_id").write.mode("overwrite").parquet(src_dir)
 
 
@@ -308,29 +316,47 @@ def _current_snapshot_dir(out_dir: str) -> Path | None:
     return vdir if (vdir / "_manifest.json").exists() else None
 
 
+def _watermark(vdir: Path | None) -> int:
+    """The highest batch_id folded into the snapshot version ``vdir``; -1
+    for no snapshot."""
+    if vdir is None:
+        return -1
+    manifest = json.loads((vdir / "_manifest.json").read_text())
+    return int(manifest["max_batch_id"])
+
+
 def _compaction_watermark(out_dir: str) -> int:
-    vdir = _current_snapshot_dir(out_dir)
-    if vdir is not None:
-        return int(json.loads((vdir / "_manifest.json").read_text())["max_batch_id"])
-    return -1
+    return _watermark(_current_snapshot_dir(out_dir))
+
+
+def _batches_above(out_dir: str, watermark: int) -> dict[int, Path]:
+    """The ``agg_state/_batch_id=<n>`` directories with n above
+    ``watermark``, by batch_id, listed in Python."""
+    dirs = {
+        int(p.name.split("=")[1]): p
+        for p in (Path(out_dir) / "agg_state").glob("_batch_id=*")
+    }
+    return {n: p for n, p in sorted(dirs.items()) if n > watermark}
 
 
 def _merged_state(
-    spark: SparkSession, out_dir: str, watermark: int
+    spark: SparkSession, batch_dirs: Iterable[Path], vdir: Path | None
 ) -> DataFrame:
-    """Merge the per-batch partials above ``watermark`` with the current
-    compacted snapshot, if there is one."""
-    from ..operators.sessions import merge_snapshots
+    """Merge exactly the per-batch partials in ``batch_dirs`` with the
+    compacted snapshot version ``vdir``, if there is one.
 
-    parts = [
-        spark.read.parquet(str(Path(out_dir) / "agg_state"))
-        .where(F.col("_batch_id") > watermark)
-        .drop("_batch_id")
-    ]
-    vdir = _current_snapshot_dir(out_dir)
+    One read of the listed directories with the declared state schema: no
+    schema-inference job, no partition discovery over every batch ever
+    written, and a batch committed after the caller listed is not read.
+    The merge folds on one partition (:func:`merge_snapshots`), so a state
+    read is one Spark job.
+    """
+    from ..operators.sessions import STATE_SCHEMA, merge_snapshots
+
+    paths = [str(p) for p in batch_dirs]
     if vdir is not None:
-        parts.append(spark.read.parquet(str(vdir / "data")))
-    return merge_snapshots(*parts)
+        paths.append(str(vdir / "data"))
+    return merge_snapshots(spark.read.schema(STATE_SCHEMA).parquet(*paths))
 
 
 def compact_state(spark: SparkSession, out_dir: str) -> int:
@@ -342,7 +368,9 @@ def compact_state(spark: SparkSession, out_dir: str) -> int:
     records the highest folded ``batch_id`` (the compaction watermark) and
     the read path ignores batch partitions at or below it, so a checkpoint
     replay that re-materializes an already-folded batch partition cannot
-    double-count.
+    double-count. The fold reads exactly the batch directories listed
+    here, the ones the new watermark covers: a batch committed meanwhile
+    stays above it, to be read once.
 
     Crash safety: the merged data AND its watermark manifest are written
     into a fresh versioned directory (``v<watermark>``), and only then does
@@ -351,27 +379,24 @@ def compact_state(spark: SparkSession, out_dir: str) -> int:
     consistent (data, watermark) pair — the new version directory is
     simply garbage that the next successful compaction supersedes. This is
     exactly the snapshot-pointer commit protocol of an Iceberg MERGE INTO
-    + snapshot-expire on the state table. Returns the live watermark.
+    + snapshot-expire on the state table. The merged state is one
+    partition, written as one file. Returns the live watermark.
     """
     import os
     import shutil
 
     comp_dir = Path(out_dir) / "agg_state_compacted"
-    watermark = _compaction_watermark(out_dir)
-    batch_ids = sorted(
-        int(p.name.split("=")[1])
-        for p in (Path(out_dir) / "agg_state").glob("_batch_id=*")
-        if int(p.name.split("=")[1]) > watermark
-    )
-    if not batch_ids:
-        return watermark
     prev = _current_snapshot_dir(out_dir)
-    merged = _merged_state(spark, out_dir, watermark)
-    new_watermark = max(batch_ids)
+    watermark = _watermark(prev)
+    batches = _batches_above(out_dir, watermark)
+    if not batches:
+        return watermark
+    merged = _merged_state(spark, batches.values(), prev)
+    new_watermark = max(batches)
     vdir = comp_dir / f"v{new_watermark}"
     if vdir.exists():  # leftover from a crashed attempt — never published
         shutil.rmtree(vdir)
-    merged.coalesce(1).write.mode("overwrite").parquet(str(vdir / "data"))
+    merged.write.mode("overwrite").parquet(str(vdir / "data"))
     (vdir / "_manifest.json").write_text(
         json.dumps({"max_batch_id": new_watermark})
     )
@@ -397,13 +422,14 @@ def current_key_stats(spark: SparkSession, out_dir: str) -> DataFrame:
     recombine exactly (min-10 of min-10s) — so the streaming state equals
     the batch-mode aggregate regardless of micro-batch boundaries or how
     often :func:`compact_state` ran in between. Batch partitions at or
-    below the compaction watermark are excluded (replay safety).
+    below the compaction watermark are excluded (replay safety); the
+    watermark and the snapshot come from one resolution of ``CURRENT``.
     """
     from ..operators.sessions import estimate
 
-    return estimate(
-        _merged_state(spark, out_dir, _compaction_watermark(out_dir))
-    )
+    vdir = _current_snapshot_dir(out_dir)
+    batches = _batches_above(out_dir, _watermark(vdir))
+    return estimate(_merged_state(spark, batches.values(), vdir))
 
 
 def read_lineage(out_dir: str):
@@ -514,7 +540,7 @@ def sessionize_stream(
             yield pd.DataFrame(closed)
 
     turns = (
-        _source(spark, TRANSCRIPT_SCHEMA, src_dir)
+        _source(spark, TRANSCRIPT_EVENT_SCHEMA, src_dir)
         .select("conv_id", "turn_idx", "tool", "ts")
         .withWatermark("ts", watermark)
     )
@@ -1092,7 +1118,7 @@ def markers_stream(
         )
 
     return _foreach_batch(
-        spark, TRANSCRIPT_SCHEMA, src_dir, checkpoint_dir, on_batch
+        spark, TRANSCRIPT_EVENT_SCHEMA, src_dir, checkpoint_dir, on_batch
     )
 
 
@@ -1196,7 +1222,7 @@ def trending_stream(
         )
 
     return _foreach_batch(
-        spark, TRANSCRIPT_SCHEMA, src_dir, checkpoint_dir, on_batch
+        spark, TRANSCRIPT_EVENT_SCHEMA, src_dir, checkpoint_dir, on_batch
     )
 
 

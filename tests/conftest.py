@@ -18,6 +18,20 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` calls ``fn()`` and returns its result with the
+    number of Spark jobs submitted meanwhile."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def count(fn):
+        before = scheduler.numTotalJobs()
+        result = fn()
+        return result, scheduler.numTotalJobs() - before
+
+    return count
+
+
+@pytest.fixture(scope="session")
 def tiny_frames():
     """FIXTURES.md tiny scale: 20 conv x 10 turns = 200 rows (plus truth)."""
     from otlp_cardinality_checker_spark.datagen import generate_transcripts

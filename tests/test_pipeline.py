@@ -47,6 +47,57 @@ def test_load_dims_reads_a_no_truth_dataset_as_is(spark, tmp_path, monkeypatch):
     assert [p.name for p in tmp_path.iterdir()] == [out.name]
 
 
+def test_loads_run_no_job(spark, count_jobs, tmp_path, monkeypatch):
+    """Building the transcripts and dims frames runs no Spark job: each
+    parquet read declares its schema instead of reading the footers for
+    one."""
+    from otlp_cardinality_checker_spark import datagen
+    from otlp_cardinality_checker_spark.sources.transcripts import (
+        load_dims,
+        load_transcripts,
+    )
+
+    monkeypatch.setattr(datagen, "DATA_ROOT", tmp_path)
+    datagen.ensure_dataset("sf0.0002")
+    _, jobs = count_jobs(lambda: load_transcripts(spark, "sf0.0002"))
+    assert jobs == 0
+    _, jobs = count_jobs(lambda: load_dims(spark, "sf0.0002"))
+    assert jobs == 0
+
+
+def test_declared_schemas_match_their_writers(
+    spark, tiny_routed, tmp_path, monkeypatch
+):
+    """Each declared schema is, names and types in order, what its writer
+    produces: the inferred schema of a generated dataset's files, and a
+    state snapshot's schema. A column the writer renamed or retyped would
+    otherwise read as null under the declared schema."""
+    from pyspark.sql.types import StructType
+
+    from otlp_cardinality_checker_spark import datagen
+    from otlp_cardinality_checker_spark.operators.sessions import (
+        STATE_SCHEMA,
+        snapshot_key_stats,
+    )
+    from otlp_cardinality_checker_spark.sources import transcripts as src
+
+    def fields(schema):  # names and types; nullability is no type
+        return [(f.name, f.dataType.simpleString()) for f in schema]
+
+    monkeypatch.setattr(datagen, "DATA_ROOT", tmp_path)
+    out = datagen.ensure_dataset("sf0.0002", with_truth=False)
+    for name, ddl in (
+        ("transcripts.parquet", src.TRANSCRIPT_SCHEMA),
+        ("role_dim.parquet", src.ROLE_DIM_SCHEMA),
+        ("tool_dim.parquet", src.TOOL_DIM_SCHEMA),
+    ):
+        inferred = spark.read.parquet(str(out / name)).schema
+        assert fields(inferred) == fields(StructType.fromDDL(ddl)), name
+    assert fields(snapshot_key_stats(tiny_routed).schema) == fields(
+        StructType.fromDDL(STATE_SCHEMA)
+    )
+
+
 def test_parse_matches_generation_truth(spark, tiny_frames):
     from otlp_cardinality_checker_spark.operators.parse import parse_turns
 

@@ -159,6 +159,86 @@ def test_compaction_gc_keeps_previous_version_one_cycle(spark, tmp_path):
     assert v2.exists() and (comp_dir / f"v{wm3}").exists()
 
 
+def _write_state_batches(tiny_routed, state_dir) -> None:
+    """Two micro-batches' state snapshots, ``_batch_id=0`` and ``=1``, from
+    disjoint halves of the tiny routed frame."""
+    import pyspark.sql.functions as F
+
+    from otlp_cardinality_checker_spark.operators.sessions import (
+        snapshot_key_stats,
+    )
+
+    early = F.col("turn_idx") < 5
+    for batch_id, part in enumerate((early, ~early)):
+        snapshot_key_stats(tiny_routed.where(part)).write.parquet(
+            str(state_dir / f"_batch_id={batch_id}")
+        )
+
+
+def test_state_read_is_one_job(spark, tiny_routed, count_jobs, tmp_path):
+    """After compaction, a state read is one Spark job, with no batch
+    above the watermark and with one: the listed directories are read
+    with the declared state schema (no schema-inference jobs) and merged
+    on one partition (no shuffle)."""
+    import shutil
+
+    from otlp_cardinality_checker_spark.streaming.stream import (
+        compact_state,
+        current_key_stats,
+    )
+
+    out = tmp_path / "out"
+    _write_state_batches(tiny_routed, out / "agg_state")
+    assert compact_state(spark, str(out)) == 1
+    rows, jobs = count_jobs(lambda: current_key_stats(spark, str(out)).collect())
+    assert rows and jobs == 1
+    shutil.copytree(out / "agg_state" / "_batch_id=0", out / "agg_state" / "_batch_id=2")
+    rows, jobs = count_jobs(lambda: current_key_stats(spark, str(out)).collect())
+    assert rows and jobs == 1
+
+
+def test_compaction_folds_exactly_the_batches_it_listed(
+    spark, tiny_routed, tmp_path, monkeypatch
+):
+    """A batch committed while compact_state runs, after it listed the
+    batch directories and before it read them, stays out of the snapshot:
+    the new watermark does not cover it, so it is read once, from
+    ``agg_state``, and folded by the next compaction."""
+    import shutil
+
+    from otlp_cardinality_checker_spark.streaming import stream
+
+    out = tmp_path / "out"
+    state = out / "agg_state"
+    _write_state_batches(tiny_routed, state)
+
+    def counts(out_dir):
+        return sorted(
+            (r["sink"], r["key"], r["count"])
+            for r in stream.current_key_stats(spark, str(out_dir)).collect()
+        )
+
+    # the same state with batch 7 committed before any compaction
+    ref = tmp_path / "ref"
+    shutil.copytree(out, ref)
+    shutil.copytree(state / "_batch_id=0", ref / "agg_state" / "_batch_id=7")
+    want = counts(ref)
+    assert want != counts(out)
+
+    merged_state = stream._merged_state
+
+    def late_commit(*args):
+        shutil.copytree(state / "_batch_id=0", state / "_batch_id=7")
+        return merged_state(*args)
+
+    monkeypatch.setattr(stream, "_merged_state", late_commit)
+    assert stream.compact_state(spark, str(out)) == 1
+    monkeypatch.undo()
+    assert counts(out) == want
+    assert stream.compact_state(spark, str(out)) == 7
+    assert counts(out) == want
+
+
 @pytest.mark.slow
 def test_state_compaction_crash_safety(spark, tmp_path):
     """The compaction commit is a single atomic CURRENT-pointer swap: a
