@@ -3,9 +3,7 @@
 The production target is an Iceberg table (north rule); this container has
 no Iceberg runtime jar, so the loader gates on catalog availability and
 falls back to the deterministic parquet fixtures written by ``datagen``.
-Both paths yield the exact `input_hint` schema:
-``conv_id string, turn_idx int, role string, text string, tool string,
-ts timestamp``.
+Both paths yield the `input_hint` columns, ``TRANSCRIPT_SCHEMA`` below.
 """
 
 from __future__ import annotations

@@ -188,12 +188,17 @@ def test_state_read_is_one_job(spark, tiny_routed, count_jobs, tmp_path):
     )
 
     out = tmp_path / "out"
-    _write_state_batches(tiny_routed, out / "agg_state")
+    state = out / "agg_state"
+    _write_state_batches(tiny_routed, state)
     assert compact_state(spark, str(out)) == 1
-    rows, jobs = count_jobs(lambda: current_key_stats(spark, str(out)).collect())
+
+    def read():
+        return count_jobs(lambda: current_key_stats(spark, str(out)).collect())
+
+    rows, jobs = read()
     assert rows and jobs == 1
-    shutil.copytree(out / "agg_state" / "_batch_id=0", out / "agg_state" / "_batch_id=2")
-    rows, jobs = count_jobs(lambda: current_key_stats(spark, str(out)).collect())
+    shutil.copytree(state / "_batch_id=0", state / "_batch_id=2")
+    rows, jobs = read()
     assert rows and jobs == 1
 
 
