@@ -288,10 +288,12 @@ def key_stats_and_catalog(routed: DataFrame) -> tuple[DataFrame, DataFrame]:
     (``localCheckpoint``) and both returned frames read that RDD: column
     pruning would otherwise give the two branches of a report's union
     different aggregate lists, so ReuseExchange never fires and the
-    explode, both shuffles and the value-rank window run twice. Under AQE
-    the checkpoint's shuffle stages run when this function builds the
-    frame, not at the caller's action; the final fold is tiny (one row
-    per (sink, key) and per key).
+    explode, both shuffles and the value-rank window run twice. The
+    checkpoint is eager: the aggregation runs when this function builds
+    the frame, not at the caller's action, so the two branches of a
+    report's union read cached blocks instead of both computing the same
+    checkpoint partition at once. The final fold is tiny (one row per
+    (sink, key) and per key).
 
     HLL mode only: per-sink exact distinct counts cannot merge across
     sinks (shared values double-count) — sketches union exactly under any
@@ -306,7 +308,7 @@ def key_stats_and_catalog(routed: DataFrame) -> tuple[DataFrame, DataFrame]:
                 _cardinality(exact=False), F.sort_array(F.collect_set("sink"))
             ),
         )
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     key_stats_df = _with_pct(gs.where(F.col("_gid") == 0), routed)
     # grouping_id: bit per grouping col, MSB first -> (key)-only set = 0b10

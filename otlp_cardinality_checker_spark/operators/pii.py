@@ -100,98 +100,6 @@ def pii_stats(routed: DataFrame) -> DataFrame:
     )
 
 
-def k_anonymity(
-    df: DataFrame, qi_cols: list[str], k_threshold: int = 5
-) -> DataFrame:
-    """k-anonymity audit over a quasi-identifier column set: the
-    equivalence-class-size histogram plus re-identification-risk
-    accounting. A row is k-anonymous at level k when at least k rows share
-    its full quasi-identifier combination; classes with k below the
-    threshold are the re-identification risk a privacy review flags
-    before a dataset (or an attribute-rich transcript dump) is released.
-
-    Output grain is the class SIZE, not the class: one row per distinct
-    k with n_classes, n_rows, at_risk (k < k_threshold) and the
-    row-share of the population at that size — bounded output no matter
-    how many QI combinations exist.
-
-    Scale shape: one hash-aggregation to the QI grain (the only exchange,
-    map-side combined), then a second agg over class sizes (input is one
-    row per CLASS, already tiny relative to the data) and a broadcast
-    1-row total for the share — no window over the full frame, no second
-    scan. Hot QI combinations cost one counter each; skew cannot
-    concentrate rows because the first agg's output grain is the class.
-    """
-    if not qi_cols:
-        raise ValueError("qi_cols must name at least one column")
-    classes = df.groupBy(*[F.col(c) for c in qi_cols]).agg(
-        F.count(F.lit(1)).alias("k")
-    )
-    hist = classes.groupBy("k").agg(F.count(F.lit(1)).alias("n_classes"))
-    tot = hist.agg(F.sum(F.col("k") * F.col("n_classes")).alias("n_total"))
-    return (
-        hist.crossJoin(F.broadcast(tot))
-        .select(
-            "k",
-            "n_classes",
-            (F.col("k") * F.col("n_classes")).alias("n_rows"),
-            (F.col("k") < F.lit(k_threshold)).alias("at_risk"),
-            F.round(
-                F.col("k") * F.col("n_classes") / F.col("n_total"), 6
-            ).alias("row_share"),
-        )
-    )
-
-
-def l_diversity(
-    df: DataFrame,
-    qi_cols: list[str],
-    sensitive_col: str,
-    l_threshold: int = 2,
-) -> DataFrame:
-    """l-diversity audit — the attribute-disclosure companion to
-    :func:`k_anonymity`: a QI equivalence class is l-diverse when it
-    contains at least ``l`` DISTINCT values of the sensitive attribute.
-    A class can be large (k-anonymous) yet still leak the sensitive
-    value outright when every member shares it — the homogeneity attack
-    k-anonymity cannot see.
-
-    Output grain mirrors k_anonymity: one row per distinct (class size
-    k, distinct-sensitive count l) pair with n_classes, n_rows,
-    at_risk (l < l_threshold) and row_share — bounded output no matter
-    how many QI combinations exist.
-
-    Scale shape: one hash-aggregation to the QI grain computing both
-    count(*) and count(distinct sensitive) — count_distinct triggers
-    Spark's standard two-phase expand (QI+value grain partials then the
-    QI fold), both map-side combined; then a tiny histogram agg over
-    (k, l) pairs and a broadcast 1-row total. Hot QI combinations cost
-    one counter set each.
-    """
-    if not qi_cols:
-        raise ValueError("qi_cols must name at least one column")
-    if l_threshold < 1:
-        raise ValueError(f"l_threshold must be >= 1, got {l_threshold}")
-    classes = df.groupBy(*[F.col(c) for c in qi_cols]).agg(
-        F.count(F.lit(1)).alias("k"),
-        F.count_distinct(F.col(sensitive_col)).alias("l"),
-    )
-    hist = classes.groupBy("k", "l").agg(
-        F.count(F.lit(1)).alias("n_classes")
-    )
-    tot = hist.agg(F.sum(F.col("k") * F.col("n_classes")).alias("n_total"))
-    return hist.crossJoin(F.broadcast(tot)).select(
-        "k",
-        "l",
-        "n_classes",
-        (F.col("k") * F.col("n_classes")).alias("n_rows"),
-        (F.col("l") < F.lit(l_threshold)).alias("at_risk"),
-        F.round(
-            F.col("k") * F.col("n_classes") / F.col("n_total"), 6
-        ).alias("row_share"),
-    )
-
-
 def pii_propagation(turns: DataFrame, text_col: str = "text") -> DataFrame:
     """PII propagation audit: once a concrete identifier value (a UUID,
     email, IP, long number) enters a conversation, does it REAPPEAR in

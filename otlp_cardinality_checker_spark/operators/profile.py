@@ -1,13 +1,13 @@
-"""Generic numeric column profiler — the one-call table health scan.
+"""Generic string column profiler — the one-call table health scan.
 
 The reference profiles telemetry attributes (key catalogs, cardinality,
-samples); a warehouse-side pipeline wants the same glance for ANY numeric
-table before it joins or trains on it: null rates, exact distincts,
-range, mean. `numeric_profile` is that scan as ONE aggregation — the
-`dataset_card` idiom generalized to arbitrary tables (TPC-H lineitem in
-the driver query).
+samples); a pipeline wants the same glance for any text table before it
+joins or aggregates it: null and empty rates, exact distincts, length
+range and mean. `string_profile` is that scan as ONE aggregation — the
+`dataset_card` idiom generalized to arbitrary columns (the transcripts
+in the driver query).
 
-Scale shape: a single hash aggregation computes every column's six
+Scale shape: a single hash aggregation computes every column's
 statistics in one pass (the multi-count-distinct expands to a
 grouping-set pass, all map-side combinable — the same expand
 `attribute_catalog` uses); the unpivot to long form runs on the 1-row
@@ -20,40 +20,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def numeric_profile(df: DataFrame, columns: list[str]) -> DataFrame:
-    """One row per profiled column — ``(column, n_rows, n_nulls,
-    n_distinct, min_value, max_value, mean_value)``; values cast to
-    double and rounded (6/6/4 dp) so the long-form schema is uniform
-    and cross-engine hash-stable.
-    """
-    aggs = []
-    for c in columns:
-        col = F.col(c).cast("double")
-        aggs += [
-            F.count(F.lit(1)).alias(f"{c}__n"),
-            F.sum(col.isNull().cast("long")).alias(f"{c}__nulls"),
-            F.countDistinct(col).alias(f"{c}__nd"),
-            F.round(F.min(col), 6).alias(f"{c}__min"),
-            F.round(F.max(col), 6).alias(f"{c}__max"),
-            F.round(F.avg(col), 4).alias(f"{c}__mean"),
-        ]
-    wide = df.agg(*aggs)
-    stacked = ", ".join(
-        f"'{c}', {c}__n, {c}__nulls, {c}__nd, {c}__min, {c}__max, {c}__mean"
-        for c in columns
-    )
-    return wide.selectExpr(
-        f"stack({len(columns)}, {stacked}) AS "
-        "(column, n_rows, n_nulls, n_distinct, min_value, max_value, "
-        "mean_value)"
-    )
-
-
 def string_profile(df: DataFrame, columns: list[str]) -> DataFrame:
-    """String-column companion to `numeric_profile`: per column —
-    ``(column, n_rows, n_nulls, n_empty, n_distinct, min_length,
-    max_length, avg_length)``. Same one-aggregation shape (the
-    multi-count-distinct expand), same long-form unpivot; distinct
+    """One row per profiled column — ``(column, n_rows, n_nulls,
+    n_empty, n_distinct, min_length, max_length, avg_length)``; distinct
     counting runs on md5 digests so wide text never widens the agg
     state.
     """

@@ -274,107 +274,3 @@ def fd_audit(
         F.sum(F.col("_rows") * viol).alias("violating_rows"),
         F.max("_nrhs").alias("max_rhs_per_lhs"),
     )
-
-
-def purge_audit(
-    tables: dict[str, tuple[DataFrame, str]],
-    subjects: DataFrame,
-    subject_col: str = "subject_id",
-) -> DataFrame:
-    """Right-to-erasure impact audit: given a deletion-subject list,
-    report per table how many rows (and what share) a purge would
-    remove — the compliance dry-run that runs BEFORE tombstoning, so the
-    blast radius is known and the anti-join the real purge will use is
-    already exercised.
-
-    ``tables`` maps table name -> (frame, key column matching the
-    subject ids). Output grain: one row per table — ``(table, n_rows,
-    n_purged, purge_share, n_subjects_hit)``.
-
-    Scale shape: per table, ONE semi-join-shaped aggregation against the
-    broadcast subject list (subjects are small by construction — a
-    deletion request batch); no shuffle of fact rows, counts fold
-    map-side. The real purge is the same join as an anti-join write.
-    """
-    outs = []
-    for name, (df, key) in tables.items():
-        j = df.select(F.col(key).alias("k")).join(
-            F.broadcast(subjects.select(F.col(subject_col).alias("k"))
-                        .distinct()
-                        .withColumn("_hit", F.lit(1))),
-            "k",
-            "left",
-        )
-        outs.append(
-            j.agg(
-                F.lit(name).alias("table"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.coalesce(F.col("_hit"), F.lit(0)).cast("long")).alias(
-                    "n_purged"
-                ),
-                F.round(
-                    F.sum(F.coalesce(F.col("_hit"), F.lit(0)).cast("long"))
-                    / F.count(F.lit(1)),
-                    6,
-                ).alias("purge_share"),
-                F.countDistinct(
-                    F.when(F.col("_hit") == 1, F.col("k"))
-                ).alias("n_subjects_hit"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def ri_scorecard(
-    edges: dict[str, tuple[DataFrame, str, DataFrame, str]],
-) -> DataFrame:
-    """Referential-integrity scorecard across a whole schema: one row
-    per FK edge — ``(edge, n_rows, n_orphans, orphan_share,
-    n_distinct_orphan_keys)``. The multi-edge generalization of
-    `ref_integrity` (which scores one edge inside `constraint_audit`):
-    a warehouse onboarding a new source runs THIS first, because a
-    single broken edge silently nulls every downstream broadcast
-    enrichment built on it.
-
-    ``edges`` maps edge name -> (fact frame, fk column, dim frame,
-    pk column).
-
-    Scale shape: per edge, the dim's DISTINCT keys broadcast (dims are
-    dimension-sized by definition; for fact-to-fact edges swap in the
-    Bloom-membership operator) and orphan counts fold map-side; fact
-    rows never shuffle. NULL fks are not orphans (SQL FK semantics) and
-    are excluded, mirrored by the oracle.
-    """
-    outs = []
-    for name, (fact, fk, dim, pk) in edges.items():
-        keys = (
-            dim.select(F.col(pk).alias("_k"))
-            .distinct()
-            .withColumn("_present", F.lit(1))
-        )
-        j = (
-            fact.select(F.col(fk).alias("_k"))
-            .where(F.col("_k").isNotNull())
-            .join(F.broadcast(keys), "_k", "left")
-        )
-        orphan = (F.col("_present").isNull()).cast("long")
-        outs.append(
-            j.agg(
-                F.lit(name).alias("edge"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(orphan).alias("n_orphans"),
-                F.round(F.sum(orphan) / F.count(F.lit(1)), 6).alias(
-                    "orphan_share"
-                ),
-                F.countDistinct(
-                    F.when(F.col("_present").isNull(), F.col("_k"))
-                ).alias("n_distinct_orphan_keys"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out

@@ -19,6 +19,5 @@ FAMILIES = (
     "documents",
     "documents_dedup",
     "events",
-    "tpch",
     "streaming",
 )

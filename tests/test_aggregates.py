@@ -285,6 +285,32 @@ def test_grouping_sets_key_stats_and_catalog(tiny_routed):
     assert "Generate explode" not in _final_plan(report)
 
 
+def test_key_stats_and_catalog_checkpoint_is_eager(spark, tiny_routed):
+    """When key_stats_and_catalog returns, before any action, every
+    partition of its grouping-sets checkpoint is already cached. A lazy
+    checkpoint is filled by the caller's action instead, where both
+    branches of a report's union can compute the same partition at once
+    (Spark logs ``Block rdd_N_0 already exists``)."""
+    from otlp_cardinality_checker_spark.operators.aggregate import (
+        key_stats_and_catalog,
+    )
+
+    _, catalog = key_stats_and_catalog(tiny_routed)
+    leaves = catalog._jdf.queryExecution().analyzed().collectLeaves()
+    [rdd_id] = [
+        leaf.rdd().id()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.nodeName() == "LogicalRDD"
+    ]
+    cached = {
+        info.id(): (info.numCachedPartitions(), info.numPartitions())
+        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    }
+    assert rdd_id in cached, "checkpoint not materialized on return"
+    n_cached, n_partitions = cached[rdd_id]
+    assert n_cached == n_partitions > 0
+
+
 def test_attr_frequencies_explode_once(tiny_routed, tmp_path):
     """watched_values' top-k and per-key totals share ONE (key, value)
     frequency frame: its explode and (key, value) shuffle must not run

@@ -204,40 +204,6 @@ def test_fd_audit_violation_accounting(spark):
     assert holding["n_violating"] == 0 and holding["max_rhs_per_lhs"] == 1
     with _pytest.raises(ValueError):
         fd_audit(df, [], "v")
-def test_numeric_profile_hand_case(spark):
-    from otlp_cardinality_checker_spark.operators.profile import (
-        numeric_profile,
-    )
-
-    rows = [(1.0, 10), (2.0, 10), (None, 20), (2.0, None)]
-    df = spark.createDataFrame(rows, "a double, b int")
-    got = {r["column"]: r for r in numeric_profile(df, ["a", "b"]).collect()}
-    a = got["a"]
-    assert a["n_rows"] == 4 and a["n_nulls"] == 1 and a["n_distinct"] == 2
-    assert a["min_value"] == 1.0 and a["max_value"] == 2.0
-    assert a["mean_value"] == round((1 + 2 + 2) / 3, 4)
-    b = got["b"]
-    assert b["n_nulls"] == 1 and b["n_distinct"] == 2
-    assert b["mean_value"] == round(40 / 3, 4)
-
-
-def test_ri_scorecard_counts_orphans_exactly(spark):
-    from otlp_cardinality_checker_spark.operators.quality import ri_scorecard
-
-    fact = spark.createDataFrame(
-        [(1, 10), (2, 10), (3, 20), (4, 99), (5, 99), (6, None)],
-        "row_id long, fk long",
-    )
-    dim = spark.createDataFrame([(10,), (20,)], "pk long")
-    got = {r["edge"]: r for r in
-           ri_scorecard({"fact.fk": (fact, "fk", dim, "pk")}).collect()}
-    e = got["fact.fk"]
-    assert e["n_rows"] == 5                      # NULL fk excluded
-    assert e["n_orphans"] == 2
-    assert e["n_distinct_orphan_keys"] == 1      # both orphans are key 99
-    assert e["orphan_share"] == 0.4
-
-
 def test_string_profile_hand_case(spark):
     from otlp_cardinality_checker_spark.operators.profile import (
         string_profile,

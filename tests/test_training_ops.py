@@ -4,6 +4,8 @@ containment, and the key-skew audit."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pyspark.sql.functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -58,6 +60,102 @@ def test_sample_stats_rate_within_band(spark):
     assert abs(got["en"]["realized_rate"] - 0.5) < 0.25
     for lang, row in got.items():
         assert 0 <= row["n_sampled"] <= row["n_total"]
+
+
+def _py_pps_keep(doc_id: int, w: int, k: int, w_total: int,
+                 salt: str = "") -> bool:
+    t = min(1 << 32, (k * w * (1 << 32)) // w_total)
+    if t >= 1 << 32:
+        return True
+    u = hashlib.md5(f"{doc_id}{salt}".encode()).hexdigest()[:8]
+    return u < format(t, "08x")
+
+
+def test_pps_membership_matches_python_oracle(spark):
+    """Exact sample membership (id-sum + count per stratum) equals an
+    independent Python recomputation of the integer thresholds."""
+    from otlp_cardinality_checker_spark.operators.sampling import (
+        pps_sample_stats,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    rows = docs.select("doc_id", "lang", "n_chars").collect()
+    w_total = sum(r["n_chars"] for r in rows)
+    want: dict[str, tuple[int, int]] = {}
+    for r in rows:
+        kept = _py_pps_keep(r["doc_id"], r["n_chars"], 25, w_total)
+        n, s = want.get(r["lang"], (0, 0))
+        want[r["lang"]] = (n + kept, s + kept * r["doc_id"])
+    got = {
+        r["lang"]: (r["n_sampled"], r["sampled_id_sum"])
+        for r in pps_sample_stats(docs, 25).collect()
+    }
+    assert got == want
+    # deterministic under arbitrary repartitioning
+    got2 = {
+        r["lang"]: (r["n_sampled"], r["sampled_id_sum"])
+        for r in pps_sample_stats(docs.repartition(13), 25).collect()
+    }
+    assert got2 == want
+
+
+def test_pps_cap_keeps_everything(spark):
+    """k >= W/min(w) drives every threshold to the cap: the sample is the
+    full table and expected_n == n_total exactly."""
+    from otlp_cardinality_checker_spark.operators.sampling import (
+        pps_sample_stats,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    out = pps_sample_stats(docs, 10**6).collect()
+    assert all(r["n_sampled"] == r["n_total"] for r in out)
+    assert all(float(r["expected_n"]) == r["n_total"] for r in out)
+
+
+def test_pps_salt_redraws_weighting_holds(spark):
+    """Different salts give different (independent) samples; heavier docs
+    are kept at a higher realized rate than lighter ones under the same
+    draw (the PPS property, on the pooled corpus)."""
+    from otlp_cardinality_checker_spark.operators.sampling import (
+        pps_keep_expr,
+    )
+
+    docs = (
+        spark.read.parquet(f"{SF}/documents.parquet")
+        .crossJoin(
+            F.broadcast(
+                spark.read.parquet(f"{SF}/documents.parquet").agg(
+                    F.sum(F.col("n_chars").cast("long")).alias("w_total")
+                )
+            )
+        )
+        .withColumn("med", F.expr("percentile_approx(n_chars, 0.5) over ()"))
+    )
+    k = 60
+    a = {
+        r["doc_id"]
+        for r in docs.where(
+            pps_keep_expr(k, "n_chars", "doc_id", salt="a")
+        ).collect()
+    }
+    b = {
+        r["doc_id"]
+        for r in docs.where(
+            pps_keep_expr(k, "n_chars", "doc_id", salt="b")
+        ).collect()
+    }
+    assert a and b and a != b
+    heavy = docs.where(F.col("n_chars") >= F.col("med"))
+    light = docs.where(F.col("n_chars") < F.col("med"))
+    rate_heavy = (
+        heavy.where(pps_keep_expr(k, "n_chars", "doc_id")).count()
+        / heavy.count()
+    )
+    rate_light = (
+        light.where(pps_keep_expr(k, "n_chars", "doc_id")).count()
+        / light.count()
+    )
+    assert rate_heavy > rate_light
 
 
 # ---------------------------------------------------------------------------
@@ -962,30 +1060,6 @@ def test_psi_drift_smoothing_closed_form(spark):
     assert r["psi"] == 0.0
 
 
-def test_k_anonymity_crafted(spark):
-    """Class sizes 1,1,2,5 -> histogram rows with correct risk split."""
-    import pytest as _pytest
-
-    from otlp_cardinality_checker_spark.operators.pii import k_anonymity
-
-    rows = (
-        [("us", "A")] * 5 + [("us", "B")] * 2 + [("de", "A")] + [("fr", "C")]
-    )
-    df = spark.createDataFrame(rows, ["country", "segment"])
-    got = {
-        r["k"]: r
-        for r in k_anonymity(df, ["country", "segment"], k_threshold=5)
-        .collect()
-    }
-    assert got[1]["n_classes"] == 2 and got[1]["n_rows"] == 2
-    assert got[2]["n_classes"] == 1 and got[2]["n_rows"] == 2
-    assert got[5]["n_classes"] == 1 and got[5]["n_rows"] == 5
-    assert got[1]["at_risk"] and got[2]["at_risk"] and not got[5]["at_risk"]
-    assert abs(got[5]["row_share"] - 5 / 9) < 1e-6
-    with _pytest.raises(ValueError):
-        k_anonymity(df, [])
-
-
 def test_data_budget_membership_and_flags(spark):
     """Small source oversampled (kept whole), big source downsampled with
     the exact md5-threshold membership, recomputed independently here."""
@@ -1183,31 +1257,6 @@ def test_length_buckets_padding_accounting(spark):
     assert abs(got[32]["waste_share"] - (22 + 32) / 64) < 1e-9
     with _pytest.raises(ValueError):
         length_buckets(docs, boundaries=())
-
-
-def test_l_diversity_homogeneity_detection(spark):
-    """A large-but-homogeneous class is at risk (l=1) while a small
-    diverse class is not; counts are (k, l)-histogram exact."""
-    import pytest as _pytest
-
-    from otlp_cardinality_checker_spark.operators.pii import l_diversity
-
-    rows = (
-        [(1, "qa", "cancer")] * 5          # k=5, l=1 -> homogeneous, at risk
-        + [(2, "qb", "flu"), (2, "qb", "cold")]  # k=2, l=2 -> fine
-        + [(3, "qc", "flu")]               # k=1, l=1 -> at risk
-    )
-    df = spark.createDataFrame(rows, "qi1 long, qi2 string, dx string")
-    got = {(r["k"], r["l"]): r for r in l_diversity(df, ["qi1", "qi2"], "dx").collect()}
-    assert set(got) == {(5, 1), (2, 2), (1, 1)}
-    assert got[(5, 1)]["at_risk"] and got[(1, 1)]["at_risk"]
-    assert not got[(2, 2)]["at_risk"]
-    assert got[(5, 1)]["n_rows"] == 5
-    assert abs(got[(2, 2)]["row_share"] - 0.25) < 1e-9
-    with _pytest.raises(ValueError):
-        l_diversity(df, [], "dx")
-    with _pytest.raises(ValueError):
-        l_diversity(df, ["qi1"], "dx", l_threshold=0)
 
 
 def test_chi2_drift_closed_form(spark):
@@ -1413,24 +1462,6 @@ def test_neyman_allocation_favors_high_variance_strata(spark):
     assert abs(got["quiet"]["stddev"] - round(float(q.std()), 6)) <= 1e-6
     assert got["noisy"]["n_alloc"] == 10 * got["quiet"]["n_alloc"]
     assert got["noisy"]["n_alloc"] + got["quiet"]["n_alloc"] == 110
-
-
-def test_purge_audit_counts_and_caps(spark):
-    from otlp_cardinality_checker_spark.operators.quality import purge_audit
-
-    ev = spark.createDataFrame(
-        [(i, i % 5) for i in range(50)], "event_id long, user_id long"
-    )
-    other = spark.createDataFrame(
-        [(i, 99) for i in range(10)], "row_id long, owner long"
-    )
-    subjects = spark.createDataFrame([(0,), (3,)], "subject_id long")
-    got = {r["table"]: r for r in purge_audit(
-        {"ev": (ev, "user_id"), "other": (other, "owner")}, subjects
-    ).collect()}
-    assert got["ev"]["n_purged"] == 20 and got["ev"]["n_subjects_hit"] == 2
-    assert got["ev"]["purge_share"] == 0.4
-    assert got["other"]["n_purged"] == 0 and got["other"]["n_subjects_hit"] == 0
 
 
 def test_weighted_sample_is_deterministic_exactly_k_and_weight_biased(spark):
