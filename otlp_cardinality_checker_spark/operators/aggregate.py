@@ -398,13 +398,15 @@ def watched_values(
     )
     # materialized once: `totals` needs no `count`, so pruning gives its
     # branch a different aggregate than the top-k branch and the explode
-    # plus (key, value) shuffle would otherwise run twice (no reuse)
+    # plus (key, value) shuffle would otherwise run twice (no reuse).
+    # Eagerly, so both branches of the caller's action read cached blocks
+    # instead of both computing the same checkpoint partition at once.
     freq = (
         exploded_attrs(routed)
         .where(key_filter)
         .groupBy("key", "value")
         .agg(F.count(F.lit(1)).alias("count"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     # Two-stage top-k (salted_top_k): a single window over `key` would sort
     # EVERY distinct value of a watched key on one reducer (one hot

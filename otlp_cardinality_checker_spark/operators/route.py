@@ -58,8 +58,11 @@ def write_sink_partitions(
     files carry the tool columns as nulls; select ``SINK_COLUMNS[name]``
     to read a sink in its own shape. ``repartition(n_parts, conv_id)``
     co-locates a conversation in one task, which writes one file per sink
-    it holds rows of; pass ``n_parts=None`` when the input is already
-    conv_id-clustered. A sink without rows gets no directory.
+    it holds rows of. ``n_parts=None`` writes ``routed`` in its own
+    partitioning, with no shuffle; a conversation is then in one file
+    per sink only where the input already keeps it in one partition, as
+    a stream micro-batch does while its one source file is one split
+    (``stream._process_batch``). A sink without rows gets no directory.
 
     Returns {sink_name: directory}.
     """

@@ -8,11 +8,12 @@ snapshot/restore (`SURVEY.md §2.10`); the Spark-native equivalent is:
   cluster),
 * the SAME stage functions as the batch plan (parse/enrich/route are pure
   DataFrame transforms, so batch and streaming share one implementation),
-* ``foreachBatch`` making two writes per micro-batch (:func:`_process_batch`):
-  one routed write partitioned by sink, then a mergeable aggregate
-  partial. Each overwrites the micro-batch's own ``_batch_id=<n>``
-  directory (:func:`_write_batch`), the replay contract every stream in
-  this module relies on,
+  built once on the streaming frame (:func:`run_stream`),
+* ``foreachBatch`` making two writes per micro-batch, one Spark job each
+  (:func:`_process_batch`): one routed write partitioned by sink, then a
+  mergeable aggregate partial. Each overwrites the micro-batch's own
+  ``_batch_id=<n>`` directory (:func:`_write_batch`), the replay contract
+  every stream in this module relies on,
 * a **lineage table**: one row per (batch_id, sink) with routed-row counts
   and wall time — the per-partition/micro-stage metrics the north rule asks
   for.
@@ -137,15 +138,10 @@ def _foreach_batch(
     return len(done)
 
 
-def _process_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    role_dim: DataFrame,
-    tool_dim: DataFrame,
-    out_dir: str,
-) -> None:
-    """Route one micro-batch into ``sinks/_batch_id=<n>/sink=<name>/``,
-    then write its aggregate-state snapshot and its lineage file.
+def _process_batch(routed: DataFrame, batch_id: int, out_dir: str) -> None:
+    """Write one routed micro-batch into
+    ``sinks/_batch_id=<n>/sink=<name>/``, then its aggregate-state
+    snapshot and its lineage file.
 
     The two writes run one after the other over the persisted routed
     frame: the first fills the cache, and two concurrent first actions
@@ -153,39 +149,38 @@ def _process_batch(
     sink files do not store, so the cache stays. Both writes replace only
     this batch's ``_batch_id=<n>`` directory (see :func:`_write_batch`).
 
-    A warm micro-batch runs 6 Spark jobs: the two dim broadcasts, the
-    cache fill, the ``conv_id`` shuffle and the sink write, then the
-    snapshot as one job. The snapshot folds ``routed.coalesce(1)``, which
-    needs no exchange; the parse stays parallel, since the sink write has
-    already filled the cache. A micro-batch is one source file
-    (``maxFilesPerTrigger=1``), so while that file is one split (at most
+    A warm micro-batch runs 2 Spark jobs: the sink write, which fills the
+    cache as it goes, then the snapshot. Neither has an exchange: the
+    dims are lookup maps built once per stream (:func:`run_stream`), the
+    sink write keeps the batch's own partitioning, and the snapshot folds
+    ``routed.coalesce(1)``. A micro-batch is one source file
+    (``maxFilesPerTrigger=1``); while that file is one split (at most
     ``spark.sql.files.maxPartitionBytes``, 16m in ``session.py``),
-    ``routed`` is one partition anyway and the snapshot loses no
-    parallelism.
+    ``routed`` is one partition, so the snapshot loses no parallelism and
+    a conversation's rows of a sink land in one file with no shuffle (the
+    ``conv_id``-clustered source, :func:`_ensure_stream_source`, keeps a
+    conversation in one micro-batch).
 
     Lineage rows, in ``SINKS`` order, come from the sink files' footers:
-    each of the ``n_partitions`` conv_id partitions writes one file per
-    sink it has rows for, so a starved partition is a missing file and
-    sets the sink's ``min_partition_rows`` to 0. ``wall_sec`` ends with
-    the sink write.
+    each of the write's ``n_partitions`` tasks (the batch's partition
+    count) writes one file per sink it has rows for, so a starved task is
+    a missing file and sets the sink's ``min_partition_rows`` to 0.
+    ``wall_sec`` ends with the sink write.
     """
     import pyarrow.parquet as pq
 
     from ..operators.sessions import snapshot_key_stats
 
     t0 = time.time()
-    routed = route_turns(
-        enrich_turns(parse_turns(batch_df), role_dim, tool_dim)
-    )
     routed.persist()
     try:
-        n_parts = 4
         sink_dirs = write_sink_partitions(
             routed,
             str(Path(out_dir) / "sinks" / f"_batch_id={batch_id}"),
-            n_parts,
+            n_parts=None,
         )
         wall_sec = round(time.time() - t0, 3)
+        n_parts = routed.rdd.getNumPartitions()
         lineage_rows = []
         for sink, sink_dir in sink_dirs.items():
             sizes = [
@@ -228,24 +223,27 @@ def run_stream(
 ) -> int:
     """Run the streaming pipeline until the source is drained (or until
     `stop_after_batches` micro-batches, to simulate a kill). Returns the
-    number of micro-batches executed in this invocation."""
+    number of micro-batches executed in this invocation.
+
+    parse -> enrich -> route is built once, on the streaming frame, so the
+    dims are read once per call and each micro-batch reaches
+    :func:`_process_batch` routed."""
     transcripts, src_dir = _stream_paths(sf_dir)
     _ensure_stream_source(spark, transcripts, src_dir)
-    role_dim, tool_dim = load_dims(spark, sf_dir)
-    role_dim = role_dim.cache()
-    tool_dim = tool_dim.cache()
+    routed = route_turns(
+        enrich_turns(
+            parse_turns(_source(spark, TRANSCRIPT_EVENT_SCHEMA, src_dir)),
+            *load_dims(spark, sf_dir),
+        )
+    )
 
     done: list[int] = []
 
     def on_batch(df: DataFrame, batch_id: int) -> None:
-        _process_batch(df, batch_id, role_dim, tool_dim, out_dir)
+        _process_batch(df, batch_id, out_dir)
         done.append(batch_id)
 
-    source = _source(spark, TRANSCRIPT_EVENT_SCHEMA, src_dir)
-    query = _start(
-        source.writeStream.foreachBatch(on_batch),
-        checkpoint_dir,
-    )
+    query = _start(routed.writeStream.foreachBatch(on_batch), checkpoint_dir)
     try:
         _drain(
             query,
@@ -298,7 +296,10 @@ def _stream_paths(sf_dir: str) -> tuple[str, str]:
 def _ensure_stream_source(
     spark: SparkSession, transcripts: str, src_dir: str
 ) -> None:
-    """Split the transcripts into multiple files => micro-batches."""
+    """Split the transcripts into 4 ``conv_id``-clustered files, one
+    micro-batch each, so a conversation is in one micro-batch; while each
+    file is one split, :func:`_process_batch` writes its rows of a sink
+    into one file without a shuffle."""
     if (Path(src_dir) / "_SUCCESS").exists():
         return
     df = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(transcripts)

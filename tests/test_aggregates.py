@@ -285,6 +285,24 @@ def test_grouping_sets_key_stats_and_catalog(tiny_routed):
     assert "Generate explode" not in _final_plan(report)
 
 
+def _assert_checkpoint_cached(spark, df) -> None:
+    """Every partition of the one checkpoint RDD that ``df`` reads is
+    already cached, before any action on ``df``."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    [rdd_id] = {
+        leaf.rdd().id()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.nodeName() == "LogicalRDD"
+    }
+    cached = {
+        info.id(): (info.numCachedPartitions(), info.numPartitions())
+        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    }
+    assert rdd_id in cached, "checkpoint not materialized on return"
+    n_cached, n_partitions = cached[rdd_id]
+    assert n_cached == n_partitions > 0
+
+
 def test_key_stats_and_catalog_checkpoint_is_eager(spark, tiny_routed):
     """When key_stats_and_catalog returns, before any action, every
     partition of its grouping-sets checkpoint is already cached. A lazy
@@ -296,19 +314,18 @@ def test_key_stats_and_catalog_checkpoint_is_eager(spark, tiny_routed):
     )
 
     _, catalog = key_stats_and_catalog(tiny_routed)
-    leaves = catalog._jdf.queryExecution().analyzed().collectLeaves()
-    [rdd_id] = [
-        leaf.rdd().id()
-        for leaf in (leaves.apply(i) for i in range(leaves.size()))
-        if leaf.nodeName() == "LogicalRDD"
-    ]
-    cached = {
-        info.id(): (info.numCachedPartitions(), info.numPartitions())
-        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    }
-    assert rdd_id in cached, "checkpoint not materialized on return"
-    n_cached, n_partitions = cached[rdd_id]
-    assert n_cached == n_partitions > 0
+    _assert_checkpoint_cached(spark, catalog)
+
+
+def test_watched_values_checkpoint_is_eager(spark, tiny_routed):
+    """watched_values' top-k and totals branches read one (key, value)
+    frequency checkpoint in one action; it is fully cached when the
+    function returns, so the two branches never compute it at once."""
+    from otlp_cardinality_checker_spark.operators.aggregate import (
+        watched_values,
+    )
+
+    _assert_checkpoint_cached(spark, watched_values(tiny_routed))
 
 
 def test_attr_frequencies_explode_once(tiny_routed, tmp_path):

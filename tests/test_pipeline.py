@@ -157,6 +157,109 @@ def test_missing_dim_row_null_semantics(tiny_routed):
     )
 
 
+def _join_enrich(parsed, role_dim, tool_dim):
+    """The reference enrich: broadcast left joins on ``role`` then
+    ``tool``, then severity/service resolution."""
+    return (
+        parsed.join(F.broadcast(role_dim), on="role", how="left")
+        .join(F.broadcast(tool_dim), on="tool", how="left")
+        .withColumn(
+            "severity",
+            F.when(
+                F.col("severity_inferred") == "UNSET",
+                F.coalesce(F.col("severity_default"), F.lit("UNSET")),
+            ).otherwise(F.col("severity_inferred")),
+        )
+        .withColumn(
+            "service", F.coalesce(F.col("role_class"), F.lit("unknown_service"))
+        )
+        .drop("severity_default")
+    )
+
+
+@pytest.fixture(scope="module")
+def enrich_inputs(spark, tiny_frames):
+    """Parsed tiny turns with one unknown tool (the others are null or
+    known), and dims without ``system`` plus a null-key row each."""
+    from otlp_cardinality_checker_spark.datagen import role_dim, tool_dim
+    from otlp_cardinality_checker_spark.operators.parse import parse_turns
+    from otlp_cardinality_checker_spark.sources.transcripts import (
+        ROLE_DIM_SCHEMA,
+        TOOL_DIM_SCHEMA,
+    )
+
+    transcripts = tiny_frames[0].copy()
+    first_tool = transcripts.index[transcripts["tool"].notna()][0]
+    transcripts.loc[first_tool, "tool"] = "tool_unknown"
+    parsed = parse_turns(spark.createDataFrame(transcripts))
+    rd = spark.createDataFrame(role_dim(include_system=False), ROLE_DIM_SCHEMA)
+    td = spark.createDataFrame(tool_dim(), TOOL_DIM_SCHEMA)
+    rd = rd.union(spark.createDataFrame([(None, "ghost", "ERROR")], ROLE_DIM_SCHEMA))
+    td = td.union(spark.createDataFrame([(None, "family_x", True)], TOOL_DIM_SCHEMA))
+    return parsed, rd, td
+
+
+def _assert_same_frame(got, want):
+    assert got.schema == want.schema  # names, order, types, nullability
+
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: (r["conv_id"], r["turn_idx"]))
+
+    assert rows(got) == rows(want)
+
+
+def test_enrich_lookups_equal_left_joins(enrich_inputs):
+    """The lookup-map enrich gives the left joins' frame: a missing role,
+    a null tool, an unknown tool and null-key dim rows all resolve as
+    the joins resolve them."""
+    from otlp_cardinality_checker_spark.operators.enrich import enrich_turns
+
+    parsed, rd, td = enrich_inputs
+    got = enrich_turns(parsed, rd, td)
+    _assert_same_frame(got, _join_enrich(parsed, rd, td))
+    unknown = got.where(F.col("tool") == "tool_unknown").collect()
+    assert len(unknown) == 1
+    assert unknown[0]["tool_family"] is None
+    assert unknown[0]["is_privileged"] is None
+
+
+def test_enrich_empty_dims_give_typed_nulls(enrich_inputs):
+    from otlp_cardinality_checker_spark.operators.enrich import enrich_turns
+
+    parsed, rd, td = enrich_inputs
+    rd, td = rd.limit(0), td.limit(0)
+    _assert_same_frame(enrich_turns(parsed, rd, td), _join_enrich(parsed, rd, td))
+
+
+def test_enrich_duplicate_dim_key_raises(enrich_inputs):
+    """A join would fan the matching turns out; the lookup refuses."""
+    from otlp_cardinality_checker_spark.operators.enrich import enrich_turns
+
+    parsed, rd, td = enrich_inputs
+    with pytest.raises(ValueError, match="tool"):
+        enrich_turns(parsed, rd, td.union(td.where(F.col("tool") == "tool_3")))
+
+
+def test_enrich_reads_each_dim_once(spark, count_jobs, enrich_inputs, tmp_path):
+    """Building the enrich frame runs exactly 2 Spark jobs, the two dim
+    reads, and the frame's plan reads neither dim again."""
+    from otlp_cardinality_checker_spark.operators.enrich import enrich_turns
+    from otlp_cardinality_checker_spark.sources.transcripts import (
+        ROLE_DIM_SCHEMA,
+        TOOL_DIM_SCHEMA,
+    )
+
+    parsed, rd, td = enrich_inputs
+    rd.write.parquet(str(tmp_path / "role_dim"))
+    td.write.parquet(str(tmp_path / "tool_dim"))
+    rd = spark.read.schema(ROLE_DIM_SCHEMA).parquet(str(tmp_path / "role_dim"))
+    td = spark.read.schema(TOOL_DIM_SCHEMA).parquet(str(tmp_path / "tool_dim"))
+    enriched, jobs = count_jobs(lambda: enrich_turns(parsed, rd, td))
+    assert jobs == 2
+    plan = enriched._jdf.queryExecution().optimizedPlan().toString()
+    assert "role_dim" not in plan and "tool_dim" not in plan
+
+
 def test_per_turn_text_equality_roundtrip(spark, tiny_routed, tmp_path):
     """FIXTURES.md §4: sinks read back ordered == original text bytes."""
     from otlp_cardinality_checker_spark.operators.route import write_sinks

@@ -1,9 +1,9 @@
 """Physical-plan quality gates.
 
 These pin the scale-critical plan properties so regressions fail loudly:
-the enrich joins must broadcast (no fact-side shuffle), the parse stage
-must stay JVM-side (no Python eval nodes), and projections must
-prune columns down to the parquet scan.
+parse -> enrich -> route must be a plain projection of the scan (no join,
+no fact-side shuffle), the parse stage must stay JVM-side (no Python eval
+nodes), and projections must prune columns down to the parquet scan.
 """
 
 from __future__ import annotations
@@ -21,11 +21,37 @@ def plan_of(df, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
-def test_enrich_uses_broadcast_joins(tiny_routed):
-    plan = plan_of(tiny_routed)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "Exchange hashpartitioning" not in plan  # no fact-side shuffle
+def _node_names(plan: str) -> list[str]:
+    """The operator name of every node of a "simple" mode plan."""
+    return [
+        line.lstrip(" :+-|*").split(" ")[0].split("(")[0]
+        for line in plan.splitlines()
+        if line.strip() and not line.startswith("==")
+    ]
+
+
+def test_enrich_route_has_no_join_or_exchange(spark, tiny_frames, tmp_path):
+    """Over parquet-backed turns and dims, the routed frame's plan has no
+    join node of any kind and no exchange: the dims are lookup maps, so
+    the fact side is never shuffled or joined."""
+    from otlp_cardinality_checker_spark.datagen import role_dim, tool_dim
+    from otlp_cardinality_checker_spark.operators.enrich import enrich_turns
+    from otlp_cardinality_checker_spark.operators.parse import parse_turns
+    from otlp_cardinality_checker_spark.operators.route import route_turns
+
+    transcripts, _, _ = tiny_frames
+    paths = []
+    for name, df in (
+        ("turns", transcripts), ("role_dim", role_dim()), ("tool_dim", tool_dim())
+    ):
+        paths.append(str(tmp_path / name))
+        spark.createDataFrame(df).write.parquet(paths[-1])
+    turns, rd, td = (spark.read.parquet(p) for p in paths)
+    nodes = _node_names(
+        plan_of(route_turns(enrich_turns(parse_turns(turns), rd, td)), "simple")
+    )
+    assert any(n == "FileScan" for n in nodes), nodes
+    assert not [n for n in nodes if n.endswith("Join") or "Exchange" in n], nodes
 
 
 def test_sql_parse_engine_has_no_python(tiny_routed):
@@ -118,7 +144,7 @@ def test_topk_windows_are_two_stage(tiny_routed):
 
 def test_fused_diff_scans_once(tiny_routed):
     """diff_from_predicate must read/parse the corpus ONCE: a single
-    data FileScan (the dims broadcast), no sort-merge join, and the
+    data FileScan, no sort-merge join, and the
     three-stage bounded aggregation chain — not the two-pass diff's
     doubled parse subtree."""
     from otlp_cardinality_checker_spark.operators.sessions import (

@@ -10,6 +10,7 @@ import os
 import time
 
 import pandas as pd
+import pyspark.sql.functions as F
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -307,6 +308,28 @@ def test_dedup_stream_incremental_resume(spark, tmp_path):
         for r in spark.read.parquet(f"{out}/decisions").collect()
     }
     assert got == {1: 1, 2: 0, 3: 1, 4: 1, 5: 0, 6: 0, 7: 1}
+
+
+def test_stream_sinks_keep_a_conversation_in_one_file(spark, tmp_path):
+    """In each micro-batch, a conversation's rows of a sink are in one
+    file. The micro-batch is written in its own partitioning, with no
+    ``conv_id`` shuffle: each staged source file is one split, so one
+    task writes each sink, and the lineage records that one task."""
+    from otlp_cardinality_checker_spark.streaming.stream import (
+        read_lineage,
+        run_stream,
+    )
+
+    out = tmp_path / "out"
+    assert run_stream(spark, SF, str(out), str(tmp_path / "ckpt")) >= 2
+    files = (
+        spark.read.parquet(str(out / "sinks"))
+        .groupBy("_batch_id", "sink", "conv_id")
+        .agg(F.countDistinct("_metadata.file_path").alias("n_files"))
+    )
+    assert files.count() > 0
+    assert files.where(F.col("n_files") != 1).count() == 0
+    assert {r["n_partitions"] for r in read_lineage(str(out))} == {1}
 
 
 def test_stream_progress_metrics_persisted(spark, tmp_path):
